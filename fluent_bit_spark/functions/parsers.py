@@ -165,19 +165,24 @@ def _map_last_wins(entries: Column) -> Column:
     mapKeyDedupPolicy is EXCEPTION, so one log line repeating a key
     ('a=1 a=2' — routine in real logfmt/LTSV) would otherwise abort the
     whole job with DUPLICATED_MAP_KEY. The reference keeps the last
-    value (its rbtree insert overwrites). Quadratic in pairs-per-LINE
-    only (a handful), not in rows."""
-    dedup = F.filter(
+    value (its rbtree insert overwrites), and keys come out ordered by
+    their last occurrence.
+
+    One left fold: each pair drops its key from the map built so far and
+    is appended at the end. ``entries`` must appear exactly once in the
+    expression: a lambda cannot share a subexpression with the code
+    around it, so every extra mention of ``entries`` re-runs the whole
+    tokenizer (both regexp_extract_all scans for logfmt) per row. The
+    cost is one tokenizer pass per line plus O(n^2) key compares for n
+    pairs in that line."""
+    return F.aggregate(
         entries,
-        lambda e, i: ~F.exists(
-            F.slice(
-                entries, i + 2,
-                F.greatest(F.size(entries) - i - 1, F.lit(0)),
-            ),
-            lambda e2: e2["k"] == e["k"],
+        F.create_map().cast("map<string,string>"),
+        lambda acc, e: F.map_concat(
+            F.map_filter(acc, lambda k, _: k != e["k"]),
+            F.create_map(e["k"], e["v"]),
         ),
     )
-    return F.map_from_entries(dedup)
 
 
 class LtsvParser:

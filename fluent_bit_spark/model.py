@@ -21,6 +21,7 @@ whole-stage codegen instead of forcing a variant interpreter per row.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -43,15 +44,16 @@ TESTDATA_TABLES = (
 )
 
 
-# sessions already configured by ensure_session_conf (id(spark) keys a
-# live session object; a replaced session gets a fresh id and re-runs)
-_CONF_DONE: set[int] = set()
+# sessions already configured by ensure_session_conf. Weakly keyed on the
+# session object, not its id(): a later session can be allocated at a
+# freed session's address and would then skip its conf
+_CONF_DONE: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def ensure_session_conf(spark: SparkSession) -> None:
     """Make a caller-provided session safe for the testdata + oracle gate:
     ns-parquet handling, UTC timezone, AQE. All runtime-settable."""
-    if id(spark) in _CONF_DONE:
+    if spark in _CONF_DONE:
         return
     for k, v in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
@@ -63,7 +65,7 @@ def ensure_session_conf(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:
             pass
-    _CONF_DONE.add(id(spark))
+    _CONF_DONE.add(spark)
 
 
 # inferred parquet schema per (session, absolute file path): schema
@@ -72,8 +74,11 @@ def ensure_session_conf(spark: SparkSession) -> None:
 # every query pays it per table it loads. The testdata files are
 # immutable for a driver run, so the schema — metadata, never row data —
 # is cached for the session's lifetime, exactly like Spark's own
-# file-listing cache.
-_SCHEMA_CACHE: dict[tuple[int, str], T.StructType] = {}
+# file-listing cache. Weakly keyed on the session (see _CONF_DONE), so
+# the entries die with it.
+_SCHEMA_CACHE: weakref.WeakKeyDictionary[SparkSession, dict[str, T.StructType]] = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -86,11 +91,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (id(spark), os.path.abspath(path))
-    cached = _SCHEMA_CACHE.get(key)
+    schemas = _SCHEMA_CACHE.setdefault(spark, {})
+    key = os.path.abspath(path)
+    cached = schemas.get(key)
     if cached is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        schemas[key] = df.schema
     else:
         df = spark.read.schema(cached).parquet(path)
     for f_ in df.schema.fields:

@@ -14,8 +14,11 @@ outputs  -> sinks.write_file per matching route (match supports fluent-bit
 
 Filters honor `match` exactly like flb_router_match: a filter applies only
 to records whose tag matches its pattern; non-matching records pass through
-unchanged (implemented as a when()-guarded union-free split-apply-merge
-where the operator allows it, else filter/union).
+unchanged. ``_apply_filter`` always splits the stream into two filters on
+the tag, applies the operator to the matching side and unions the other
+side back. A ``*`` match skips the union. On a batch input the union is
+also skipped when the non-matching side is empty, which costs one eager
+``isEmpty()`` job per filter at load time.
 """
 
 from __future__ import annotations

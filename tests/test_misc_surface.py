@@ -138,3 +138,115 @@ def test_profile_columns_single_pass(spark):
     import re
     n_aggs = len(re.findall(r"HashAggregate|SortAggregate|ObjectHashAggregate", plan))
     assert n_aggs <= 4, plan[:1500]
+
+
+_RESTART_SCRIPT = r"""
+import gc, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from fluent_bit_spark.model import load_table
+
+d = sys.argv[2]
+conf = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def session():
+    return (
+        SparkSession.builder.master("local[1]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.shuffle.partitions", "1")
+        .getOrCreate()
+    )
+
+
+spark = session()
+spark.createDataFrame([(1,)], "a int").write.parquet(d + "/t.parquet")
+assert load_table(spark, d, "t").columns == ["a"]
+assert spark.conf.get(conf) == "true"
+spark.stop()
+del spark
+gc.collect()
+
+spark = session()
+assert spark.conf.get(conf) == "false"
+spark.createDataFrame([("x",)], "b string").write.mode("overwrite").parquet(d + "/t.parquet")
+df = load_table(spark, d, "t")
+assert spark.conf.get(conf) == "true", "conf not applied to the new session"
+assert df.columns == ["b"], ("stale schema from the stopped session", df.columns)
+assert df.collect()[0].b == "x"
+spark.stop()
+"""
+
+
+def test_session_caches_do_not_outlive_a_stopped_session(tmp_path):
+    """ensure_session_conf and the parquet schema cache are keyed on the
+    live session: a session started after another was stopped gets its
+    conf applied again and reads the file's schema again. Runs in a child
+    process so the suite's shared session stays up."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, repo, str(tmp_path)],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+class _StubReader:
+    """spark.read stand-in: records schema inference per parquet read."""
+
+    def __init__(self, schema):
+        self.file_schema = schema
+        self.inferred = 0
+        self.given = None
+
+    def schema(self, s):
+        self.given = s
+        return self
+
+    def parquet(self, path):
+        from types import SimpleNamespace
+
+        if self.given is None:
+            self.inferred += 1
+        return SimpleNamespace(schema=self.given or self.file_schema)
+
+
+class _StubSession:
+    def __init__(self, schema):
+        self.set_keys = []
+        self.read = _StubReader(schema)
+
+    @property
+    def conf(self):
+        from types import SimpleNamespace
+
+        return SimpleNamespace(set=lambda k, v: self.set_keys.append(k))
+
+
+def test_session_caches_survive_address_reuse():
+    """The id() hazard itself: a new session object allocated at a dead
+    session's address must still get its conf set and its schema read."""
+    from pyspark.sql import types as T
+
+    from fluent_bit_spark.model import load_table
+
+    old_schema = T.StructType([T.StructField("a", T.IntegerType())])
+    new_schema = T.StructType([T.StructField("b", T.StringType())])
+    for _ in range(20):
+        old = _StubSession(old_schema)
+        assert load_table(old, "/nowhere", "t").schema == old_schema
+        assert old.set_keys and old.read.inferred == 1
+        old_id = id(old)
+        del old
+        new = _StubSession(new_schema)
+        assert load_table(new, "/nowhere", "t").schema == new_schema
+        assert new.set_keys, "conf skipped for a new session"
+        assert new.read.inferred == 1
+        if id(new) == old_id:
+            break
+    else:
+        pytest.skip("the interpreter never reused a session address")

@@ -498,6 +498,30 @@ def test_logfmt_ltsv_duplicate_keys_last_wins(spark):
     assert out2[1].m == {"k": "v", "bare": None}
 
 
+def test_map_parsers_tokenize_each_line_once(spark):
+    """Plan-size guard: the last-wins map names its entries once, so the
+    tokenizer appears once per parse_map. A higher-order lambda cannot
+    share a subexpression with the code around it, so each extra mention
+    re-runs the scan per row (and the grep filter Catalyst pushes below
+    the parse projection copies all of them). Plans only, no job."""
+    from fluent_bit_spark.operators.grep import grep
+
+    df = spark.createDataFrame([Row(line="lvl=warn a=1")])
+
+    def analyzed(q):
+        return q._jdf.queryExecution().analyzed().toString()
+
+    logfmt = df.select(LogfmtParser().parse_map(F.col("line")).alias("m"))
+    assert analyzed(logfmt).count("regexp_extract_all(") == 2
+    ltsv = df.select(LtsvParser().parse_map(F.col("line")).alias("m"))
+    assert analyzed(ltsv).count("split(") == 1
+    q = grep(
+        parser_filter(df, "line", LogfmtParser(), fields=["lvl"]),
+        [("regex", "lvl", "warn")],
+    )
+    assert q._jdf.queryExecution().optimizedPlan().toString().count("regexp_extract_all(") <= 4
+
+
 def test_throttle_size_greedy_budget(spark):
     """r12 review fix: dropped records do NOT charge the byte budget
     (throttle_size.c only add_load()s kept records) — one oversized

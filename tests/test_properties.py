@@ -128,6 +128,119 @@ def test_ltsv_encode_parse_roundtrip(spark, records):
         assert row.m == json.loads(row.expected)
 
 
+def _last_wins(pairs):
+    """Reference map: the last value of each key, keys in order of their
+    last occurrence, as (key, value) pairs."""
+    out = {}
+    for k, v in pairs:
+        out.pop(k, None)
+        out[k] = v
+    return list(out.items())
+
+
+def _entries(rows):
+    return [None if r.e is None else [(x.key, x.value) for x in r.e] for r in rows]
+
+
+# few keys, so lines repeat them
+DUP_KEY = st.sampled_from(["a", "b", "lvl", "x.y", "k-1"])
+_PRINTABLE = st.characters(min_codepoint=32, max_codepoint=126)
+LOGFMT_PAIR = st.one_of(
+    # bare value; may hold '=' but no space, quote or backslash
+    st.tuples(
+        DUP_KEY,
+        st.text(alphabet=st.characters(blacklist_characters=' "\\', min_codepoint=33,
+                                       max_codepoint=126), max_size=6),
+        st.just(False),
+    ),
+    # quoted value: spaces, '=', quotes and backslashes, escaped
+    st.tuples(DUP_KEY, st.text(alphabet=_PRINTABLE, max_size=8), st.just(True)),
+)
+# a word with no '=' between pairs: not a pair, skipped
+LOGFMT_NOISE = st.text(alphabet="abc:-", min_size=1, max_size=4)
+
+
+def _logfmt_line(tokens):
+    parts, pairs = [], []
+    for t in tokens:
+        if isinstance(t, str):
+            parts.append(t)
+            continue
+        k, v, quoted = t
+        raw = '"' + v.replace("\\", "\\\\").replace('"', '\\"') + '"' if quoted else v
+        parts.append(f"{k}={raw}")
+        pairs.append((k, v))
+    return " ".join(parts), _last_wins(pairs)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    lines=st.lists(
+        st.one_of(
+            st.none(),
+            st.lists(st.one_of(LOGFMT_PAIR, LOGFMT_NOISE), max_size=8),
+        ),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_logfmt_parse_map_matches_last_wins_reference(spark, lines):
+    """LogfmtParser.parse_map equals a pure-Python last-wins map, key order
+    included, over duplicate keys, quoted and escaped values, empty
+    values, and empty and NULL lines."""
+    from fluent_bit_spark.functions.parsers import LogfmtParser
+
+    cases = [(None, None) if t is None else _logfmt_line(t) for t in lines]
+    df = spark.createDataFrame([(c[0],) for c in cases], "line string")
+    rows = df.select(
+        F.map_entries(LogfmtParser().parse_map(F.col("line"))).alias("e")
+    ).collect()
+    assert _entries(rows) == [c[1] for c in cases]
+
+
+def _ltsv_reference(line):
+    if line is None:
+        return None
+    pairs = []
+    for p in line.split("\t"):
+        k, sep, v = p.partition(":")
+        pairs.append((k, v if sep else None))
+    return _last_wins(pairs)
+
+
+LTSV_PAIR = st.tuples(
+    st.sampled_from(["a", "b", "host", "x.y", ""]),
+    # None = a bare pair with no ':'; values may hold further ':'
+    st.one_of(st.none(), st.text(alphabet=_PRINTABLE, max_size=6)),
+)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    lines=st.lists(
+        st.one_of(st.none(), st.lists(LTSV_PAIR, max_size=8)),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_ltsv_parse_map_matches_last_wins_reference(spark, lines):
+    """LtsvParser.parse_map equals a pure-Python last-wins map, key order
+    included, over duplicate keys, values holding ':', bare pairs, and
+    empty and NULL lines."""
+    from fluent_bit_spark.functions.parsers import LtsvParser
+
+    text = [
+        None if t is None
+        else "\t".join(k if v is None else f"{k}:{v}" for k, v in t)
+        for t in lines
+    ]
+    df = spark.createDataFrame([(t,) for t in text], "line string")
+    rows = df.select(
+        F.map_entries(LtsvParser().parse_map(F.col("line"))).alias("e")
+    ).collect()
+    assert _entries(rows) == [_ltsv_reference(t) for t in text]
+
+
 VALS = st.lists(
     st.one_of(
         st.integers(min_value=-(2**31), max_value=2**31 - 1).map(str),

@@ -28,6 +28,27 @@ SF_DIR = "/root/testdata/sf0.001"
 PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
             "FlatMapGroupsInPandas", "FlatMapGroupsInPandasWithState")
 
+# text-scanning calls whose repeats in one plan mean the same string is
+# parsed again per row (e.g. a parse lambda that names its input twice)
+_PARSE_CALL = re.compile(r"\b(?:regexp_extract_all|regexp_extract|from_json)\(")
+
+
+def dup_expr(plan: str) -> int:
+    """Most times any single parse call, with identical text, appears in
+    ``plan``. A call's text runs to its balanced closing parenthesis, or
+    to the end of its line when an unescaped regex literal unbalances it."""
+    counts: dict[str, int] = {}
+    for m in _PARSE_CALL.finditer(plan):
+        depth, end = 0, m.end() - 1
+        while end < len(plan) and plan[end] != "\n":
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            end += 1
+            if depth == 0:
+                break
+        call = plan[m.start():end]
+        counts[call] = counts.get(call, 0) + 1
+    return max(counts.values(), default=0)
+
 
 def audit_one(spark, name: str) -> dict:
     # audit what the bench times: the bare operator for names the bench
@@ -40,7 +61,9 @@ def audit_one(spark, name: str) -> dict:
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
-        plan = df._jdf.queryExecution().explainString(mode)
+        qe = df._jdf.queryExecution()
+        plan = qe.explainString(mode)
+        optimized = qe.optimizedPlan().toString()
     except Exception as ex:  # pragma: no cover - diagnostic path
         return {"query": name, "error": f"{type(ex).__name__}: {ex}"}
     return {
@@ -52,6 +75,7 @@ def audit_one(spark, name: str) -> dict:
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "cartesian": "YES" if "CartesianProduct" in plan else "-",
         "pushed": "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "-",
+        "dup_expr": dup_expr(optimized),
         "plan": plan,
     }
 
@@ -63,6 +87,8 @@ def main() -> int:
             r = audit_one(spark, name)
             print(f"===== {name}")
             print(r.get("plan", r.get("error")))
+            if "dup_expr" in r:
+                print(f"dup_expr: {r['dup_expr']}")
         return 0
 
     names = [
@@ -70,7 +96,7 @@ def main() -> int:
         if q in entry.queries() or q in bench.BENCH_FORMS
     ]
     rows = [audit_one(spark, n) for n in names]
-    hdr = f"| {'query':26s} | exch | python nodes | BHJ | SMJ | BNLJ | cartesian | pushdown |"
+    hdr = f"| {'query':26s} | exch | python nodes | BHJ | SMJ | BNLJ | cartesian | pushdown | dup_expr |"
     sep = "|" + "-" * (len(hdr) - 2) + "|"
     lines = [hdr, sep]
     for r in rows:
@@ -80,7 +106,7 @@ def main() -> int:
         lines.append(
             f"| {r['query']:26s} | {r['exchanges']:4d} | {r['python']:12s} "
             f"| {r['bhj']:3d} | {r['smj']:3d} | {r['bnlj']:4d} "
-            f"| {r['cartesian']:9s} | {r['pushed']:8s} |"
+            f"| {r['cartesian']:9s} | {r['pushed']:8s} | {r['dup_expr']:8d} |"
         )
     report = "\n".join(lines)
     print(report)
@@ -105,7 +131,12 @@ def main() -> int:
         "exchange count, Python eval nodes (Arrow-batched pandas stages are\n"
         "listed — the documented codec/UDF paths), broadcast-hash /\n"
         "sort-merge / broadcast-nested-loop join counts, cartesian products\n"
-        "(never acceptable), and whether any filter was pushed into a scan.\n\n"
+        "(never acceptable), whether any filter was pushed into a scan, and\n"
+        "dup_expr: the most times one regexp_extract_all / regexp_extract /\n"
+        "from_json call, with identical text, appears in the optimized plan\n"
+        "(above 1, the plan scans the same string more than once; whether\n"
+        "each copy runs per row depends on codegen's subexpression\n"
+        "elimination, which cannot reach into a higher-order lambda).\n\n"
         "Reading notes: BNLJ rows are the intentional model-sized broadcast\n"
         "probes (query sets, per-segment sketch tables) — the big side is\n"
         "never on both ends. dedup_minhash's static plan repeats the\n"
