@@ -8,7 +8,9 @@ reference daemon reads — src/fluent-bit.c parses -c into either loader),
 runs every output route once in batch mode, and prints the delivered
 record count per route, like the reference's out_counter. ``--dry-run``
 builds the pipeline and lists routes without executing — the config
-validation a deploy step wants.
+validation a deploy step wants. Building starts no Spark job, except to
+infer the schema of a json or csv file (an input, or a filter's lookup
+table) read without one.
 """
 
 from __future__ import annotations

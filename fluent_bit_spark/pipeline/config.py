@@ -12,17 +12,33 @@ stream_tasks -> SP-dialect statements executed in an SPContext over the
 outputs  -> sinks.write_file per matching route (match supports fluent-bit
             '*' wildcards)
 
-Filters honor `match` exactly like flb_router_match: a filter applies only
-to records whose tag matches its pattern; non-matching records pass through
-unchanged. ``_apply_filter`` always splits the stream into two filters on
-the tag, applies the operator to the matching side and unions the other
-side back. A ``*`` match skips the union. On a batch input the union is
-also skipped when the non-matching side is empty, which costs one eager
-``isEmpty()`` job per filter at load time.
+Filters honor `match` like flb_filter_do, which decides once per chunk
+whether a filter applies, because the tag belongs to the chunk. Here the
+filtered stream is a short list of branches, each labelled with the tags
+its records can carry; every input starts as its own branch, labelled
+with its literal tag. ``_route_filter`` checks each label against the
+filter's pattern in Python at build time: a branch whose tags all match
+goes into the filter, a branch with no matching tag passes untouched,
+and only a branch of mixed or unknown tags is split with ``rlike`` on the
+tag column. A label becomes unknown on an input with ``processors:`` and
+after a filter that writes the tag column (rewrite_tag, log_to_metrics,
+lua/hook, or a modify rule on ``tag``), which ``_tag_ref`` reads off the
+analyzed plan. The operator runs once on the union of the matching
+branches, so a ``*`` filter sees the whole stream. A filter that matches
+no branch is still dispatched, on an empty frame, so a bad section fails
+the build either way. Routing runs no Spark job; only reading a
+schemaless input or a lookup file does.
+
+One visible consequence: a tag-specific filter sees only the columns of
+the inputs it matches, as a fluent-bit record carries only its own keys.
+A ``modify`` ``key_exists`` condition or a ``nest`` wildcard no longer
+sees other inputs' columns as null-filled keys, and a column that the
+filters remove from every input is gone from the merged stream.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 import yaml
@@ -53,13 +69,7 @@ class Pipeline:
 
     def source(self) -> DataFrame:
         """Tagged union of all inputs (the router's merged record stream)."""
-        dfs = list(self.inputs.values())
-        if not dfs:
-            raise ValueError("pipeline has no inputs")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return _union(list(self.inputs.values()))
 
     def route(self, pattern: str, conds: list | None = None, combine: str = "AND") -> DataFrame:
         """Tag-pattern route, optionally gated by condition rules — the
@@ -470,33 +480,104 @@ class Pipeline:
                 raise ValueError(f"unknown output plugin {name!r}")
 
 
-def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
-    """One [FILTER] section applied to the records matching its tag
-    pattern; others pass through (split-apply-union, like flb_filter_do
-    running per-chunk only on matching tags)."""
-    name = fconf["name"]
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    if not dfs:
+        raise ValueError("pipeline has no inputs")
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d, allowMissingColumns=True)
+    return out
+
+
+# Java's '.' and '$' treat these as line ends, Python's re only '\n'
+_LINE_BREAKS = "\n\r\x85\u2028\u2029"
+
+# A branch is (frame, tags): the tags its records can carry, or None when
+# a filter may have rewritten the tag column.
+Branch = tuple[DataFrame, frozenset | None]
+
+
+def _tag_ref(df: DataFrame) -> str | None:
+    """The analyzed plan's tag attribute (``tag#<exprId>``). Two frames
+    report the same one only if every tag value of the second is a tag
+    value of the first; None when there is no tag column or no JVM plan."""
+    try:
+        i = df.columns.index(TAG_COL)
+        return df._jdf.queryExecution().analyzed().output().apply(i).toString()
+    except (ValueError, AttributeError):
+        return None
+
+
+def _route_filter(branches: list[Branch], fconf: dict, parsers: dict) -> list[Branch]:
+    """Route one [FILTER] like flb_filter_do does per chunk: a branch
+    whose tags all match its Match goes into the filter, a branch with no
+    matching tag passes untouched, and only a branch of mixed or unknown
+    tags is split on the tag column. The operator runs once, on the union
+    of what matched, and its output takes the place of the first branch
+    it read."""
     pattern = fconf.get("match", "*")
     regex = tag_pattern_to_regex(pattern)
-    hit = df.filter(F.col(TAG_COL).rlike(regex))
-    miss = df.filter(~F.col(TAG_COL).rlike(regex))
+    hit_rows = F.col(TAG_COL).rlike(regex)
+    hits: list[Branch] = []
+    routed: list[Branch | None] = []
+    slot = None
+
+    def take(branch: Branch) -> None:
+        nonlocal slot
+        if slot is None:
+            slot = len(routed)
+            routed.append(None)
+        hits.append(branch)
+
+    for df, tags in branches:
+        matched = None if tags is None else frozenset(t for t in tags if re.search(regex, t))
+        if tags is not None and matched == tags:
+            take((df, tags))
+        elif tags is not None and not matched:
+            routed.append((df, tags))
+        else:  # unknown or mixed tags: split on the column
+            take((df.filter(hit_rows), matched))
+            if pattern != "*":  # '*' matches every tag: no miss side
+                routed.append((df.filter(~hit_rows), tags and tags - matched))
+    if not hits:
+        # nothing to filter, but a bad section must fail as it does when
+        # it matches: dispatch on an empty frame and discard the result
+        _apply_filter(_union([df for df, _ in branches]).limit(0), fconf, parsers)
+        return branches
+    frame = _union([df for df, _ in hits])
+    out = _apply_filter(frame, fconf, parsers)
+    tags = None
+    if all(t is not None for _, t in hits):
+        ref = _tag_ref(frame)
+        if ref is not None and ref == _tag_ref(out):
+            tags = frozenset().union(*(t for _, t in hits))
+    routed[slot] = (out, tags)
+    return routed
+
+
+def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
+    """One [FILTER] section's operator over ``df``, the records its Match
+    selects (``_route_filter`` decides which)."""
+    name = fconf["name"]
+    pattern = fconf.get("match", "*")
 
     if name == "grep":
         from fluent_bit_spark.operators.grep import grep
 
         rules = [tuple(r.split(None, 2))[0:3] if isinstance(r, str) else tuple(r) for r in fconf.get("rules", [])]
         rules = [(op, key, pat) for (op, key, pat) in rules]
-        out = grep(hit, rules, fconf.get("logical_op", "legacy"))
+        out = grep(df, rules, fconf.get("logical_op", "legacy"))
     elif name == "modify":
         from fluent_bit_spark.operators.modify import Condition, modify
 
         rules = [tuple(r) for r in fconf.get("rules", [])]
         conds = [Condition(*c) for c in fconf.get("conditions", [])]
-        out = modify(hit, rules, conds or None)
+        out = modify(df, rules, conds or None)
     elif name == "record_modifier":
         from fluent_bit_spark.operators.record_modifier import record_modifier
 
         out = record_modifier(
-            hit,
+            df,
             remove_keys=fconf.get("remove_keys"),
             allowlist_keys=fconf.get("allowlist_keys"),
             records=fconf.get("records"),
@@ -507,17 +588,17 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
 
         if fconf.get("operation", "nest") == "nest":
             out = nest(
-                hit, fconf["wildcard"], fconf["nest_under"],
+                df, fconf["wildcard"], fconf["nest_under"],
                 fconf.get("remove_prefix"), fconf.get("add_prefix"),
             )
         else:
-            out = lift(hit, fconf["nested_under"], fconf.get("add_prefix"))
+            out = lift(df, fconf["nested_under"], fconf.get("add_prefix"))
     elif name == "parser":
         from fluent_bit_spark.operators.parser_filter import parser_filter
 
         p = parsers[fconf["parser"]]
         out = parser_filter(
-            hit, fconf["key_name"], p["obj"],
+            df, fconf["key_name"], p["obj"],
             reserve_data=bool(fconf.get("reserve_data", True)),
             preserve_key=bool(fconf.get("preserve_key", False)),
             fields=p.get("fields"), types=p.get("types"),
@@ -525,9 +606,9 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
     elif name == "type_converter":
         from fluent_bit_spark.typecast import type_converter
 
-        out = type_converter(hit, [tuple(r) for r in fconf["rules"]])
+        out = type_converter(df, [tuple(r) for r in fconf["rules"]])
     elif name == "throttle":
-        if hit.isStreaming:
+        if df.isStreaming:
             # the always-on form: per-key pane counters in the state
             # store, with the r10 idle-key eviction when the config sets
             # idle_timeout + watermark. Contract difference vs batch:
@@ -546,7 +627,7 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
             from fluent_bit_spark.streaming.stateful import throttle_stream
 
             out = throttle_stream(
-                hit, rate=int(fconf["rate"]),
+                df, rate=int(fconf["rate"]),
                 interval_sec=int(fconf.get("interval", 1)),
                 key=fconf.get("key", TAG_COL),
                 time_col=fconf.get("time_col", TS_COL),
@@ -560,29 +641,29 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
             from fluent_bit_spark.operators.throttle import throttle
 
             out = throttle(
-                hit, rate=int(fconf["rate"]), interval_sec=int(fconf.get("interval", 1)),
+                df, rate=int(fconf["rate"]), interval_sec=int(fconf.get("interval", 1)),
                 time_col=fconf.get("time_col", TS_COL), key=fconf.get("key"),
             )
     elif name == "rewrite_tag":
         from fluent_bit_spark.operators.rewrite_tag import rewrite_tag
 
         rules = [(r[0], r[1], r[2], str(r[3]).lower() == "true") for r in fconf["rules"]]
-        out = rewrite_tag(hit, rules)
+        out = rewrite_tag(df, rules)
     elif name == "checklist":
         from fluent_bit_spark.operators.lookup import checklist
 
-        wl = hit.sparkSession.read.option("header", "false").csv(fconf["file"]).toDF("v")
-        out = checklist(hit, wl, key=fconf["lookup_key"], list_key="v",
+        wl = df.sparkSession.read.option("header", "false").csv(fconf["file"]).toDF("v")
+        out = checklist(df, wl, key=fconf["lookup_key"], list_key="v",
                         set_values=fconf.get("records", {"matched": True}))
     elif name == "expect":
         from fluent_bit_spark.operators.expect import expect
 
-        out = expect(hit, [tuple(r) for r in fconf["rules"]], action=fconf.get("action", "result_key"))
+        out = expect(df, [tuple(r) for r in fconf["rules"]], action=fconf.get("action", "result_key"))
     elif name == "throttle_size":
         from fluent_bit_spark.operators.throttle import throttle_size
 
         out = throttle_size(
-            hit, max_bytes=int(fconf["max_bytes"]),
+            df, max_bytes=int(fconf["max_bytes"]),
             size_col_expr=F.octet_length(fconf.get("size_key", "msg")),
             interval_sec=int(fconf.get("interval", 1)),
             time_col=fconf.get("time_col", TS_COL), key=fconf.get("key"),
@@ -600,19 +681,19 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
         if custom is not None:
             table = [MLRule((r[0],), r[1], r[2]) for r in custom]
             out = multiline_rules(
-                hit, table, line_col=fconf.get("key_content", "line"),
+                df, table, line_col=fconf.get("key_content", "line"),
                 seq_col=fconf.get("seq_key", "seq"),
                 group_keys=fconf.get("group_keys"),
             )
         elif ml_ref in BUILTIN_RULES:
             out = multiline_rules(
-                hit, ml_ref, line_col=fconf.get("key_content", "line"),
+                df, ml_ref, line_col=fconf.get("key_content", "line"),
                 seq_col=fconf.get("seq_key", "seq"),
                 group_keys=fconf.get("group_keys"),
             )
         else:
             out = multiline(
-                hit, line_col=fconf.get("key_content", "line"),
+                df, line_col=fconf.get("key_content", "line"),
                 seq_col=fconf.get("seq_key", "seq"),
                 group_keys=fconf.get("group_keys"),
                 start_pattern=fconf.get("start_pattern"),
@@ -623,25 +704,25 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
 
         pod_meta = None
         if fconf.get("pod_metadata"):
-            pod_meta = hit.sparkSession.read.json(fconf["pod_metadata"])
+            pod_meta = df.sparkSession.read.json(fconf["pod_metadata"])
         out = kubernetes_filter(
-            hit, pod_metadata=pod_meta,
+            df, pod_metadata=pod_meta,
             kube_tag_prefix=fconf.get("kube_tag_prefix", "kube.var.log.containers."),
             use_journal=bool(fconf.get("use_journal", False)),
         )
     elif name == "geoip2":
         from fluent_bit_spark.operators.lookup import geoip_enrich
 
-        ranges = hit.sparkSession.read.json(fconf["database"])
+        ranges = df.sparkSession.read.json(fconf["database"])
         for c in ("range_start", "range_end"):
             ranges = ranges.withColumn(c, F.col(c).cast("long"))
-        out = geoip_enrich(hit, ranges, ip_col=fconf["lookup_key"])
+        out = geoip_enrich(df, ranges, ip_col=fconf["lookup_key"])
     elif name == "nightfall":
         from fluent_bit_spark.extensions.text import pii_flags, redact_pii
 
         key = fconf.get("key", "msg")
         kinds = tuple(fconf["kinds"]) if fconf.get("kinds") else None
-        out = hit
+        out = df
         if fconf.get("flag_key"):  # flags read the ORIGINAL text, pre-redaction
             out = out.withColumn(fconf["flag_key"], pii_flags(F.col(key), kinds))
         out = out.withColumn(key, redact_pii(F.col(key), kinds))
@@ -651,7 +732,7 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
 
         conds = [Rule(*c) for c in fconf.get("conditions", [])]
         out = content_modifier(
-            hit,
+            df,
             action=fconf["action"],
             key=fconf["key"],
             value=fconf.get("value"),
@@ -672,7 +753,7 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
             return tuple(v.split(None, 1)) if isinstance(v, str) else (tuple(v) if v else None)
 
         out = log_to_metrics(
-            hit,
+            df,
             mode=fconf.get("metric_mode", fconf.get("mode", "counter")),
             metric_name=fconf.get("metric_name", "log_metric"),
             label_keys=_listopt(fconf.get("label_field")),
@@ -692,17 +773,12 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
         exec(fconf["code"], ns)  # noqa: S102 — config scripts are the Lua-filter analog
         cb = ns[fconf.get("call", "cb")]
         out = record_hook(
-            hit, cb, schema=fconf.get("schema"),
+            df, cb, schema=fconf.get("schema"),
             tag_col=fconf.get("tag_col", TAG_COL), ts_col=fconf.get("time_col", TS_COL),
         )
     else:
         raise ValueError(f"unknown filter plugin {name!r}")
-
-    if pattern == "*":
-        return out  # nothing missed; also the streaming fast path
-    if not df.isStreaming and miss.isEmpty():
-        return out
-    return out.unionByName(miss, allowMissingColumns=True)
+    return out
 
 
 def _apply_processors(df: DataFrame, procs: list[dict]) -> DataFrame:
@@ -837,6 +913,7 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
 
     parsers = {p["name"]: _build_parser(p) for p in conf.get("parsers", [])}
     pipe = Pipeline(spark=spark)
+    tags: dict[str, frozenset | None] = {}
 
     for inp in conf.get("pipeline", {}).get("inputs", []):
         tag = inp.get("tag", f"{inp['name']}.0")
@@ -915,19 +992,25 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
         if procs:
             df = _apply_processors(df, procs)
         pipe.inputs[tag] = df
+        # the tag is a literal, so the router knows the input's tag set
+        # unless a processor could have rewritten it or it holds a line
+        # break (where Java and Python regexes disagree)
+        tags[tag] = None if procs or any(c in tag for c in _LINE_BREAKS) else frozenset([tag])
 
-    # filters compose in config order over the merged stream
+    # filters compose in config order, each routed to the branches its
+    # Match selects
     ml_defs = {
         p.get("name"): p.get("rules")
         for p in conf.get("multiline_parsers", [])
         if p.get("rules")
     }
-    merged = pipe.source()
+    branches = [(df, tags[tag]) for tag, df in pipe.inputs.items()]
     for fconf in conf.get("pipeline", {}).get("filters", []):
         ml_ref = fconf.get("multiline.parser")
         if fconf.get("name") == "multiline" and ml_ref in ml_defs:
             fconf = {**fconf, "rules_table": ml_defs[ml_ref]}
-        merged = _apply_filter(merged, fconf, parsers)
+        branches = _route_filter(branches, fconf, parsers)
+    merged = _union([df for df, _ in branches])
     pipe.inputs = {"__filtered__": merged}
 
     # stream tasks see the filtered stream; a task-level `watermark`

@@ -600,3 +600,222 @@ def test_prometheus_exporter_output_route(spark, tmp_path):
     assert all('env="prod"' in s and s.startswith("ev_total{") for s in samples)
     total = sum(int(s.rsplit(" ", 1)[1]) for s in samples)
     assert total == 1000
+
+
+# -- filter routing: tag-specific filters reach only the inputs they match --
+
+_APACHE = (
+    r'^(?<host>[^ ]*) [^ ]* (?<ruser>[^ ]*) \[(?<time>[^\]]*)\] '
+    r'"(?<method>\S+)(?: +(?<path>[^ ]*) +\S*)?" (?<status>[^ ]*) (?<size>[^ ]*)$'
+)
+_LINES = {
+    "web": [
+        '1.2.3.4 - bob [10/Oct/2000:13:55:36 -0700] "GET /a HTTP/1.0" 200 12',
+        '5.6.7.8 - amy [10/Oct/2000:13:55:37 -0700] "POST /b HTTP/1.0" 503 0',
+        "not an access line",
+    ],
+    "json": [
+        '{"level": "info", "msg": "hi", "code": 200}',
+        '{"level": "error", "msg": "bad", "code": 500}',
+        '{"level": "debug", "msg": "noise", "code": 200}',
+        "{broken",
+    ],
+    "logfmt": ["lvl=warn message=x rc=0", "lvl=error message=y rc=2", "lvl=debug message=z"],
+}
+_TAGS = {"web": "web.access", "json": "app.json", "logfmt": "app.logfmt"}
+
+
+def _write_inputs(tmp_path):
+    for sub, lines in _LINES.items():
+        (tmp_path / sub).mkdir(exist_ok=True)
+        (tmp_path / sub / "a.log").write_text("\n".join(lines) + "\n")
+
+
+def _three_input_conf(tmp_path):
+    """Three text inputs, each with its own tag-specific parser filter."""
+    _write_inputs(tmp_path)
+    sections = [
+        "[PARSER]\n    Name apache\n    Format regex\n    Regex " + _APACHE,
+        "[PARSER]\n    Name app_json\n    Format json\n    Fields level msg",
+        "[PARSER]\n    Name app_logfmt\n    Format logfmt\n    Fields lvl message",
+    ]
+    sections += [
+        f"[INPUT]\n    Name text\n    Path {tmp_path / sub}\n    Tag {tag}"
+        for sub, tag in _TAGS.items()
+    ]
+    sections += [
+        f"[FILTER]\n    Name parser\n    Match {match}\n    Key_Name value\n    Parser {parser}"
+        for match, parser in (("web.*", "apache"), ("app.json", "app_json"),
+                              ("app.logfmt", "app_logfmt"))
+    ]
+    sections.append("[OUTPUT]\n    Name null\n    Match *")
+    path = tmp_path / "three.conf"
+    path.write_text("\n".join(sections) + "\n")
+    return str(path)
+
+
+def _jobs_started(spark, fn):
+    """(result of fn(), Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pipeline build")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_filters_route_by_tag_at_build(spark, tmp_path):
+    """Each tag-specific filter is routed to its input in Python: the
+    build starts no Spark job and the merged plan reads every input once."""
+    conf = _three_input_conf(tmp_path)
+    pipe, jobs = _jobs_started(spark, lambda: load_pipeline(spark, conf))
+    assert jobs == 0
+    analyzed = pipe.source()._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("Relation [") == 3
+    got = {r.tag: r.n for r in pipe.source().groupBy("tag").agg(
+        F.count("method").alias("n")).collect()}
+    assert got == {"web.access": 2, "app.json": 0, "app.logfmt": 0}
+
+
+def test_dry_run_runs_no_job(spark, tmp_path, monkeypatch, capsys):
+    import fluent_bit_spark
+    import fluent_bit_spark.__main__ as cli
+
+    monkeypatch.setattr(fluent_bit_spark, "get_spark", lambda *a, **k: spark)
+    conf = _three_input_conf(tmp_path)
+    code, jobs = _jobs_started(
+        spark, lambda: cli.main(["-c", conf, "--dry-run", "--json"]))
+    assert code == 0 and jobs == 0
+    assert json.loads(capsys.readouterr().out)["routes"] == ["*"]
+
+
+def test_unmatched_filter_still_validated(spark, tmp_path):
+    """A filter whose Match selects no input is still dispatched, so a bad
+    section fails the build as it does when it matches."""
+    import pytest
+
+    conf = {"pipeline": {
+        "inputs": [{"name": "dummy", "tag": "a.x", "records": [{"m": "1"}]}],
+        "filters": [{"name": "no_such_filter", "match": "b.*"}],
+    }}
+    with pytest.raises(ValueError, match="unknown filter plugin"):
+        load_pipeline(spark, conf)
+    conf["pipeline"]["filters"] = [
+        {"name": "parser", "match": "b.*", "key_name": "m", "parser": "missing"}]
+    with pytest.raises(KeyError):
+        load_pipeline(spark, conf)
+
+
+def _routing_conf(tmp_path, only=None):
+    """Tag-specific regex/json/logfmt parsers, grep, modify, nest and
+    record_modifier, then a rewrite_tag and a filter on the rewritten
+    tag; ``only`` keeps a single input."""
+    return {
+        "parsers": [
+            {"name": "apache", "format": "regex", "regex": _APACHE},
+            {"name": "app_json", "format": "json", "fields": ["level", "msg", "code"],
+             "types": {"code": "int"}},
+            {"name": "app_logfmt", "format": "logfmt", "fields": ["lvl", "message", "rc"]},
+        ],
+        "pipeline": {
+            "inputs": [
+                {"name": "text", "path": str(tmp_path / sub), "tag": tag}
+                for sub, tag in _TAGS.items() if only in (None, sub)
+            ],
+            "filters": [
+                # preserve_key: an unmatched parser section is still
+                # dispatched, so a single-input run must keep its key
+                {"name": "parser", "match": "web.*", "key_name": "value",
+                 "parser": "apache", "preserve_key": True},
+                {"name": "parser", "match": "app.json", "key_name": "value",
+                 "parser": "app_json", "preserve_key": True},
+                {"name": "parser", "match": "app.logfmt", "key_name": "value",
+                 "parser": "app_logfmt"},
+                {"name": "grep", "match": "app.*", "logical_op": "or", "rules": [
+                    ["regex", "level", "^(info|error)$"], ["regex", "lvl", "^(warn|error)$"]]},
+                {"name": "modify", "match": "app.*", "rules": [["add", "env", "prod"]]},
+                {"name": "nest", "match": "web.*", "operation": "nest",
+                 "wildcard": "s*", "nest_under": "resp"},
+                {"name": "record_modifier", "match": "*", "records": {"site": "eu"},
+                 "remove_keys": ["ruser"]},
+                {"name": "rewrite_tag", "match": "*", "rules": [
+                    ["level", "^error$", "errors.$TAG[1]", "false"],
+                    ["lvl", "^error$", "errors.$TAG[1]", "false"],
+                    ["method", "^POST$", "errors.$TAG[1]", "false"]]},
+                {"name": "record_modifier", "match": "errors.*", "records": {"alert": "yes"}},
+            ],
+            "outputs": [{"name": "null", "match": m}
+                        for m in ("web.*", "app.*", "errors.*", "*")],
+        },
+    }
+
+
+def _route_records(pipe):
+    def clean(row):
+        d = row.asDict(recursive=True)
+        d.pop("timestamp")  # the load time of each run
+        return {k: v for k, v in d.items() if v is not None}
+
+    return {
+        out["match"]: sorted(
+            (clean(r) for r in pipe.route(out["match"]).collect()),
+            key=lambda d: json.dumps(d, sort_keys=True, default=str),
+        )
+        for out in pipe.outputs
+    }
+
+
+def test_routed_filters_match_per_input_runs(spark, tmp_path):
+    """Each output route of a multi-input pipeline delivers exactly the
+    records that the same config delivers run over each input alone."""
+    _write_inputs(tmp_path)
+    together = _route_records(load_pipeline(spark, _routing_conf(tmp_path)))
+    alone = {m: [] for m in together}
+    for sub in _TAGS:
+        for m, recs in _route_records(load_pipeline(spark, _routing_conf(tmp_path, sub))).items():
+            alone[m] += recs
+    for m in alone:
+        alone[m].sort(key=lambda d: json.dumps(d, sort_keys=True, default=str))
+    assert together == alone
+    errors = together["errors.*"]
+    assert {(r["tag"], r["alert"]) for r in errors} == {
+        ("errors.access", "yes"), ("errors.json", "yes"), ("errors.logfmt", "yes")}
+    assert len(together["*"]) == 3 + 2 + 2  # grep keeps 2 json and 2 logfmt lines
+    assert all(r["site"] == "eu" for r in together["*"])
+    assert together["web.*"][0]["resp"] == {"status": "200", "size": "12"}
+
+
+def test_plan_audit_conf_mode(spark, tmp_path):
+    """tools/plan_audit.py --conf reports the build-time cost of a config."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "tools" / "plan_audit.py"
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    got = tool.audit_conf(spark, _three_input_conf(tmp_path))
+    assert (got["build_jobs"], got["relations"], got["max_relation_copies"]) == (0, 3, 1)
+    assert got["dup_expr"] == 2  # the logfmt map, once per extracted field
+
+
+def test_filter_that_writes_tag_is_routed_by_value(spark):
+    """A filter may rewrite the tag column outside rewrite_tag (here a
+    modify rule): later filters must route on the new value."""
+    conf = {"pipeline": {
+        "inputs": [{"name": "dummy", "tag": "a.x", "records": [{"m": "1"}]},
+                   {"name": "dummy", "tag": "c.z", "records": [{"m": "2"}]}],
+        "filters": [
+            {"name": "modify", "match": "a.*", "rules": [["set", "tag", "b.y"]]},
+            {"name": "record_modifier", "match": "b.*", "records": {"hit": "yes"}},
+        ],
+    }}
+    pipe = load_pipeline(spark, conf)
+    got = sorted((r.tag, r.m, r.hit) for r in pipe.source().collect())
+    assert got == [("b.y", "1", "yes"), ("c.z", "2", None)]

@@ -5,6 +5,11 @@ strategies, scan pushdown), plus the full formatted plan on request.
 Usage:
   python tools/plan_audit.py              # table to stdout + PLAN_AUDIT.md
   python tools/plan_audit.py q1_pricing_summary   # full plan for one query
+  python tools/plan_audit.py --conf pipeline.conf  # audit one pipeline config
+
+``--conf`` audits ``load_pipeline(spark, PATH).source()``: the Spark jobs
+started while the pipeline is built, the most copies of any one input
+relation in the analyzed plan, and dup_expr of the optimized plan.
 
 The pytest guards (tests/test_plans.py) enforce the hard rules; this tool
 is the human-readable sweep — run it after touching an operator to see
@@ -15,6 +20,7 @@ from __future__ import annotations
 
 import re
 import sys
+import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -50,6 +56,36 @@ def dup_expr(plan: str) -> int:
     return max(counts.values(), default=0)
 
 
+def audit_conf(spark, path: str) -> dict:
+    """Build-time cost of one pipeline config. Relations are told apart by
+    their canonical plan, so a copy is the same files (or rows) read again."""
+    from fluent_bit_spark.pipeline import load_pipeline
+
+    sc = spark.sparkContext
+    group = f"plan-audit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"load_pipeline {path}")
+    try:
+        df = load_pipeline(spark, path).source()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    qe = df._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()
+    copies: dict[int, int] = {}
+    for i in range(leaves.size()):
+        key = leaves.apply(i).canonicalized().hashCode()
+        copies[key] = copies.get(key, 0) + 1
+    return {
+        "conf": path,
+        "build_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+        "relations": len(copies),
+        "max_relation_copies": max(copies.values(), default=0),
+        "dup_expr": dup_expr(qe.optimizedPlan().toString()),
+    }
+
+
 def audit_one(spark, name: str) -> dict:
     # audit what the bench times: the bare operator for names the bench
     # remaps away from their verification-wrapped registry versions
@@ -82,6 +118,10 @@ def audit_one(spark, name: str) -> dict:
 
 def main() -> int:
     spark = get_spark("plan-audit")
+    if sys.argv[1:2] == ["--conf"] and len(sys.argv) == 3:
+        for key, value in audit_conf(spark, sys.argv[2]).items():
+            print(f"{key}: {value}")
+        return 0
     if len(sys.argv) > 1:
         for name in sys.argv[1:]:
             r = audit_one(spark, name)
