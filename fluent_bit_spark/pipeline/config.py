@@ -38,7 +38,6 @@ filters remove from every input is gone from the merged stream.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 import yaml
@@ -48,7 +47,7 @@ from pyspark.sql import functions as F
 
 from fluent_bit_spark.model import TAG_COL, TS_COL
 from fluent_bit_spark.sp import SPContext
-from fluent_bit_spark.sp.compiler import tag_pattern_to_regex
+from fluent_bit_spark.sp.compiler import matching_tags, tag_label, tag_pattern_to_regex
 
 
 def _listopt(v) -> list | None:
@@ -489,9 +488,6 @@ def _union(dfs: list[DataFrame]) -> DataFrame:
     return out
 
 
-# Java's '.' and '$' treat these as line ends, Python's re only '\n'
-_LINE_BREAKS = "\n\r\x85\u2028\u2029"
-
 # A branch is (frame, tags): the tags its records can carry, or None when
 # a filter may have rewritten the tag column.
 Branch = tuple[DataFrame, frozenset | None]
@@ -516,8 +512,7 @@ def _route_filter(branches: list[Branch], fconf: dict, parsers: dict) -> list[Br
     of what matched, and its output takes the place of the first branch
     it read."""
     pattern = fconf.get("match", "*")
-    regex = tag_pattern_to_regex(pattern)
-    hit_rows = F.col(TAG_COL).rlike(regex)
+    hit_rows = F.col(TAG_COL).rlike(tag_pattern_to_regex(pattern))
     hits: list[Branch] = []
     routed: list[Branch | None] = []
     slot = None
@@ -530,7 +525,7 @@ def _route_filter(branches: list[Branch], fconf: dict, parsers: dict) -> list[Br
         hits.append(branch)
 
     for df, tags in branches:
-        matched = None if tags is None else frozenset(t for t in tags if re.search(regex, t))
+        matched = matching_tags(pattern, tags)
         if tags is not None and matched == tags:
             take((df, tags))
         elif tags is not None and not matched:
@@ -993,9 +988,8 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
             df = _apply_processors(df, procs)
         pipe.inputs[tag] = df
         # the tag is a literal, so the router knows the input's tag set
-        # unless a processor could have rewritten it or it holds a line
-        # break (where Java and Python regexes disagree)
-        tags[tag] = None if procs or any(c in tag for c in _LINE_BREAKS) else frozenset([tag])
+        # unless a processor could have rewritten it
+        tags[tag] = None if procs else tag_label(tag)
 
     # filters compose in config order, each routed to the branches its
     # Match selects
@@ -1012,6 +1006,9 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
         branches = _route_filter(branches, fconf, parsers)
     merged = _union([df for df, _ in branches])
     pipe.inputs = {"__filtered__": merged}
+    # the SP source can carry every tag its branches can
+    labels = [t for _, t in branches]
+    label = None if None in labels else frozenset().union(*labels)
 
     # stream tasks see the filtered stream; a task-level `watermark`
     # (streaming input only) registers a watermarked source for THAT
@@ -1019,17 +1016,17 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
     # x always-on-state composition surface. The registration is scoped
     # per task (restored after): a later watermark-less task must see
     # the raw stream, not silently inherit an earlier task's horizon
-    pipe.sp.register_stream("pipeline", merged)
+    pipe.sp.register_stream("pipeline", merged, label)
     for task in conf.get("stream_tasks", []):
         wm = task.get("watermark")
         if wm and merged.isStreaming:
             pipe.sp.register_stream(
-                "pipeline", merged.withWatermark(TS_COL, wm)
+                "pipeline", merged.withWatermark(TS_COL, wm), label
             )
             try:
                 pipe.sp.sql(task["exec"])
             finally:
-                pipe.sp.register_stream("pipeline", merged)
+                pipe.sp.register_stream("pipeline", merged, label)
         else:
             pipe.sp.sql(task["exec"])
 

@@ -23,6 +23,8 @@ the deterministic, scale-friendly choice.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,6 +50,29 @@ def tag_pattern_to_regex(pattern: str) -> str:
         else:
             out.append(ch)
     return "^" + "".join(out) + "$"
+
+
+# Java's '.' and '$' treat these as line ends, Python's re only '\n'
+_LINE_BREAKS = "\n\r\x85\u2028\u2029"
+
+
+def tag_label(tag) -> frozenset | None:
+    """Label of records written under the literal ``tag``: the set of tags
+    they can carry, or None (unknown) when ``tag`` is not a string or holds
+    a line break, where Python cannot decide what ``rlike`` would match."""
+    if isinstance(tag, str) and not any(c in tag for c in _LINE_BREAKS):
+        return frozenset([tag])
+    return None
+
+
+def matching_tags(pattern: str, tags: frozenset | None) -> frozenset | None:
+    """The tags of label ``tags`` that the tag wildcard ``pattern`` matches,
+    decided in Python as ``rlike(tag_pattern_to_regex(pattern))`` would on
+    the column; None when the label is unknown."""
+    if tags is None:
+        return None
+    regex = tag_pattern_to_regex(pattern)
+    return frozenset(t for t in tags if re.search(regex, t))
 
 
 # --------------------------------------------------------------------------

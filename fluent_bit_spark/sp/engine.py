@@ -7,23 +7,41 @@ DataFrames; CREATE STREAM re-registers its result as a new source
 is simply a chained DataFrame, so Catalyst can fuse the whole cascade into
 one plan); snapshots hold a bounded buffer (flb_sp_snapshot.c:46-277).
 
-TAG:'pattern' sources match against every registered stream that carries a
-``tag`` column (router semantics, src/flb_router.c:140).
+Every stream carries a tag label: the set of tags its records can carry,
+or None when unknown. CREATE STREAM writes its tag as a literal, so its
+result is labelled with that one tag. A TAG:'pattern' source (router
+semantics, src/flb_router.c:140) checks each label against the pattern in
+Python at compile time: a stream whose tags all match is taken as is, a
+stream with no matching tag is left out, and only a stream of unknown or
+mixed tags (e.g. ``events``, whose tag is computed per row) is filtered
+with ``rlike`` on its ``tag`` column. So a TAG: plan holds one relation
+per stream that can match, however many CREATE STREAM statements ran
+before it, and ``SELECT *`` over TAG: carries only the columns of those
+streams. When no stream can match, the source is an empty frame with the
+columns of all tagged streams.
+
+One chain still grows, as fluent-bit's re-ingestion loop does: a CREATE
+STREAM whose own tag matches its TAG: source reads its previous result,
+so each re-run nests one more copy of it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.model import TAG_COL, TS_COL
 from fluent_bit_spark.sp import ast
-from fluent_bit_spark.sp.compiler import compile_select, tag_pattern_to_regex
+from fluent_bit_spark.sp.compiler import (
+    compile_select,
+    matching_tags,
+    tag_label,
+    tag_pattern_to_regex,
+)
 from fluent_bit_spark.sp.parser import parse_sql
-
-MAX_CHAIN_DEPTH = 32  # bound CREATE STREAM re-ingestion loops (SURVEY §7)
 
 
 @dataclass
@@ -36,30 +54,48 @@ class Snapshot:
 class SPContext:
     def __init__(self, time_col: str = TS_COL, tag_col: str = TAG_COL, str_conv: bool = True):
         self.streams: dict[str, DataFrame] = {}
+        self.stream_tags: dict[str, frozenset | None] = {}
         self.snapshots: dict[str, Snapshot] = {}
         self.time_col = time_col
         self.tag_col = tag_col
         self.str_conv = str_conv
-        self._depth = 0
 
     # -- catalog -----------------------------------------------------------
-    def register_stream(self, name: str, df: DataFrame) -> None:
+    def register_stream(self, name: str, df: DataFrame, tags: frozenset | None = None) -> None:
+        """Register ``df`` as stream ``name``. ``tags`` is its label: the
+        tags its records can carry, or None when unknown."""
         self.streams[name] = df
+        self.stream_tags[name] = tags
 
     def _resolve_source(self, src: ast.Source) -> DataFrame:
         if src.kind == "stream":
             if src.name not in self.streams:
                 raise KeyError(f"unknown stream {src.name!r}")
             return self.streams[src.name]
-        # TAG: union every tagged stream, filter by wildcard
-        regex = tag_pattern_to_regex(src.name)
-        tagged = [df for df in self.streams.values() if self.tag_col in df.columns]
+        # TAG: the tagged streams whose label can match, filtered by the
+        # wildcard only where the label cannot decide
+        tagged = [(n, df) for n, df in self.streams.items() if self.tag_col in df.columns]
         if not tagged:
             raise KeyError("no tagged streams registered for TAG: source")
-        base = tagged[0]
-        for other in tagged[1:]:
-            base = base.unionByName(other, allowMissingColumns=True)
-        return base.filter(F.col(self.tag_col).rlike(regex))
+        hit_rows = F.col(self.tag_col).rlike(tag_pattern_to_regex(src.name))
+        parts = []
+        for name, df in tagged:
+            tags = self.stream_tags.get(name)
+            matched = matching_tags(src.name, tags)
+            if tags is not None and matched == tags:
+                parts.append(df)
+            elif matched is None or matched:
+                parts.append(df.filter(hit_rows))
+        if not parts:
+            # nothing can match: no rows, but the columns of every tagged
+            # stream, without holding their plans (a streaming source
+            # keeps its plan, as a batch frame cannot stand in for it)
+            spark = tagged[0][1].sparkSession
+            parts = [
+                df.filter(F.lit(False)) if df.isStreaming else spark.createDataFrame([], df.schema)
+                for _, df in tagged
+            ]
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
     # -- execution -----------------------------------------------------------
     def sql(self, text: str) -> DataFrame | None:
@@ -72,17 +108,11 @@ class SPContext:
         if cmd.kind == "select":
             return self._compile(cmd.select)
         if cmd.kind == "create_stream":
-            if self._depth >= MAX_CHAIN_DEPTH:
-                raise RecursionError("CREATE STREAM chain too deep")
-            self._depth += 1
-            try:
-                out = self._compile(cmd.select)
-                tag = cmd.props.get("tag", cmd.name)
-                out = out.withColumn(self.tag_col, F.lit(tag))
-                self.register_stream(cmd.name, out)
-                return out
-            finally:
-                self._depth -= 1
+            out = self._compile(cmd.select)
+            tag = cmd.props.get("tag", cmd.name)
+            out = out.withColumn(self.tag_col, F.lit(tag))
+            self.register_stream(cmd.name, out, tag_label(tag))
+            return out
         if cmd.kind == "create_snapshot":
             sel = cmd.select
             # snapshots buffer RAW records (flb_sp_snapshot.c stores the

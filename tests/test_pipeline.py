@@ -819,3 +819,28 @@ def test_filter_that_writes_tag_is_routed_by_value(spark):
     pipe = load_pipeline(spark, conf)
     got = sorted((r.tag, r.m, r.hit) for r in pipe.source().collect())
     assert got == [("b.y", "1", "yes"), ("c.z", "2", None)]
+
+
+def test_stream_task_tag_source_over_labelled_inputs(spark, tmp_path):
+    """The SP source ``pipeline`` carries the tags of its inputs as its
+    label; a TAG: stream task that matches one of two inputs reads that
+    input's records, as the rlike over the merged stream does."""
+    conf = tmp_path / "pipe.yaml"
+    conf.write_text(
+        "pipeline:\n"
+        "  inputs:\n"
+        "    - {name: dummy, tag: app.a, records: [{m: '1', v: 1}, {m: '2', v: 2}]}\n"
+        "    - {name: dummy, tag: sys.b, records: [{m: '3', w: 3}]}\n"
+        "  filters:\n"
+        "    - {name: record_modifier, match: 'app.*', records: {hit: 'yes'}}\n"
+        "stream_tasks:\n"
+        "  - {name: apps, exec: \"CREATE STREAM apps AS SELECT m, v, hit FROM TAG:'app.*';\"}\n"
+    )
+    pipe = load_pipeline(spark, str(conf))
+    assert pipe.sp.stream_tags["pipeline"] == frozenset(["app.a", "sys.b"])
+    got = sorted((r.m, r.v, r.hit) for r in pipe.sp.streams["apps"].collect())
+    assert got == [("1", 1, "yes"), ("2", 2, "yes")]
+    # the load-time timestamp is taken again by each query
+    want = pipe.source().filter(F.col("tag").rlike("^app\\..*$")).drop("timestamp")
+    got = pipe.sp.sql("SELECT * FROM TAG:'app.*';").drop("timestamp")
+    assert sorted(got.collect()) == sorted(want.collect())

@@ -191,3 +191,145 @@ def test_aggregate_analysis_rejections_r12(sp):
             "CREATE SNAPSHOT snap_bad AS SELECT bool, COUNT(bool) "
             "FROM STREAM:FLB GROUP BY bool;"
         )
+
+
+def _leaf_count(df) -> int:
+    return df._jdf.queryExecution().analyzed().collectLeaves().size()
+
+
+def _tagged_base(spark):
+    """Three records whose tag is computed per row (unknown label)."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(1, "a", 5.0), (2, "b", 50.0), (3, "a", 500.0)], "id long, kind string, v double"
+    )
+    return df.withColumn("tag", F.concat(F.lit("base."), F.col("kind")))
+
+
+def test_create_stream_chain_does_not_nest_earlier_streams(spark):
+    """A CREATE STREAM result carries its literal tag, so a later
+    TAG:'base.*' source leaves it out at compile time: the plan holds the
+    base relation alone, however many CREATE STREAM statements ran."""
+    from fluent_bit_spark.sp import SPContext
+
+    ctx = SPContext()
+    ctx.register_stream("base", _tagged_base(spark))
+    for name in ("h1", "h2", "h3", "h4") * 2:
+        ctx.sql(
+            f"CREATE STREAM {name} WITH (tag='hot') AS "
+            "SELECT id, v FROM TAG:'base.*' WHERE v > 10;"
+        )
+    out = ctx.sql("SELECT id FROM TAG:'base.*' WHERE v > 10;")
+    assert _leaf_count(out) == 1
+    assert ctx.stream_tags["h4"] == frozenset(["hot"])
+    assert sorted(r.id for r in out.collect()) == [2, 3]
+    assert sorted(r.id for r in ctx.sql("SELECT id FROM TAG:'hot';").collect()) == [2] * 4 + [3] * 4
+
+
+@pytest.mark.parametrize("pattern", ["*", "base.*", "base.a", "hot.*", "hot.x", "user", "no-matches"])
+def test_tag_source_matches_union_and_rlike(spark, pattern):
+    """TAG: resolution by label returns the rows the old resolution did:
+    a unionByName over every tagged stream filtered with rlike. Rows are
+    compared without their null keys, because a stream that cannot match
+    no longer null-fills the others' columns."""
+    from collections import Counter
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from fluent_bit_spark.sp import SPContext
+    from fluent_bit_spark.sp.compiler import tag_pattern_to_regex
+
+    ctx = SPContext()
+    ctx.register_stream("base", _tagged_base(spark))
+    # no label, one literal tag per row
+    ctx.register_stream(
+        "user",
+        spark.createDataFrame([(7, "user", "u1"), (8, "user.b", "u2")], "id long, tag string, note string"),
+    )
+    ctx.sql("CREATE STREAM hot WITH (tag='hot.x') AS SELECT id, v FROM TAG:'base.*' WHERE v > 10;")
+    ctx.register_stream("untagged", spark.createDataFrame([(9,)], "id long"))
+
+    reference = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [df for df in ctx.streams.values() if "tag" in df.columns],
+    )
+    want = reference.filter(F.col("tag").rlike(tag_pattern_to_regex(pattern)))
+    got = ctx.sql(f"SELECT * FROM TAG:'{pattern}';")
+
+    def rows(df):
+        return Counter(
+            frozenset((k, v) for k, v in r.asDict().items() if v is not None) for r in df.collect()
+        )
+
+    assert rows(got) == rows(want)
+    if pattern == "no-matches":
+        assert got.columns == reference.columns
+
+
+def test_tag_source_no_label_matches(spark):
+    """When every tagged stream has a known label and none matches, the
+    source is empty with the columns of all tagged streams, and holds none
+    of their plans."""
+    from fluent_bit_spark.sp import SPContext
+
+    ctx = SPContext()
+    ctx.register_stream("a", spark.createDataFrame([(1, "a")], "id long, tag string"), frozenset(["a"]))
+    ctx.register_stream("b", spark.createDataFrame([("b", 2.0)], "tag string, v double"), frozenset(["b"]))
+    ctx.sql("CREATE STREAM c WITH (tag='c') AS SELECT tag FROM TAG:'*';")
+    out = ctx.sql("SELECT * FROM TAG:'no-matches';")
+    assert out.columns == ["id", "tag", "v"]
+    assert out.collect() == []
+    assert _leaf_count(out) == 3  # one empty frame per stream, not c's plan
+    assert _leaf_count(ctx.sql("SELECT * FROM TAG:'a';")) == 1
+    # a streaming source stays streaming when it cannot match
+    from pyspark.sql import functions as F
+
+    live = SPContext()
+    live.register_stream(
+        "r", spark.readStream.format("rate").load().withColumn("tag", F.lit("r")), frozenset(["r"])
+    )
+    assert live.sql("SELECT * FROM TAG:'no-matches';").isStreaming
+
+
+def test_create_stream_tag_label(spark):
+    """A CREATE STREAM tag that Python cannot check as rlike would (a line
+    break, or not a string) registers as unknown and is routed by value:
+    Java's '$' matches before a final '\\r', Python's does not."""
+    from fluent_bit_spark.sp import SPContext, ast, parse_sql
+
+    ctx = SPContext()
+    ctx.register_stream("base", _tagged_base(spark))
+    for name, tag, src in (("s1", "x\r", "base.a"), ("s2", 5, "base.b")):
+        cmd = parse_sql(f"CREATE STREAM {name} AS SELECT id FROM TAG:'{src}';")
+        ctx.execute(ast.Command(kind=cmd.kind, name=name, props={"tag": tag}, select=cmd.select))
+        assert ctx.stream_tags[name] is None
+    assert sorted(r.id for r in ctx.sql("SELECT id FROM TAG:'x';").collect()) == [1, 3]
+    assert [r.id for r in ctx.sql("SELECT id FROM TAG:'5';").collect()] == [2]
+    assert ctx.stream_tags == {"base": None, "s1": None, "s2": None}
+
+
+def test_plan_audit_sp_mode(spark, tmp_path, monkeypatch, capsys):
+    """tools/plan_audit.py --sp prints each statement's plan size; a
+    re-run CREATE STREAM does not grow the plans after it."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "tools" / "plan_audit.py"
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    create = (
+        "CREATE STREAM hot WITH (tag='hot') AS "
+        "SELECT user_id, value FROM TAG:'events.*' WHERE value > 100;"
+    )
+    stmts = tmp_path / "statements.sql"
+    stmts.write_text(f"{create}\n\n{create}\nSELECT event_id FROM TAG:'events.*' WHERE value > 100;\n")
+    got = tool.audit_sp(spark, str(stmts))
+    assert [r["leaves"] for r in got] == [1, 1, 1]
+    assert all(r["compile_ms"] > 0 for r in got)
+    monkeypatch.setattr("sys.argv", ["plan_audit.py", "--sp", str(stmts)])
+    assert tool.main() == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 4 and lines[-1].split()[0] == "1"

@@ -6,10 +6,16 @@ Usage:
   python tools/plan_audit.py              # table to stdout + PLAN_AUDIT.md
   python tools/plan_audit.py q1_pricing_summary   # full plan for one query
   python tools/plan_audit.py --conf pipeline.conf  # audit one pipeline config
+  python tools/plan_audit.py --sp statements.sql   # audit SP statements
 
 ``--conf`` audits ``load_pipeline(spark, PATH).source()``: the Spark jobs
 started while the pipeline is built, the most copies of any one input
 relation in the analyzed plan, and dup_expr of the optimized plan.
+
+``--sp`` runs each non-blank line of the file as one stream-processor
+statement, in order, in one fresh SPContext with ``events`` registered
+from SF_DIR, and prints each statement's leaf relations in the analyzed
+plan and its compile time in ms.
 
 The pytest guards (tests/test_plans.py) enforce the hard rules; this tool
 is the human-readable sweep — run it after touching an operator to see
@@ -20,6 +26,7 @@ from __future__ import annotations
 
 import re
 import sys
+import time
 import uuid
 from pathlib import Path
 
@@ -86,6 +93,27 @@ def audit_conf(spark, path: str) -> dict:
     }
 
 
+def audit_sp(spark, path: str, sf_dir: str = SF_DIR) -> list[dict]:
+    """Plan size and compile time of each SP statement in ``path``, run in
+    order against one context, so a statement sees the streams that the
+    CREATE STREAM statements before it registered."""
+    from fluent_bit_spark.model import events_as_stream_table
+    from fluent_bit_spark.sp import SPContext
+
+    ctx = SPContext()
+    ctx.register_stream("events", events_as_stream_table(spark, sf_dir))
+    rows = []
+    for text in Path(path).read_text().splitlines():
+        if not text.strip():
+            continue
+        t0 = time.perf_counter()
+        df = ctx.sql(text)
+        compile_ms = (time.perf_counter() - t0) * 1000.0
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves().size()
+        rows.append({"statement": text, "leaves": leaves, "compile_ms": compile_ms})
+    return rows
+
+
 def audit_one(spark, name: str) -> dict:
     # audit what the bench times: the bare operator for names the bench
     # remaps away from their verification-wrapped registry versions
@@ -121,6 +149,11 @@ def main() -> int:
     if sys.argv[1:2] == ["--conf"] and len(sys.argv) == 3:
         for key, value in audit_conf(spark, sys.argv[2]).items():
             print(f"{key}: {value}")
+        return 0
+    if sys.argv[1:2] == ["--sp"] and len(sys.argv) == 3:
+        print(f"{'leaves':>6s} {'compile_ms':>10s}  statement")
+        for r in audit_sp(spark, sys.argv[2]):
+            print(f"{r['leaves']:6d} {r['compile_ms']:10.1f}  {r['statement']}")
         return 0
     if len(sys.argv) > 1:
         for name in sys.argv[1:]:
