@@ -2,7 +2,10 @@
 encode/decode roundtrip (plugins/out_es, plugins/out_splunk,
 plugins/{in,out}_opentelemetry)."""
 
+import glob
 import json
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -183,14 +186,17 @@ def test_es_bulk_decode_delete_has_no_source_line(spark):
     assert json.loads(rows[1].doc) == {"msg": "second"}
 
 
-def test_msgpack_codec_golden_pairs():
-    """Decoder parity with the reference pack corpus:
-    tests/internal/data/pack/*.mp must decode to their .json values."""
-    import glob
+# msgpack golden pairs packed by an independent encoder (see its README)
+PACK_DIR = Path(__file__).parent / "data" / "pack"
+# fluent-bit's own pack corpus, present only beside a fluent-bit checkout
+REFERENCE_PACK_DIR = "/root/reference/tests/internal/data/pack"
 
+
+def _assert_pack_pairs(pairs):
+    """Each ``<name>.mp`` decodes to its ``<name>.json`` value, consuming
+    the whole file, and survives the engine's own encoder."""
     from fluent_bit_spark.functions.msgpack_codec import pack, unpack_one
 
-    pairs = sorted(glob.glob("/root/reference/tests/internal/data/pack/*.mp"))
     assert len(pairs) >= 7
     for mp in pairs:
         raw = open(mp, "rb").read()
@@ -198,6 +204,22 @@ def test_msgpack_codec_golden_pairs():
         got, off = unpack_one(raw)
         assert got == want and off == len(raw), mp
         assert unpack_one(pack(got))[0] == got  # own-encoder roundtrip
+
+
+def test_msgpack_codec_golden_pairs():
+    """Decoder parity with an independent encoder: tests/data/pack/*.mp,
+    packed by msgpack-python, must decode to their .json values."""
+    _assert_pack_pairs(sorted(glob.glob(str(PACK_DIR / "*.mp"))))
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_PACK_DIR),
+    reason=f"fluent-bit pack corpus not found at {REFERENCE_PACK_DIR}",
+)
+def test_msgpack_codec_reference_pack_corpus():
+    """Decoder parity with the reference pack corpus:
+    tests/internal/data/pack/*.mp must decode to their .json values."""
+    _assert_pack_pairs(sorted(glob.glob(REFERENCE_PACK_DIR + "/*.mp")))
 
 
 def test_msgpack_event_and_forward_decode(spark):
