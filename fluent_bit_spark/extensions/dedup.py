@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import versioned_store
+
 
 # --------------------------------------------------------------------------
 # shingling helpers
@@ -358,7 +360,7 @@ def dedup_against_history(
     # be s3a:// / hdfs:// in the deployment shape this operator targets,
     # where os.path checks are always False and the filter would silently
     # no-op while appends kept succeeding
-    seen = _try_read_parquet(spark, history_data_dir(spark, state_dir))
+    seen = versioned_store.read(spark, state_dir)
     if seen is not None:
         losers = (
             bands.join(seen, ["band", "bh"], "left_semi")
@@ -379,119 +381,11 @@ def dedup_against_history(
     return kept
 
 
-def _try_read_parquet(spark, path: str):
-    """Read a parquet table, returning None when it does not exist yet
-    (missing path, or a directory with no data files). Probing through
-    Spark — instead of os.path — keeps remote state URIs (s3a://,
-    hdfs://) working. Only the two no-state-yet error classes map to
-    None; any OTHER AnalysisException (corrupt footer, permission,
-    schema conflict) re-raises — a dedup history that exists but cannot
-    be read must fail loudly, not silently keep every duplicate."""
-    from pyspark.errors import AnalysisException
-
-    _MISSING = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force analysis so a missing path fails HERE, not lazily
-        return df
-    except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: None)() or ""
-        if cls in _MISSING or any(m in str(e) for m in _MISSING):
-            return None
-        raise
-
-
-def _hadoop_fs(spark, uri: str):
-    """(FileSystem, Path) for any Hadoop-supported URI (file://, s3a://,
-    hdfs://, scheme-less local) via the session's Hadoop conf."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(uri)
-    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
-
-
-def _read_manifest(spark, root: str) -> str | None:
-    """Raw contents of ``root/MANIFEST`` (stripped), or None when the
-    file is absent (flat legacy layout / store never compacted). An
-    EMPTY or malformed manifest is returned as-is — callers validate
-    with ``_is_version_dir`` and must treat invalid contents as
-    corruption, never as "flat layout": a truncated manifest with
-    version dirs still on disk means the pointer was lost, not that the
-    data lives at the root."""
-    fs, p = _hadoop_fs(spark, root.rstrip("/") + "/MANIFEST")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        out = bytearray()
-        b = stream.read()
-        while b != -1:
-            out.append(b)
-            b = stream.read()
-    finally:
-        stream.close()
-    return out.decode("utf-8", errors="replace").strip()
-
-
-_OBJECT_STORE_SCHEMES = {
-    "s3", "s3a", "s3n", "gs", "gcs", "wasb", "wasbs", "abfs", "abfss",
-    "oss", "cos", "swift",
-}
-
-
-def _write_manifest(spark, root: str, version: str) -> None:
-    """Flip ``root/MANIFEST`` to ``version``.
-
-    Object stores get a direct single-object overwrite — a PUT is
-    atomic there, and tmp+rename would be a non-atomic copy+delete.
-    Rename-capable filesystems (file://, hdfs://) instead write
-    ``MANIFEST.tmp`` and rename it onto ``MANIFEST``: ``fs.create(p,
-    overwrite=True)`` truncates before writing, so a crash mid-overwrite
-    would leave an empty/partial manifest, while rename is atomic.
-    Where rename refuses an existing destination (HDFS semantics) we
-    fall back to delete-then-rename; the resulting two-metadata-op
-    window is covered by _compact_history_manifest's refusal to treat
-    version dirs without a manifest as a flat store."""
-    base = root.rstrip("/")
-    scheme = base.split("://", 1)[0].lower() if "://" in base else ""
-    fs, p = _hadoop_fs(spark, base + "/MANIFEST")
-    if scheme in _OBJECT_STORE_SCHEMES:
-        stream = fs.create(p, True)
-        try:
-            stream.write(bytearray(version.encode("utf-8")))
-        finally:
-            stream.close()
-        return
-    _, tmp = _hadoop_fs(spark, base + "/MANIFEST.tmp")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(version.encode("utf-8")))
-    finally:
-        stream.close()
-    if not fs.rename(tmp, p):
-        fs.delete(p, False)
-        if not fs.rename(tmp, p):
-            raise IOError(f"manifest flip failed for {base}")
-
-
 def history_data_dir(spark, state_dir: str) -> str:
-    """Resolve the LIVE data directory of a dedup history store: the
-    manifest-pointed version dir when ``state_dir/MANIFEST`` exists
-    (remote-compacted store), else ``state_dir`` itself (flat layout).
-    Readers and appenders both route through this, so a manifest flip
-    redirects every subsequent batch without coordination. A manifest
-    that exists but doesn't parse as a version pointer is corruption —
-    raise rather than silently reading the (possibly already-migrated)
-    flat root."""
-    ptr = _read_manifest(spark, state_dir)
-    if ptr is None:
-        return state_dir
-    if not _is_version_dir(ptr):
-        raise RuntimeError(
-            f"corrupt MANIFEST in {state_dir!r}: {ptr!r} is not a version "
-            "pointer; restore it to the newest complete vNNNNNN directory"
-        )
-    return f"{state_dir.rstrip('/')}/{ptr}"
+    """The live data directory of the dedup history at ``state_dir``
+    (``versioned_store.live_dir``): the live version once the history
+    has been compacted, else ``state_dir`` itself."""
+    return versioned_store.live_dir(spark, state_dir)
 
 
 def append_history(
@@ -510,135 +404,33 @@ def append_history(
     sink-before-state merely re-emits on replay — the standard
     at-least-once foreachBatch contract."""
     sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    band_buckets(sig, id_col, num_bands, sig_len=num_hashes).select(
-        "band", "bh"
-    ).write.mode("append").parquet(history_data_dir(df.sparkSession, state_dir))
+    versioned_store.append(
+        band_buckets(sig, id_col, num_bands, sig_len=num_hashes).select(
+            "band", "bh"
+        ),
+        state_dir,
+    )
 
 
 def compact_history(spark, state_dir: str) -> int:
-    """Offline maintenance for dedup_against_history's band table:
-    replayed batches and per-batch appends accumulate duplicate
-    (band, bh) rows that don't change membership but inflate the
-    semi-join scan. Rewrites the table as distinct rows via
-    tmp-write-then-swap. Run BETWEEN ingest batches (the swap is not
-    safe against a concurrent reader mid-plan). Returns the compacted
-    row count.
+    """Offline maintenance for the dedup history tables (text, image,
+    audio, video): replayed batches and per-batch appends accumulate
+    duplicate rows that don't change membership but inflate the probe
+    scan. Commits a distinct copy of the live rows as a new version of
+    the store (``versioned_store.commit``), then retires every other
+    version and the flat files of a never-compacted store
+    (``versioned_store.retire``). A crash before the manifest flip
+    leaves the old rows live; the next call deletes the half-written
+    version and starts over. Run BETWEEN ingest batches: retire is not
+    safe against a reader still scanning the old version. Returns the
+    compacted row count."""
 
-    Crash safety, local path: the live dir is renamed ASIDE first, then
-    the compacted tmp renamed into place, then the old copy deleted — at
-    every point at least one complete copy of the history exists under a
-    readable name (a crash between the two renames leaves
-    ``state_dir + '.old'``, which the next call restores automatically).
+    def write(live, new):
+        spark.read.parquet(live).distinct().write.mode("overwrite").parquet(new)
+        return spark.read.parquet(new).count()
 
-    Remote stores (any ``scheme://`` URI — s3a://, hdfs://, file://)
-    can't rely on atomic directory renames, so they use the
-    write-new-dir + manifest-pointer-flip layout instead: compacted rows
-    land in ``state_dir/vNNNNNN/``, then the one-object
-    ``state_dir/MANIFEST`` is flipped to the new version (atomic PUT on
-    S3), then stale versions are deleted. ``append_history`` and
-    ``dedup_against_history`` resolve the pointer on every call
-    (``history_data_dir``), so the flip redirects subsequent batches
-    without coordination; a crash at ANY point leaves the manifest on a
-    complete version (orphan next-version dirs are cleaned up by the
-    following compaction). The first remote compaction migrates a flat
-    store into this layout."""
-    import os
-    import shutil
-
-    if "://" in state_dir:
-        return _compact_history_manifest(spark, state_dir)
-    base = state_dir.rstrip("/")
-    tmp = base + ".compact.tmp"
-    old = base + ".old"
-    if not os.path.isdir(base) and os.path.isdir(old):
-        # recover from a crash between the two renames of a prior run
-        os.rename(old, base)
-    distinct = spark.read.parquet(base).distinct()
-    shutil.rmtree(tmp, ignore_errors=True)
-    distinct.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old)
-    return n
-
-
-_VERSION_RE = None
-
-
-def _is_version_dir(name: str) -> bool:
-    global _VERSION_RE
-    if _VERSION_RE is None:
-        import re
-
-        _VERSION_RE = re.compile(r"^v\d{6}$")
-    return bool(_VERSION_RE.match(name))
-
-
-def _compact_history_manifest(spark, state_dir: str) -> int:
-    """Remote-store compaction: write-new-version + manifest flip (see
-    compact_history). Sequencing guarantees a complete, manifest-
-    reachable copy exists at every instant:
-
-      1. orphan version dirs (crashed prior attempts, never flipped
-         live) are deleted;
-      2. the live data (manifest-pointed dir, or the flat root on first
-         migration) is read and written DISTINCT to the next version;
-      3. the manifest flips (single-object overwrite);
-      4. stale data — older versions, and on migration the flat root's
-         top-level files — is deleted.
-    """
-    base = state_dir.rstrip("/")
-    fs, base_path = _hadoop_fs(spark, base)
-    cur = _read_manifest(spark, base)
-
-    # 0. corruption guard: a missing/unparseable manifest WITH version
-    # dirs on disk means the pointer was lost (e.g. a crash inside a
-    # non-atomic manifest write), NOT that the store is flat — migrating
-    # here would delete every version dir in the orphan sweep below and
-    # destroy the history. Refuse and ask for a manual pointer restore.
-    if cur is not None and not _is_version_dir(cur):
-        raise RuntimeError(
-            f"corrupt MANIFEST in {base!r}: {cur!r}; restore it to the "
-            "newest complete vNNNNNN directory before compacting"
-        )
-    if cur is None and fs.exists(base_path) and any(
-        st.isDirectory() and _is_version_dir(st.getPath().getName())
-        for st in fs.listStatus(base_path)
-    ):
-        raise RuntimeError(
-            f"{base!r} has vNNNNNN version dirs but no MANIFEST — "
-            "refusing to treat it as a flat store (migration would "
-            "delete the versions); write MANIFEST pointing at the "
-            "newest complete version to recover"
-        )
-
-    # 1. remove never-flipped orphans so the flat-root read (migration)
-    # can't pick up their part files, and version numbering stays clean
-    if fs.exists(base_path):
-        for st in fs.listStatus(base_path):
-            name = st.getPath().getName()
-            if st.isDirectory() and _is_version_dir(name) and name != cur:
-                fs.delete(st.getPath(), True)
-
-    live = f"{base}/{cur}" if cur else base
-    nxt = f"v{(int(cur[1:]) + 1) if cur else 1:06d}"
-    distinct = spark.read.parquet(live).distinct()
-    distinct.write.mode("overwrite").parquet(f"{base}/{nxt}")
-    n = spark.read.parquet(f"{base}/{nxt}").count()
-    _write_manifest(spark, base, nxt)
-    # 4. stale cleanup: prior version, plus flat top-level files on the
-    # migration pass (a crash here is harmless — the next compaction
-    # re-runs this loop)
-    for st in fs.listStatus(base_path):
-        name = st.getPath().getName()
-        if name in (nxt, "MANIFEST"):
-            continue
-        if st.isDirectory() and _is_version_dir(name):
-            fs.delete(st.getPath(), True)
-        elif cur is None and st.isFile():
-            fs.delete(st.getPath(), False)
+    n = versioned_store.commit(spark, state_dir, write)
+    versioned_store.retire(spark, state_dir)
     return n
 
 

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import versioned_store
+
 MEDIA_META_SCHEMA = (
     "media_id bigint, kind string, n_bytes int, fake_width int, fake_height int, "
     "fake_duration_ms int, sha string"
@@ -2578,9 +2580,10 @@ def image_dedup_against_history(
     dHash twin of dedup_against_history (dedup.py), sharing its ENTIRE
     state discipline: the history table at ``state_dir`` holds
     (band, bv, dhash) rows (three longs per band per kept image),
-    resolves through the same manifest pointer (history_data_dir), and
-    compacts with the same compact_history — the (band, bv) probe-key
-    shape is what the discipline needs, not the hash family.
+    is read and appended through the same store protocol
+    (versioned_store.py), and compacts with the same compact_history —
+    the (band, bv) probe-key shape is what the discipline needs, not
+    the hash family.
 
     It is STRONGER than the text twin in one way: because the full
     64-bit dhash rides each band row, cross-batch candidates verify by
@@ -2593,12 +2596,10 @@ def image_dedup_against_history(
     CRASH ORDERING: same as the text twin — append AFTER the sink
     commits (update_state=False + append_image_history), or eagerly
     with update_state=True where replay loss is acceptable."""
-    from .dedup import _try_read_parquet, history_data_dir
-
     spark = media.sparkSession
     hashes = image_dhash(media, id_col).select(id_col, "dhash")
     bands = _dhash_bands(hashes, max_hamming, id_col)
-    seen = _try_read_parquet(spark, history_data_dir(spark, state_dir))
+    seen = versioned_store.read(spark, state_dir)
     if seen is not None:
         losers = (
             bands.join(
@@ -2636,13 +2637,10 @@ def append_image_history(
     split out so streaming callers order it AFTER the sink write (the
     at-least-once contract of neardup_foreach_batch). Duplicate rows
     from replays are harmless (membership semantics) and compact away."""
-    from .dedup import history_data_dir
-
     hashes = image_dhash(media, id_col).select(id_col, "dhash")
-    _dhash_bands(hashes, max_hamming, id_col).select(
-        "band", "bv", "dhash"
-    ).write.mode("append").parquet(
-        history_data_dir(media.sparkSession, state_dir)
+    versioned_store.append(
+        _dhash_bands(hashes, max_hamming, id_col).select("band", "bv", "dhash"),
+        state_dir,
     )
 
 
@@ -2687,8 +2685,8 @@ def audio_dedup_against_history(
     Haitsma-Kalker twin of dedup_against_history: the history at
     ``state_dir`` holds (bh, idx, fp) rows (one per stored
     subfingerprint, carrying the owning clip's full fingerprint array),
-    under the same manifest-pointer layout and compact_history as the
-    text/image stores. A new clip drops when any of its subfingerprints
+    kept through the same store protocol (versioned_store.py) and
+    compact_history as the text/image stores. A new clip drops when any of its subfingerprints
     EXACTLY matches a stored one AND the bit-error rate over the
     aligned overlap verifies <= ``max_ber`` (the join's exact contract,
     cross-batch). ``energy_floor`` gates both the probes and what the
@@ -2697,14 +2695,12 @@ def audio_dedup_against_history(
 
     CRASH ORDERING: same as the text twin — append AFTER the sink
     commits (update_state=False + append_audio_history)."""
-    from .dedup import _try_read_parquet, history_data_dir
-
     spark = media.sparkSession
     subs, fps, _ = _audio_history_rows(media, id_col, frame, hop, energy_floor)
     probe = subs
     if energy_floor is not None:
         probe = probe.where(F.col("ac_rms") >= energy_floor)
-    seen = _try_read_parquet(spark, history_data_dir(spark, state_dir))
+    seen = versioned_store.read(spark, state_dir)
     if seen is not None:
         cands = (
             probe.select(
@@ -2750,12 +2746,8 @@ def append_audio_history(
 ) -> None:
     """Append ``media``'s subfingerprint rows to the audio history —
     split out so streaming callers order it AFTER the sink write."""
-    from .dedup import history_data_dir
-
     _, _, rows = _audio_history_rows(media, id_col, frame, hop, energy_floor)
-    rows.write.mode("append").parquet(
-        history_data_dir(media.sparkSession, state_dir)
-    )
+    versioned_store.append(rows, state_dir)
 
 
 def make_pgm(w: int, h: int, pixels: bytes) -> bytes:

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import versioned_store
 from .dedup import normalize_text
 
 __all__ = [
@@ -878,25 +879,6 @@ def bm25_index_save(index: dict, path: str) -> None:
     _write_index_tables(index, path.rstrip("/"))
 
 
-def _live_index_dir(spark, base: str) -> str:
-    """Resolve the live directory of a persisted index: the manifest-
-    pointed version dir when ``base/MANIFEST`` exists (the store has
-    been appended at least once), else ``base`` itself (fresh save) —
-    the dedup history-store discipline (dedup.py history_data_dir), so
-    a reader never sees a half-written append."""
-    from .dedup import _is_version_dir, _read_manifest
-
-    ptr = _read_manifest(spark, base)
-    if ptr is None:
-        return base
-    if not _is_version_dir(ptr):
-        raise RuntimeError(
-            f"corrupt MANIFEST in {base!r}: {ptr!r} is not a version "
-            "pointer; restore it to the newest complete vNNNNNN directory"
-        )
-    return f"{base}/{ptr}"
-
-
 def bm25_index_load(spark, path: str) -> dict:
     """Reload a bm25_index_save'd (and possibly appended) index. The
     returned frames are plain parquet scans (term-pruned by predicate
@@ -904,7 +886,7 @@ def bm25_index_load(spark, path: str) -> dict:
     join only — no corpus scan, no rebuild. Drop-in wherever
     bm25_topk_indexed takes an index. Indexes saved before the postings
     table existed load fine (postings=None) but refuse appends."""
-    base = _live_index_dir(spark, path.rstrip("/"))
+    base = versioned_store.live_dir(spark, path.rstrip("/"))
     # meta read with its EXPLICIT schema (no inference job); a
     # pre-schema meta simply yields a null schemas map
     meta = (
@@ -961,10 +943,8 @@ def bm25_index_load(spark, path: str) -> dict:
     # layout; a permission error or corrupt footer must RAISE, not
     # silently degrade to an index that then misleadingly refuses
     # appends with "rebuild once"
-    from .dedup import _try_read_parquet
-
-    postings = _try_read_parquet(spark, f"{base}/postings")
-    topc = _try_read_parquet(spark, f"{base}/topc")
+    postings = versioned_store.try_read_parquet(spark, f"{base}/postings")
+    topc = versioned_store.try_read_parquet(spark, f"{base}/topc")
     if topc is not None:
         kept, cutoffs = _impact_order_ranked(topc, int(meta["c"]), meta["id_col"])
     else:  # pre-topc layout: separate kept/cutoffs tables
@@ -1001,16 +981,15 @@ def bm25_index_append(
     rebuild on the union (integer tf/dl/df make the recomputed stats
     bit-identical; tested).
 
-    Crash discipline is the dedup-history manifest flip (dedup.py
-    _write_manifest): the union tables land in a fresh ``vNNNNNN``
-    version dir and MANIFEST flips to it atomically LAST — a crash at
-    any earlier instant leaves the old version live and complete. New
-    doc ids must not collide with indexed ids (a rebuild would merge
-    them into one document); collisions raise.
+    The union tables are committed as a new version of the store
+    (versioned_store.commit): a crash before the manifest flip leaves
+    the old version live and complete. New doc ids must not collide
+    with indexed ids (a rebuild would merge them into one document):
+    the id-clash probe is the commit's check, so a clash raises and
+    never flips, even when the version write failed too.
 
     Returns the number of appended documents."""
     base = path.rstrip("/")
-    live = _live_index_dir(spark, base)
     idx = bm25_index_load(spark, base)
     if idx["postings"] is None:
         raise ValueError(
@@ -1112,65 +1091,33 @@ def bm25_index_append(
         "c": idx["c"],
         "id_col": id_col,
     }
-    from .dedup import _write_manifest
 
-    cur = live.rsplit("/", 1)[-1]
-    nxt = int(cur[1:]) + 1 if cur.startswith("v") and cur[1:].isdigit() else 1
-    ver = f"v{nxt:06d}"
-    # the id-clash existence probe (no distinct on the INDEXED side — a
-    # corpus-sized dedup shuffle buys nothing for a limit(1) broadcast
-    # probe) OVERLAPS the version-dir writes: both only read, and on a
-    # clash the error fires BEFORE the manifest flip, so the half-written
-    # version dir is an inert orphan — exactly the mid-write-crash story
-    # the manifest protocol already covers (bm25_compact_index removes
-    # orphans; the next append simply overwrites the same version name)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fclash = pool.submit(
-            lambda: idx["postings"].select(id_col)
-            .join(F.broadcast(new_ids), id_col).limit(1).count()
-        )
-        fwrite = pool.submit(_write_index_tables, grown, f"{base}/{ver}")
-        clash = fclash.result()
-        fwrite.result()
-    if clash:
-        raise ValueError(
-            "new_docs reuse document ids already in the index; a rebuild "
-            "would merge them — dedupe or re-id before appending"
-        )
-    _write_manifest(spark, base, ver)
+    def check():
+        # the id-clash existence probe (no distinct on the INDEXED side —
+        # a corpus-sized dedup shuffle buys nothing for a limit(1)
+        # broadcast probe) overlaps the version-dir writes: both only read
+        if idx["postings"].select(id_col).join(
+            F.broadcast(new_ids), id_col
+        ).limit(1).count():
+            raise ValueError(
+                "new_docs reuse document ids already in the index; a "
+                "rebuild would merge them — dedupe or re-id before appending"
+            )
+
+    versioned_store.commit(
+        spark, base, lambda live, new: _write_index_tables(grown, new), check
+    )
     return n_new
 
 
 def bm25_compact_index(spark, path: str) -> int:
-    """Delete superseded BM25 index versions. Each bm25_index_append
-    writes a COMPLETE copy of every table (postings included) into a
-    fresh vNNNNNN dir and flips MANIFEST last, but nothing removed the
-    old versions — a daily append job would hold every historical full
-    copy (30 appends on a 1 TB index = ~30 TB of dead versions). Run
-    this after appends commit: the manifest flip already happened, so
-    deleting every non-current version dir is safe (a crash mid-delete
-    leaves inert orphans the next compaction removes). NOT safe against
-    a concurrent reader still holding a plan over an old version — run
-    between serving batches, the same discipline as
-    dedup.compact_history. Returns the number of version dirs deleted;
-    a flat (never-appended) store is a no-op."""
-    from .dedup import _hadoop_fs, _is_version_dir, _read_manifest
-
-    base = path.rstrip("/")
-    cur = _read_manifest(spark, base)
-    if cur is None:
-        return 0  # flat layout: the single live copy IS the index
-    if not _is_version_dir(cur):
-        raise RuntimeError(
-            f"corrupt MANIFEST in {base!r}: {cur!r} is not a version "
-            "pointer; restore it to the newest complete vNNNNNN "
-            "directory before compacting"
-        )
-    fs, base_path = _hadoop_fs(spark, base)
-    deleted = 0
-    for st in fs.listStatus(base_path):
-        name = st.getPath().getName()
-        if st.isDirectory() and _is_version_dir(name) and name != cur:
-            fs.delete(st.getPath(), True)
-            deleted += 1
-    return deleted
+    """Delete what no reader of the live BM25 index needs: each
+    bm25_index_append commits a COMPLETE copy of every table (postings
+    included) as a new version, so a daily append job would otherwise
+    hold every historical full copy plus the pre-append tables at the
+    root. This is versioned_store.retire: everything except the pointer
+    and the live version goes. NOT safe against a concurrent reader still
+    holding a plan over an old version — run between serving batches.
+    Returns the number of version dirs deleted; a never-appended store
+    is left as it is."""
+    return versioned_store.retire(spark, path)

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import versioned_store
 from .multimodal import (
     _decode_jpeg_gray,
     _dhash_bands,
@@ -1660,8 +1661,9 @@ def video_dedup_against_history(
     update_state: bool = False,
 ) -> DataFrame:
     """Video near-dup filter against everything EVER ingested — the
-    third media twin of dedup_against_history, sharing the manifest-
-    pointer layout and compact_history of the text/image/audio stores.
+    third media twin of dedup_against_history, sharing the store
+    protocol (versioned_store.py) and compact_history of the
+    text/image/audio stores.
     A new clip drops when any of its frame-band values matches a stored
     one AND the aligned mean per-frame Hamming verifies <= max_hamming
     (exact, cross-batch, alignment-aware — a re-ingested trim of an
@@ -1670,11 +1672,9 @@ def video_dedup_against_history(
 
     CRASH ORDERING: same as the text twin — append AFTER the sink
     commits (update_state=False + append_video_history)."""
-    from .dedup import _try_read_parquet, history_data_dir
-
     spark = media.sparkSession
     subs, fps, _ = _video_history_rows(media, id_col, max_hamming, every_ms)
-    seen = _try_read_parquet(spark, history_data_dir(spark, state_dir))
+    seen = versioned_store.read(spark, state_dir)
     if seen is not None:
         probe = _dhash_bands(subs, max_hamming, "media_id").select(
             "media_id", F.col("frame_idx").alias("__ia"), "band", "bv"
@@ -1716,12 +1716,8 @@ def append_video_history(
 ) -> None:
     """Append ``media``'s frame-band rows to the video history — split
     out so streaming callers order it AFTER the sink write."""
-    from .dedup import history_data_dir
-
     _, _, rows = _video_history_rows(media, id_col, max_hamming, every_ms)
-    rows.write.mode("append").parquet(
-        history_data_dir(media.sparkSession, state_dir)
-    )
+    versioned_store.append(rows, state_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -169,7 +169,15 @@ def pack(o: Any) -> bytes:
     if isinstance(o, EventTime):
         return b"\xd7\x00" + struct.pack(">II", o.sec & 0xFFFFFFFF, o.nsec)
     if isinstance(o, Ext):
-        return b"\xc7" + bytes([len(o.data)]) + struct.pack("b", o.code) + o.data
+        n = len(o.data)
+        code = struct.pack("b", o.code)
+        if n in (1, 2, 4, 8, 16):  # fixext 1/2/4/8/16
+            return bytes([0xD4 + n.bit_length() - 1]) + code + o.data
+        if n <= 0xFF:
+            return b"\xc7" + bytes([n]) + code + o.data
+        if n <= 0xFFFF:
+            return b"\xc8" + struct.pack(">H", n) + code + o.data
+        return b"\xc9" + struct.pack(">I", n) + code + o.data
     if isinstance(o, int):
         if 0 <= o <= 0x7F:
             return bytes([o])

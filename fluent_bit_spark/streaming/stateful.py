@@ -326,8 +326,9 @@ def neardup_foreach_batch(
     Semantics: within-batch = exact minhash_dedup semantics; cross-batch
     = unbounded-horizon near-dup against everything ever kept (unlike
     the watermark-bounded exact pass, history membership never expires —
-    state is num_bands tiny rows per distinct doc, compacted offline
-    with extensions.dedup.compact_history).
+    state is num_bands tiny rows per distinct doc, kept by
+    extensions.versioned_store and compacted offline with
+    extensions.dedup.compact_history).
 
     Failure ordering: the sink write runs BEFORE the state append. A
     crash between them makes the replayed batch re-emit its survivors
@@ -370,8 +371,9 @@ def image_neardup_foreach_batch(
     """Streaming image NEAR-dup as a foreachBatch stage — "is this image
     a near-dup of anything ever seen", neardup_foreach_batch's dHash
     twin reusing the identical history/compaction discipline (the
-    history is (band, bv, dhash) rows under the same manifest-pointer
-    layout; extensions.dedup.compact_history compacts it unchanged).
+    history is (band, bv, dhash) rows kept by the same
+    extensions.versioned_store protocol; extensions.dedup.compact_history
+    compacts it unchanged).
 
     Per micro-batch: decode + dHash once, drop within-batch near-dups
     (image_neardup_join pairs: the lower id of each pair survives),
@@ -490,109 +492,6 @@ def video_neardup_foreach_batch(
         )
 
     return process
-
-
-def snapshot_stream_tws(
-    sdf: DataFrame,
-    limit: int,
-    flush_value: str,
-    key: str = "tag",
-    value_col: str = "value",
-    time_col: str = TS_COL,
-) -> DataFrame:
-    """snapshot_stream on the Spark 4 stateful API
-    (transformWithStateInPandas + ListState): identical CREATE SNAPSHOT /
-    FLUSH SNAPSHOT semantics (flb_sp_snapshot.c:46-277), but per-key state
-    lives in a typed ListState the store manages incrementally — the
-    forward-looking replacement for applyInPandasWithState, with TTL and
-    timers available when eviction policies need them.
-
-    Environment gate: the TWS state-server protocol needs the
-    ``protobuf`` python package (pyspark imports
-    ``google.protobuf.descriptor`` in its driver worker). When it is
-    absent — as in this container — raise immediately with a clear
-    message instead of crashing the streaming query mid-flight;
-    ``snapshot_stream`` (same semantics on applyInPandasWithState) is the
-    tested fallback."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as ex:  # pragma: no cover - env-specific
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's TWS state protocol); use snapshot_stream() as the "
-            "applyInPandasWithState fallback in environments without it"
-        ) from ex
-    from pyspark.sql.streaming import StatefulProcessor
-
-    out_schema = f"{key} string, {time_col} timestamp, {value_col} string"
-
-    class SnapshotProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._buf = handle.getListState("buf", "t timestamp, v string")
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            buf = [(t, v) for t, v in self._buf.get()] if self._buf.exists() else []
-            flushed = []
-            for pdf in rows:
-                pdf = pdf.sort_values(time_col)
-                for t, v in zip(pdf[time_col], pdf[value_col]):
-                    if str(v) == flush_value:
-                        flushed.extend(buf)
-                        buf = []
-                    buf.append((t, str(v)))
-                    if len(buf) > limit:
-                        buf = buf[-limit:]
-            self._buf.put(buf)
-            if flushed:
-                yield pd.DataFrame(
-                    {
-                        key: key_tuple[0],
-                        time_col: [t for t, _ in flushed],
-                        value_col: [v for _, v in flushed],
-                    }
-                )
-
-        def close(self):
-            pass
-
-    return sdf.groupBy(key).transformWithStateInPandas(
-        SnapshotProcessor(), out_schema, "append", "none"
-    )
-
-
-def tws_available() -> bool:
-    """True when the Spark 4 transformWithStateInPandas path can run here:
-    the API exists on GroupedData AND its state-server protocol dependency
-    (google.protobuf) imports. Capability detection, not version sniffing —
-    a backported or stripped build answers correctly either way."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.group import GroupedData
-
-        return hasattr(GroupedData, "transformWithStateInPandas")
-    except ImportError:
-        return False
-
-
-def snapshot_stream_auto(
-    sdf: DataFrame,
-    limit: int,
-    flush_value: str,
-    key: str = "tag",
-    value_col: str = "value",
-    time_col: str = TS_COL,
-) -> DataFrame:
-    """CREATE/FLUSH SNAPSHOT on whichever stateful API this runtime
-    supports: transformWithStateInPandas (typed ListState, TTL/timers
-    available) where live, else the applyInPandasWithState implementation
-    — both produce identical output (asserted record-for-record in
-    tests/test_streaming.py). Callers get capability dispatch instead of
-    an import gate."""
-    impl = snapshot_stream_tws if tws_available() else snapshot_stream
-    return impl(
-        sdf, limit=limit, flush_value=flush_value, key=key,
-        value_col=value_col, time_col=time_col,
-    )
 
 
 def funnel_levels_stream(

@@ -222,6 +222,20 @@ def test_msgpack_codec_reference_pack_corpus():
     _assert_pack_pairs(sorted(glob.glob(REFERENCE_PACK_DIR + "/*.mp")))
 
 
+@pytest.mark.parametrize("n", [0, 1, 3, 8, 16, 17, 255, 256, 65536])
+def test_msgpack_pack_ext_matches_msgpack_python(n):
+    """Ext values pack as msgpack-python packs them (fixext 1/2/4/8/16,
+    then ext 8/16/32, smallest first) and decode back unchanged."""
+    msgpack = pytest.importorskip("pip._vendor.msgpack")
+
+    from fluent_bit_spark.functions.msgpack_codec import Ext, pack, unpack_one
+
+    data = bytes(i % 251 for i in range(n))
+    raw = pack(Ext(5, data))
+    assert raw == msgpack.packb(msgpack.ExtType(5, data))
+    assert unpack_one(raw) == (Ext(5, data), len(raw))
+
+
 def test_msgpack_event_and_forward_decode(spark):
     """V1/V2 events, EventTime ext, group-marker skip, and the three
     forward wire modes (fw_prot.c) through the Spark decoders."""

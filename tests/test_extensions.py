@@ -4429,6 +4429,93 @@ def test_bm25_compact_index(spark, tmp_path):
         for r in bm25_topk_indexed(bm25_index_load(spark, path), q, k=5).collect()
     )
     assert after == before
+    # the pre-append root tables and the superseded version are gone
+    assert sorted(
+        d for d in os.listdir(path) if not d.startswith(".")
+    ) == ["MANIFEST", versions[-1]]
+
+
+def _bm25_store(spark, path):
+    """A saved 8-doc BM25 index at ``path``, a query frame, and a
+    ``served()`` helper returning the index's current top-5 there."""
+    from fluent_bit_spark.extensions.retrieval import (
+        bm25_index, bm25_index_load, bm25_index_save, bm25_topk_indexed,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta doc {i} with shared words") for i in range(8)],
+        "doc_id long, text string",
+    )
+    bm25_index_save(bm25_index(docs), path)
+    q = spark.createDataFrame([(1, "alpha gamma")], "query_id long, text string")
+
+    def served():
+        return sorted(
+            (r.doc_id, r.score)
+            for r in bm25_topk_indexed(bm25_index_load(spark, path), q, k=5).collect()
+        )
+
+    return served
+
+
+def _bm25_batch(spark, start):
+    return spark.createDataFrame(
+        [(start + i, f"gamma delta doc {start + i}") for i in range(4)],
+        "doc_id long, text string",
+    )
+
+
+def test_bm25_index_append_crash_recovery(spark, tmp_path, monkeypatch):
+    """A crash after bm25_index_append writes the new version but before
+    MANIFEST flips leaves the live pointer and the served top-k as they
+    were; the next append succeeds. Checked at the first append (flat
+    store, served from the root) and at a later one."""
+    import os
+
+    from fluent_bit_spark.extensions import versioned_store
+    from fluent_bit_spark.extensions.retrieval import bm25_index_append
+
+    path = str(tmp_path / "bm25")
+    served = _bm25_store(spark, path)
+
+    def crash(*args):
+        raise IOError("simulated crash before the manifest flip")
+
+    def manifest():
+        mf = os.path.join(path, "MANIFEST")
+        return open(mf).read().strip() if os.path.exists(mf) else None
+
+    for start, live in ((100, None), (200, "v000001")):
+        before = served()
+        with monkeypatch.context() as m:
+            m.setattr(versioned_store, "_write_manifest", crash)
+            with pytest.raises(IOError, match="simulated crash"):
+                bm25_index_append(spark, path, _bm25_batch(spark, start))
+        assert manifest() == live
+        assert served() == before
+        assert bm25_index_append(spark, path, _bm25_batch(spark, start)) == 4
+        assert served() != before
+    assert manifest() == "v000002"
+
+
+def test_bm25_index_append_clash_error_wins(spark, tmp_path, monkeypatch):
+    """When the appended ids clash AND the version write fails, the
+    clash is the error raised, and MANIFEST never flips."""
+    import os
+
+    from fluent_bit_spark.extensions import retrieval
+
+    path = str(tmp_path / "bm25")
+    _bm25_store(spark, path)
+    assert retrieval.bm25_index_append(spark, path, _bm25_batch(spark, 100)) == 4
+
+    def broken_write(index, base):
+        raise RuntimeError("simulated table write failure")
+
+    monkeypatch.setattr(retrieval, "_write_index_tables", broken_write)
+    with pytest.raises(ValueError, match="reuse document ids"):
+        retrieval.bm25_index_append(spark, path, _bm25_batch(spark, 102))
+    assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000001"
 
 
 def test_text_review_guards(spark):

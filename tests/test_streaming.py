@@ -504,60 +504,13 @@ def test_streaming_prom_scrape_pages(spark, tmp_path):
     assert len(rows) == 4
 
 
-def test_snapshot_stream_tws_matches_legacy(spark, tmp_path):
-    """The transformWithStateInPandas snapshot must reproduce the
-    applyInPandasWithState one record-for-record. Skips where pyspark's
-    TWS protobuf dependency is absent (this container); the import gate
-    itself is asserted either way."""
-    import json as _json
-
-    pytest.importorskip("google.protobuf", reason="pyspark TWS needs protobuf")
-
-    from fluent_bit_spark.streaming.sources import tail_source
-    from fluent_bit_spark.streaming.stateful import snapshot_stream, snapshot_stream_tws
-
-    d = tmp_path / "snapin"
-    d.mkdir()
-    rows = [{"value": "FLUSH" if i % 7 == 6 else f"v{i}", "sec": i} for i in range(30)]
-    with open(d / "in.json", "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-
-    def build(fn, name):
-        sdf = tail_source(
-            spark, str(d), fmt="json", schema="value string, sec long",
-            tag_template="snap.t",
-        ).withColumn(
-            TS_COL,
-            F.timestamp_seconds(
-                F.unix_timestamp(F.lit("2024-01-01 00:00:00")) + F.col("sec")
-            ),
-        ).select("tag", TS_COL, "value")
-        out = fn(sdf, limit=3, flush_value="FLUSH")
-        _run_to_memory(out, name)
-        return sorted(
-            (r["timestamp"], r["value"])
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
-
-    legacy = build(snapshot_stream, "snap_legacy")
-    tws = build(snapshot_stream_tws, "snap_tws")
-    assert legacy, "legacy snapshot emitted nothing"
-    assert tws == legacy
-
-
-def test_snapshot_stream_auto_dispatch(spark, tmp_path):
-    """snapshot_stream_auto must pick the live stateful API (TWS on
-    runtimes with the state-server protocol, applyInPandasWithState
-    otherwise) and produce the snapshot semantics either way — the
-    capability-dispatch replacement for the old import gate."""
+def test_snapshot_stream_flush_emits_ring_buffer(spark, tmp_path):
+    """FLUSH SNAPSHOT emits the CREATE SNAPSHOT ring buffer as it stands
+    at the flush record: the last ``limit`` values before it."""
     import json as _json
 
     from fluent_bit_spark.streaming.sources import tail_source
-    from fluent_bit_spark.streaming.stateful import (
-        snapshot_stream_auto,
-        tws_available,
-    )
+    from fluent_bit_spark.streaming.stateful import snapshot_stream
 
     d = tmp_path / "snapauto"
     d.mkdir()
@@ -574,27 +527,11 @@ def test_snapshot_stream_auto_dispatch(spark, tmp_path):
             F.unix_timestamp(F.lit("2024-01-01 00:00:00")) + F.col("sec")
         ),
     ).select("tag", TS_COL, "value")
-    out = snapshot_stream_auto(sdf, limit=3, flush_value="FLUSH")
+    out = snapshot_stream(sdf, limit=3, flush_value="FLUSH")
     _run_to_memory(out, "snap_auto")
     got = sorted(r["value"] for r in spark.sql("SELECT * FROM snap_auto").collect())
     # ring buffer of 3 at the flush point: v2, v3, v4
-    assert got == ["v2", "v3", "v4"], (got, tws_available())
-
-
-def test_snapshot_stream_tws_gate_without_protobuf(spark):
-    """In environments lacking protobuf the TWS wrapper must fail fast
-    with an actionable message, not crash the query mid-flight."""
-    try:
-        import google.protobuf  # noqa: F401
-        pytest.skip("protobuf present; gate not exercised")
-    except ImportError:
-        pass
-    from fluent_bit_spark.streaming.sources import dummy_source
-    from fluent_bit_spark.streaming.stateful import snapshot_stream_tws
-
-    sdf = dummy_source(spark).withColumn("value", F.lit("x"))
-    with pytest.raises(ImportError, match="protobuf"):
-        snapshot_stream_tws(sdf, limit=3, flush_value="FLUSH")
+    assert got == ["v2", "v3", "v4"], got
 
 
 def test_dedup_against_history_batches(spark, tmp_path):
@@ -638,7 +575,8 @@ def test_dedup_history_unreadable_state_raises(spark, tmp_path):
     must NOT be swallowed by the no-state-yet probe."""
     import pytest
 
-    from fluent_bit_spark.extensions.dedup import _try_read_parquet, dedup_against_history
+    from fluent_bit_spark.extensions.dedup import dedup_against_history
+    from fluent_bit_spark.extensions.versioned_store import try_read_parquet
 
     bad = tmp_path / "bad_state"
     bad.mkdir()
@@ -649,10 +587,10 @@ def test_dedup_history_unreadable_state_raises(spark, tmp_path):
     assert "PATH_NOT_FOUND" not in str(ei.value)
 
     # no-state-yet cases still map to None
-    assert _try_read_parquet(spark, str(tmp_path / "never_written")) is None
+    assert try_read_parquet(spark, str(tmp_path / "never_written")) is None
     empty = tmp_path / "empty_state"
     empty.mkdir()
-    assert _try_read_parquet(spark, str(empty)) is None
+    assert try_read_parquet(spark, str(empty)) is None
 
 
 def test_neardup_foreach_batch_stream(spark, tmp_path):
@@ -702,7 +640,7 @@ def test_image_neardup_foreach_batch_stream(spark, tmp_path):
 
     import numpy as np
 
-    from fluent_bit_spark.extensions.dedup import compact_history
+    from fluent_bit_spark.extensions.dedup import compact_history, history_data_dir
     from fluent_bit_spark.extensions.multimodal import (
         image_dedup_against_history, make_pgm,
     )
@@ -754,7 +692,7 @@ def test_image_neardup_foreach_batch_stream(spark, tmp_path):
     # compaction reuse, verbatim: duplicate band rows collapse, and a
     # later copy of image 1 still drops against the compacted history
     n = compact_history(spark, state)
-    assert n == spark.read.parquet(state).distinct().count()
+    assert n == spark.read.parquet(history_data_dir(spark, state)).distinct().count()
     late = spark.createDataFrame(
         [(9, bytearray(make_pgm(18, 16, (g1 + 7).astype(np.uint8).tobytes())))],
         "media_id long, content binary",
@@ -775,7 +713,7 @@ def test_audio_neardup_foreach_batch_stream(spark, tmp_path):
 
     import numpy as np
 
-    from fluent_bit_spark.extensions.dedup import compact_history
+    from fluent_bit_spark.extensions.dedup import compact_history, history_data_dir
     from fluent_bit_spark.extensions.multimodal import (
         audio_dedup_against_history,
     )
@@ -829,7 +767,7 @@ def test_audio_neardup_foreach_batch_stream(spark, tmp_path):
     q.awaitTermination(600)
     assert sorted(got) == [1, 3, 5]
     n = compact_history(spark, state)
-    assert n == spark.read.parquet(state).distinct().count()
+    assert n == spark.read.parquet(history_data_dir(spark, state)).distinct().count()
     late = spark.createDataFrame(
         [(9, bytearray(pcm16(s1)))], "media_id long, content binary"
     )
@@ -840,10 +778,9 @@ def test_compact_history_preserves_membership(spark, tmp_path):
     """Replayed appends collapse to distinct band rows; dedup decisions
     are identical before and after compaction."""
     from fluent_bit_spark.extensions.dedup import (
-        compact_history, dedup_against_history,
+        append_history, compact_history, dedup_against_history,
+        history_data_dir,
     )
-
-    from fluent_bit_spark.extensions.dedup import append_history
 
     state = str(tmp_path / "st")
     b = spark.createDataFrame(
@@ -855,7 +792,9 @@ def test_compact_history_preserves_membership(spark, tmp_path):
     append_history(b, state)
     before = spark.read.parquet(state).count()
     n = compact_history(spark, state)
-    assert n < before and n == spark.read.parquet(state).distinct().count()
+    assert n < before and n == spark.read.parquet(
+        history_data_dir(spark, state)
+    ).distinct().count()
     # membership unchanged: the doc is still recognized as a duplicate
     again = dedup_against_history(
         b.selectExpr("doc_id + 2 AS doc_id", "text"), state, update_state=False
@@ -863,13 +802,15 @@ def test_compact_history_preserves_membership(spark, tmp_path):
     assert again.count() == 0
 
 
-def test_compact_history_crash_recovery(spark, tmp_path):
-    """A crash between compact_history's two renames leaves the history
-    under the .old name; the next call restores it and compacts fine."""
-    import os
-
+def test_compact_history_crash_recovery(spark, tmp_path, monkeypatch):
+    """A crash after compact_history writes the new version but before
+    MANIFEST flips leaves the old rows live; the next call deletes the
+    half-written version and compacts fine. Checked at the first
+    compaction of a flat history and at a later one."""
+    from fluent_bit_spark.extensions import versioned_store
     from fluent_bit_spark.extensions.dedup import (
         append_history, compact_history, dedup_against_history,
+        history_data_dir,
     )
 
     state = str(tmp_path / "st")
@@ -877,22 +818,63 @@ def test_compact_history_crash_recovery(spark, tmp_path):
         [(1, "a document whose band hashes survive a simulated crash window")],
         ["doc_id", "text"],
     )
+    dup = b.selectExpr("doc_id + 9 AS doc_id", "text")
+
+    def crash(*args):
+        raise IOError("simulated crash before the manifest flip")
+
     append_history(b, state)
-    append_history(b, state)  # duplicate rows to compact away
-    # simulate the crash point: live dir renamed aside, tmp never swapped in
-    os.rename(state, state + ".old")
-    n = compact_history(spark, state)
-    assert n == spark.read.parquet(state).distinct().count()
-    assert not os.path.exists(state + ".old")
-    again = dedup_against_history(
-        b.selectExpr("doc_id + 9 AS doc_id", "text"), state
+    for live in (state, state + "/v000001"):
+        append_history(b, state)  # duplicate rows to compact away
+        with monkeypatch.context() as m:
+            m.setattr(versioned_store, "_write_manifest", crash)
+            with pytest.raises(IOError, match="simulated crash"):
+                compact_history(spark, state)
+        assert history_data_dir(spark, state) == live  # pointer unchanged
+        assert dedup_against_history(dup, state).count() == 0
+        n = compact_history(spark, state)
+        assert n == spark.read.parquet(history_data_dir(spark, state)).distinct().count()
+        assert dedup_against_history(dup, state).count() == 0  # membership survived
+    assert history_data_dir(spark, state) == state + "/v000002"
+
+
+def test_compact_history_mixed_spellings(spark, tmp_path):
+    """``/x`` and ``file:///x`` name one store: compacting through one
+    spelling, then appending and compacting through the other, works,
+    and both spellings see the same rows."""
+    import os
+
+    from fluent_bit_spark.extensions.dedup import (
+        append_history, compact_history, dedup_against_history,
+        history_data_dir,
     )
-    assert again.count() == 0  # membership survived the crash
+
+    plain = str(tmp_path / "st")
+    uri = "file://" + plain
+    b = spark.createDataFrame(
+        [(1, "a document stored under two spellings of one directory")],
+        ["doc_id", "text"],
+    )
+    fresh = spark.createDataFrame(
+        [(2, "an unrelated later document appended through the plain path")],
+        ["doc_id", "text"],
+    )
+    append_history(b, plain)
+    compact_history(spark, uri)
+    append_history(fresh, plain)
+    append_history(fresh, plain)
+    n = compact_history(spark, plain)
+    assert open(os.path.join(plain, "MANIFEST")).read().strip() == "v000002"
+    assert n == spark.read.parquet(history_data_dir(spark, uri)).distinct().count()
+    both = b.unionByName(fresh).selectExpr("doc_id + 5 AS doc_id", "text")
+    for state in (plain, uri):
+        assert dedup_against_history(both, state).count() == 0
 
 
-def test_compact_history_remote_manifest_flip(spark, tmp_path):
-    """The remote-store compaction path (write-new-version + manifest
-    flip), driven through a file:// URI: migration from the flat
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file"])
+def test_compact_history_remote_manifest_flip(spark, tmp_path, scheme):
+    """The store compaction path (write-new-version + manifest flip),
+    driven through a plain path and a file:// URI: migration from the flat
     layout, pointer-routed appends and reads, repeat compaction
     retiring old versions, and crash recovery at the
     version-written-but-never-flipped point."""
@@ -906,7 +888,7 @@ def test_compact_history_remote_manifest_flip(spark, tmp_path):
     )
 
     local = tmp_path / "remote_st"
-    state = "file://" + str(local)
+    state = scheme + str(local)
     b = spark.createDataFrame(
         [(1, "a document whose band hashes live behind a manifest pointer")],
         ["doc_id", "text"],
@@ -952,7 +934,8 @@ def test_compact_history_remote_manifest_flip(spark, tmp_path):
     assert not (local / "MANIFEST.tmp").exists()
 
 
-def test_compact_history_manifest_corruption_guard(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file"])
+def test_compact_history_manifest_corruption_guard(spark, tmp_path, scheme):
     """A lost/garbled manifest with version dirs on disk is corruption,
     not a flat store: compaction must REFUSE (migrating would delete
     every version dir in the orphan sweep = total history loss), and
@@ -968,7 +951,7 @@ def test_compact_history_manifest_corruption_guard(spark, tmp_path):
     )
 
     local = tmp_path / "hist"
-    state = f"file://{local}"
+    state = f"{scheme}{local}"
     b = spark.createDataFrame(
         [(1, "a document protected by the manifest corruption guard")],
         ["doc_id", "text"],

@@ -264,7 +264,7 @@ def test_video_neardup_foreach_batch_stream(spark, tmp_path):
     import shutil
     import time as _time
 
-    from fluent_bit_spark.extensions.dedup import compact_history
+    from fluent_bit_spark.extensions.dedup import compact_history, history_data_dir
     from fluent_bit_spark.streaming.stateful import video_neardup_foreach_batch
 
     # batch 0: clip 1, its within-batch duplicate 2, unrelated 3
@@ -307,7 +307,7 @@ def test_video_neardup_foreach_batch_stream(spark, tmp_path):
     # compaction reuse, verbatim: duplicate band rows collapse, and a
     # later trim of clip 1 still drops against the compacted history
     n = compact_history(spark, state)
-    assert n == spark.read.parquet(state).distinct().count()
+    assert n == spark.read.parquet(history_data_dir(spark, state)).distinct().count()
     late = _media(spark, [(9, _clip(11, trim=1))])
     assert video_dedup_against_history(late, state).count() == 0
 

@@ -71,6 +71,7 @@ def run(n_batches: int, docs_per_batch: int) -> dict:
     from fluent_bit_spark import get_spark
     from fluent_bit_spark.extensions.dedup import (
         append_history, compact_history, dedup_against_history,
+        history_data_dir,
     )
     from fluent_bit_spark.streaming.stateful import dedup_stream
 
@@ -125,7 +126,7 @@ def run(n_batches: int, docs_per_batch: int) -> dict:
                 F.col("doc_id") >= b * docs_per_batch
             )
             dedup_against_history(kept_this, hist, update_state=True)
-            hist_rows = spark.read.parquet(hist).count()
+            hist_rows = spark.read.parquet(history_data_dir(spark, hist)).count()
             hist_bytes = sum(
                 p.stat().st_size for p in Path(hist).rglob("*.parquet")
             )
@@ -145,7 +146,7 @@ def run(n_batches: int, docs_per_batch: int) -> dict:
     # duplicate-append replay, then compaction: rows collapse back
     survivors = spark.read.parquet(out)
     append_history(survivors, hist)  # simulated replayed batch
-    inflated = spark.read.parquet(hist).count()
+    inflated = spark.read.parquet(history_data_dir(spark, hist)).count()
     compacted = compact_history(spark, hist)
     summary = {
         "metric": "stream state growth",
@@ -422,7 +423,7 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
     from pyspark.sql.functions import pandas_udf
 
     from fluent_bit_spark import get_spark
-    from fluent_bit_spark.extensions.dedup import compact_history
+    from fluent_bit_spark.extensions.dedup import compact_history, history_data_dir
     from fluent_bit_spark.extensions.multimodal import to_media_frame
     from fluent_bit_spark.extensions.video import (
         append_video_history, make_avi,
@@ -469,7 +470,7 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
             batch = batch.unionByName(trims)
         media = to_media_frame(batch, "media_id", F.col("content"), "video")
         process(media, b)
-        hist_rows = spark.read.parquet(hist).count()
+        hist_rows = spark.read.parquet(history_data_dir(spark, hist)).count()
         hist_bytes = sum(
             p.stat().st_size for p in Path(hist).rglob("*.parquet")
         )
@@ -489,7 +490,7 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
     append_video_history(
         last_kept.filter(F.col("media_id") < 10_000_000), hist
     )
-    inflated = spark.read.parquet(hist).count()
+    inflated = spark.read.parquet(history_data_dir(spark, hist)).count()
     compacted = compact_history(spark, hist)
     summary = {
         "mode": "video_history_growth",
