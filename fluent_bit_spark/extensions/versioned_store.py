@@ -33,6 +33,9 @@ import re
 from concurrent.futures import ThreadPoolExecutor
 
 _VERSION = re.compile(r"v\d{6}")
+# Both names start with "_" so a Spark scan of a flat root skips them.
+_TMP = "_MANIFEST.tmp"  # the next pointer, before its rename onto MANIFEST
+_FIRST = "_FIRST_COMMIT"  # a first commit in flight: v000001 never flipped
 
 _OBJECT_STORE_SCHEMES = {
     "s3", "s3a", "s3n", "gs", "gcs", "wasb", "wasbs", "abfs", "abfss",
@@ -99,13 +102,13 @@ def _write_manifest(spark, root: str, version: str) -> None:
     Object stores get a direct single-object overwrite — a PUT is
     atomic there, and tmp+rename would be a non-atomic copy+delete.
     Rename-capable filesystems (file://, hdfs://) instead write
-    ``MANIFEST.tmp`` and rename it onto ``MANIFEST``: ``fs.create(p,
+    ``_MANIFEST.tmp`` and rename it onto ``MANIFEST``: ``fs.create(p,
     overwrite=True)`` truncates before writing, so a crash mid-overwrite
     would leave an empty/partial manifest, while rename is atomic.
     Where rename refuses an existing destination (HDFS semantics) we
     fall back to delete-then-rename; the resulting two-metadata-op
-    window is covered by commit's refusal to treat version dirs without
-    a manifest as never flipped when the root holds nothing else."""
+    window is covered by commit's refusal to touch version dirs without
+    a manifest."""
     scheme = root.split("://", 1)[0].lower() if "://" in root else ""
     fs, p = _hadoop_fs(spark, root + "/MANIFEST")
     if scheme in _OBJECT_STORE_SCHEMES:
@@ -115,7 +118,7 @@ def _write_manifest(spark, root: str, version: str) -> None:
         finally:
             stream.close()
         return
-    _, tmp = _hadoop_fs(spark, root + "/MANIFEST.tmp")
+    _, tmp = _hadoop_fs(spark, f"{root}/{_TMP}")
     stream = fs.create(tmp, True)
     try:
         stream.write(bytearray(version.encode("utf-8")))
@@ -174,30 +177,36 @@ def commit(spark, root: str, write, check=None):
     3. ``MANIFEST`` flips to the new version. Nothing before this step
        changes what readers see.
 
-    Without ``MANIFEST``, version dirs next to flat data are never-
-    flipped leftovers of a first commit. Version dirs with nothing
-    else at the root mean the pointer was lost after the flat data was
-    retired: the commit refuses rather than delete the versions."""
+    Without ``MANIFEST``, version dirs mean the pointer was lost, and
+    the commit refuses rather than delete them — flat files beside them
+    prove nothing, since an append after the loss writes there. The one
+    exception is a first commit that crashed before its flip: it marks
+    itself with ``_FIRST_COMMIT`` until the flip is done, and its
+    ``v000001`` is deleted and written again."""
     base = root.rstrip("/")
     fs, base_path = _hadoop_fs(spark, base)
     cur = _live_version(spark, base)
-    paths = []
+    _, first = _hadoop_fs(spark, f"{base}/{_FIRST}")
+    versions = []
     if fs.exists(base_path):
-        paths = [st.getPath() for st in fs.listStatus(base_path)]
-    versions = [p for p in paths if _is_version_dir(p.getName())]
-    if cur is None and versions and all(
-        _is_version_dir(p.getName()) or p.getName().startswith("MANIFEST")
-        for p in paths
+        versions = [
+            st.getPath() for st in fs.listStatus(base_path)
+            if _is_version_dir(st.getPath().getName())
+        ]
+    if cur is None and versions and not (
+        [p.getName() for p in versions] == ["v000001"] and fs.exists(first)
     ):
         raise RuntimeError(
             f"{base!r} has vNNNNNN version dirs but no MANIFEST — "
-            "refusing to treat them as never flipped (that would delete "
-            "them); write MANIFEST pointing at the newest complete "
-            "version to recover"
+            f"refusing to treat them as never flipped (that would delete "
+            f"them); write MANIFEST pointing at the newest complete "
+            f"version (or rename {_TMP} onto it) to recover"
         )
     for p in versions:
         if cur is None or p.getName() > cur:
             fs.delete(p, True)
+    if cur is None:
+        fs.create(first, True).close()
     nxt = f"v{int(cur[1:]) + 1 if cur else 1:06d}"
     with ThreadPoolExecutor(max_workers=1) as pool:
         checked = pool.submit(check or (lambda: None))
@@ -206,6 +215,7 @@ def commit(spark, root: str, write, check=None):
         finally:
             checked.result()
     _write_manifest(spark, base, nxt)
+    fs.delete(first, False)  # also one a crash right after a flip left
     return out
 
 

@@ -4518,6 +4518,23 @@ def test_bm25_index_append_clash_error_wins(spark, tmp_path, monkeypatch):
     assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000001"
 
 
+def test_bm25_index_append_lost_pointer_refuses(spark, tmp_path):
+    """With MANIFEST lost before bm25_compact_index, the pre-append root
+    tables are still there beside v000001. An append must refuse rather
+    than take them for a crashed first append and delete v000001."""
+    import os
+
+    from fluent_bit_spark.extensions.retrieval import bm25_index_append
+
+    path = str(tmp_path / "bm25")
+    _bm25_store(spark, path)
+    assert bm25_index_append(spark, path, _bm25_batch(spark, 100)) == 4
+    os.remove(os.path.join(path, "MANIFEST"))
+    with pytest.raises(RuntimeError, match="no MANIFEST"):
+        bm25_index_append(spark, path, _bm25_batch(spark, 200))
+    assert os.path.isdir(os.path.join(path, "v000001", "postings"))
+
+
 def test_text_review_guards(spark):
     """r11 text/sketch review batch: edit_distance_join completes the
     candidate set for SHORT keys (count-filter bound vacuous — 'ab' vs

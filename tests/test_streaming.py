@@ -981,6 +981,71 @@ def test_compact_history_manifest_corruption_guard(spark, tmp_path, scheme):
     assert (local / "MANIFEST").read_text().strip() == "v000002"
 
 
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file"])
+def test_compact_history_lost_pointer_refuses_after_append(spark, tmp_path, scheme):
+    """Once MANIFEST is lost, appends land at the root beside the version
+    dirs. Those flat files are not a crashed first commit: compaction
+    must still refuse rather than commit them alone and delete every
+    version."""
+    from fluent_bit_spark.extensions.dedup import append_history, compact_history
+
+    local = tmp_path / "hist"
+    state = f"{scheme}{local}"
+    b = spark.createDataFrame(
+        [(1, "a document committed before its manifest pointer was lost")],
+        ["doc_id", "text"],
+    )
+    append_history(b, state)
+    compact_history(spark, state)
+    (local / "MANIFEST").unlink()
+    append_history(b.selectExpr("doc_id + 1 AS doc_id", "text"), state)
+    with pytest.raises(RuntimeError, match="no MANIFEST"):
+        compact_history(spark, state)
+    assert (local / "v000001").exists()
+    assert not (local / "MANIFEST").exists()
+
+
+def test_compact_history_first_flip_crash_keeps_flat_reads(spark, tmp_path, monkeypatch):
+    """A crash inside the first flip, after the next pointer is written
+    but before its rename onto MANIFEST, leaves that file beside the flat
+    data. Flat reads must skip it, and the next compaction finishes the
+    migration."""
+    import os
+
+    from fluent_bit_spark.extensions import versioned_store
+    from fluent_bit_spark.extensions.dedup import (
+        append_history, compact_history, dedup_against_history,
+        history_data_dir,
+    )
+
+    local = tmp_path / "st"
+    state = str(local)
+    b = spark.createDataFrame(
+        [(1, "a document whose first compaction dies inside the flip")],
+        ["doc_id", "text"],
+    )
+    dup = b.selectExpr("doc_id + 9 AS doc_id", "text")
+
+    def crash(spark_, root, version):
+        (local / versioned_store._TMP).write_text(version)
+        raise IOError("simulated crash before the manifest rename")
+
+    append_history(b, state)
+    append_history(b, state)
+    with monkeypatch.context() as m:
+        m.setattr(versioned_store, "_write_manifest", crash)
+        with pytest.raises(IOError, match="simulated crash"):
+            compact_history(spark, state)
+    assert history_data_dir(spark, state) == state
+    assert dedup_against_history(dup, state).count() == 0
+    n = compact_history(spark, state)
+    assert (local / "MANIFEST").read_text().strip() == "v000001"
+    assert n == spark.read.parquet(history_data_dir(spark, state)).distinct().count()
+    assert sorted(p for p in os.listdir(local) if not p.startswith(".")) == [
+        "MANIFEST", "v000001",
+    ]
+
+
 def test_bm25_empty_token_corpus_raises(spark):
     """Non-empty corpus where every doc tokenizes to zero terms gets a
     clean ValueError, not an opaque float(None) TypeError."""
