@@ -844,3 +844,50 @@ def test_stream_task_tag_source_over_labelled_inputs(spark, tmp_path):
     want = pipe.source().filter(F.col("tag").rlike("^app\\..*$")).drop("timestamp")
     got = pipe.sp.sql("SELECT * FROM TAG:'app.*';").drop("timestamp")
     assert sorted(got.collect()) == sorted(want.collect())
+
+
+def _payload_files(root):
+    """Non-empty data files under an output directory (Spark's ``_*`` and
+    ``.*`` bookkeeping files left out)."""
+    import os
+
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(root)
+        for f in files
+        if not f.startswith(("_", ".")) and os.path.getsize(os.path.join(d, f)) > 0
+    ]
+
+
+def test_unpinned_output_plugins_write_payloads(spark, tmp_path):
+    """The output plugins no other test runs through load_pipeline +
+    run_outputs: every route delivers both records, and every path-backed
+    output leaves non-empty payload files (s3: one per $TAG key)."""
+    import os
+
+    paths = {
+        name: str(tmp_path / name)
+        for name in ("s3", "opensearch", "forward", "cloudwatch_logs", "stackdriver",
+                     "bigquery", "kafka", "http", "kinesis_firehose")
+    }
+    outputs = [{"name": "stdout", "match": "*", "limit": 1},
+               {"name": "counter", "match": "*"}]
+    outputs += [{"name": name, "match": "*", "path": path} for name, path in paths.items()]
+    outputs[-1]["time_key"] = "ts"
+    next(o for o in outputs if o["name"] == "cloudwatch_logs").update(
+        log_group_name="grp", log_stream_prefix="app-")
+    next(o for o in outputs if o["name"] == "s3")["s3_key_format"] = "/logs/$TAG"
+    conf = {"pipeline": {
+        "inputs": [{"name": "dummy", "tag": "svc.app",
+                    "records": [{"msg": "boot ok", "level": "info", "id": 1},
+                                {"msg": "disk full", "level": "error", "id": 2}]}],
+        "outputs": outputs,
+    }}
+    written = load_pipeline(spark, conf).run_outputs()
+    assert len(written) == len(outputs)
+    assert set(written.values()) == {2}
+    for name, path in paths.items():
+        assert _payload_files(path), name
+    keys = [d for d in os.listdir(paths["s3"]) if d.startswith("s3_key=")]
+    assert len(keys) == 1 and "svc.app" in keys[0]
+    assert _payload_files(os.path.join(paths["s3"], keys[0]))
