@@ -419,7 +419,9 @@ def _filter_failing(df: DataFrame, col: str, failing: list, negate=False):
     IN-literal is the cheapest plan; on degenerate flat vocabularies
     (where certificate failure is common) a huge query set would inline
     thousands of literals into the plan, so past a threshold the set
-    becomes a broadcast semi/anti join instead."""
+    becomes a broadcast semi/anti join instead. A null ``col`` matches
+    nothing: the IN-literal drops its row for both ``negate`` values, so
+    the join side drops null keys first (an anti join would keep them)."""
     if len(failing) <= 1024:
         cond = F.col(col).isin(failing)
         return df.filter(~cond if negate else cond)
@@ -427,7 +429,7 @@ def _filter_failing(df: DataFrame, col: str, failing: list, negate=False):
         [(x,) for x in failing],
         df.select(col).schema,
     )
-    return df.join(
+    return df.filter(F.col(col).isNotNull()).join(
         F.broadcast(fdf), col, "left_anti" if negate else "left_semi"
     )
 
@@ -495,12 +497,6 @@ def _impact_order_ranked(ranked: DataFrame, c: int, id_col: str):
         "term", F.col("c").alias("cutoff")
     )
     return kept, cutoffs
-
-
-def _impact_order(tc: DataFrame, c: int, id_col: str):
-    """Per-term impact ordering of a bare contribution table (compat
-    shim over _rank_contributions + _impact_order_ranked)."""
-    return _impact_order_ranked(_rank_contributions(tc, id_col), c, id_col)
 
 
 def _indexed_topk(

@@ -9,8 +9,12 @@ inputs   -> batch DataFrames (parquet/json/csv paths) or streaming sources,
 filters  -> operator combinators applied in config order to matching tags
 stream_tasks -> SP-dialect statements executed in an SPContext over the
             tagged union of inputs
-outputs  -> sinks.write_file per matching route (match supports fluent-bit
-            '*' wildcards)
+outputs  -> one path for every [OUTPUT]: ``_write_output`` routes the
+            source (``match`` with fluent-bit '*' wildcards, plus
+            ``conditions``), runs the output's processors, observes the
+            count and writes the payload that the plugin's shaper in
+            ``_OUTPUTS`` builds; ``run_outputs`` schedules them once
+            (stdout on the calling thread, the rest on one thread pool)
 
 Filters honor `match` like flb_filter_do, which decides once per chunk
 whether a filter applies, because the tag belongs to the chunk. Here the
@@ -38,6 +42,7 @@ filters remove from every input is gone from the merged stream.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import yaml
@@ -45,6 +50,7 @@ import yaml
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_spark import connectors, sinks
 from fluent_bit_spark.model import TAG_COL, TS_COL
 from fluent_bit_spark.sp import SPContext
 from fluent_bit_spark.sp.compiler import matching_tags, tag_label, tag_pattern_to_regex
@@ -74,409 +80,385 @@ class Pipeline:
         """Tag-pattern route, optionally gated by condition rules — the
         conditional-routing engine (src/flb_router_condition.c:275
         flb_condition_eval_logs over src/flb_conditionals.c rules)."""
-        df = self.source().filter(F.col(TAG_COL).rlike(tag_pattern_to_regex(pattern)))
-        if conds:
-            from fluent_bit_spark.operators.conditions import Rule, conditions
-
-            rules = [Rule(*c) for c in conds]
-            df = df.filter(conditions(df, rules, combine))
-        return df
+        return _route(self.source(), pattern, conds, combine)
 
     def run_outputs(self, persist_routes: bool = True) -> dict[str, int]:
         """Execute every output route; returns route -> row count written.
 
-        With more than one output and ``persist_routes`` (default), the
-        filtered source is persisted once and every sink reads the cached
-        partitions — the fluent-bit dataflow (a chunk is ingested/filtered
-        once, then fanned to all matching outputs) instead of K full
-        re-computations of the input scan + filter chain. MEMORY_AND_DISK
-        so an input bigger than executor memory spills instead of OOMing;
-        pass ``persist_routes=False`` to trade re-scan CPU for zero cache
-        footprint (the right call when sinks are few and the filter chain
-        is cheap relative to storage)."""
-        from fluent_bit_spark.sinks import write_file
+        The filtered source is read once. With more than one output and
+        ``persist_routes`` (default), it is persisted and every sink reads
+        the cached partitions — the fluent-bit dataflow (a chunk is
+        ingested/filtered once, then fanned to all matching outputs)
+        instead of K full re-computations of the input scan + filter
+        chain. MEMORY_AND_DISK so an input bigger than executor memory
+        spills instead of OOMing; pass ``persist_routes=False`` to trade
+        re-scan CPU for zero cache footprint (the right call when sinks
+        are few and the filter chain is cheap relative to storage).
 
-        written = {}
+        Each output runs through ``_write_output``. All but ``stdout`` run
+        on one thread pool of ``min(8, n)`` workers, so each sink's tasks
+        back-fill the executor slots the others' job tails leave idle
+        (fluent-bit's chunk fan-out, overlapped); a persisted source is
+        filled by one ``count()`` first. When two outputs share a target
+        directory, the pool has one worker, which runs them in declaration
+        order so the last declared writer wins. ``stdout`` (``show()``)
+        runs on the calling thread: interleaved console output is not a
+        debugging aid. Counts are recorded in declaration order, a
+        repeated ``match`` key gaining a ``+`` suffix."""
+        from concurrent.futures import ThreadPoolExecutor
 
-        def record(out, n):
+        src = self.source()
+        persisted = persist_routes and len(self.outputs) > 1
+        if persisted:
+            from pyspark.storagelevel import StorageLevel
+
+            src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            pooled = [o for o in self.outputs if o.get("name") != "stdout"]
+            workers = 1 if _shares_target(pooled) else max(1, min(8, len(pooled)))
+            if persisted and workers > 1:
+                src.count()
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                pending = [
+                    None if o.get("name") == "stdout" else pool.submit(_write_output, src, o)
+                    for o in self.outputs
+                ]
+                counts = [
+                    _write_output(src, o) if f is None else f.result()
+                    for o, f in zip(self.outputs, pending)
+                ]
+        finally:
+            if persisted:
+                src.unpersist()
+        written: dict[str, int] = {}
+        for out, n in zip(self.outputs, counts):
             key = out.get("match", "*")
             while key in written:  # duplicate match patterns stay distinct
                 key += "+"
-            # Observation metrics ride the sink's own write job — one scan
-            # per output instead of a second count() pass over the route.
-            written[key] = int(n.get["n"]) if isinstance(n, Observation) else n
-
-        cached = saved_inputs = None
-        if persist_routes and len(self.outputs) > 1:
-            from pyspark.storagelevel import StorageLevel
-
-            cached = self.source().persist(StorageLevel.MEMORY_AND_DISK)
-            saved_inputs, self.inputs = self.inputs, {"__cached__": cached}
-        try:
-            par = [o for o in self.outputs if o.get("name") != "stdout"]
-            paths = [o.get("path") for o in par if o.get("path") is not None]
-            if len(paths) != len(set(paths)):
-                # two sinks share a target path: concurrent overwrite
-                # writes against one directory can interleave/corrupt it,
-                # so keep the sequential declaration-order semantics
-                # (deterministic last-writer-wins) for this config
-                par = []
-            if len(par) > 1:
-                # independent sinks over the shared cached source: fill
-                # the cache with one deliberate pass, then run the write
-                # jobs CONCURRENTLY so each sink's tasks back-fill the
-                # executor slots the others' job tails leave idle
-                # (fluent-bit's chunk fan-out, overlapped). stdout
-                # (show()) stays sequential — interleaved console output
-                # is not a debugging aid. Results are recorded in
-                # declaration order, so the returned dict is unchanged.
-                from concurrent.futures import ThreadPoolExecutor
-
-                if cached is not None:
-                    cached.count()
-
-                def one(out):
-                    local: dict = {}
-
-                    def rec(_o, n):
-                        local["v"] = (
-                            int(n.get["n"]) if isinstance(n, Observation) else n
-                        )
-
-                    self._run_outputs_inner(local, rec, write_file, [out])
-                    return local.get("v")
-
-                with ThreadPoolExecutor(max_workers=min(8, len(par))) as pool:
-                    vals = dict(zip([id(o) for o in par], pool.map(one, par)))
-                for out in self.outputs:
-                    if out.get("name") == "stdout":
-                        self._run_outputs_inner(written, record, write_file, [out])
-                    else:
-                        record(out, vals[id(out)])
-            else:
-                self._run_outputs_inner(written, record, write_file)
-        finally:
-            if cached is not None:
-                self.inputs = saved_inputs
-                cached.unpersist()
+            written[key] = n
         return written
 
-    def _run_outputs_inner(self, written, record, write_file, outputs=None) -> None:
-        for out in (self.outputs if outputs is None else outputs):
-            df = self.route(
-                out.get("match", "*"),
-                conds=out.get("conditions"),
-                combine=out.get("condition_op", "AND"),
-            )
-            procs = (out.get("processors") or {}).get("logs") or []
-            if procs:
-                df = _apply_processors(df, procs)
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-            name = out.get("name", "file")
-            if name == "file":
-                write_file(
-                    df,
-                    out["path"],
-                    fmt=out.get("format", "json"),
-                    partition_by_tag=bool(out.get("partition_by_tag", False)),
-                    template=out.get("template"),
-                    compression=out.get("compression"),
-                )
-                record(out, obs)
-            elif name == "s3":
-                from fluent_bit_spark.sinks import write_s3
 
-                write_s3(
-                    df,
-                    out["path"],
-                    key_format=out.get("s3_key_format", "/$TAG"),
-                    fmt=out.get("format", "json"),
-                    compression=out.get("compression"),
-                )
-                record(out, obs)
-            elif name in ("null", "counter"):
-                # no write job to ride — the count IS the action
-                record(out, df.count())
-            elif name == "stdout":
-                # show(limit) stops early, so observe() would undercount;
-                # a debug sink can afford the explicit count
-                df.show(int(out.get("limit", 20)), truncate=False)
-                record(out, df.count())
-            elif name in ("es", "opensearch"):
-                from fluent_bit_spark.connectors import es_bulk
+def _route(src: DataFrame, pattern: str, conds: list | None, combine: str) -> DataFrame:
+    df = src.filter(F.col(TAG_COL).rlike(tag_pattern_to_regex(pattern)))
+    if conds:
+        from fluent_bit_spark.operators.conditions import Rule, conditions
 
-                shaped = es_bulk(
-                    df,
-                    index=out.get("index", "fluent-bit"),
-                    logstash_format=bool(out.get("logstash_format", False)),
-                    logstash_prefix=out.get("logstash_prefix", "logstash"),
-                    id_key=out.get("id_key"),
-                    include_tag_key=out.get("include_tag_key"),
-                )
-                # bulk body = action line + doc line per record
-                body = shaped.select(
-                    F.concat_ws("\n", "action_line", "doc_line").alias("value")
-                )
-                body.write.mode("overwrite").format("text").save(out["path"])
-                record(out, obs)
-            elif name == "splunk":
-                from fluent_bit_spark.connectors import splunk_hec
+        rules = [Rule(*c) for c in conds]
+        df = df.filter(conditions(df, rules, combine))
+    return df
 
-                shaped = splunk_hec(
-                    df,
-                    host=out.get("host"),
-                    source=out.get("source"),
-                    sourcetype=out.get("sourcetype"),
-                    index=out.get("index"),
-                    host_key=out.get("host_key"),
-                    source_key=out.get("source_key"),
-                    send_raw=bool(out.get("send_raw", False)),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "opentelemetry":
-                from fluent_bit_spark.connectors import otlp_logs_encode
 
-                shaped = otlp_logs_encode(
-                    df,
-                    body_col=out.get("body_key", "msg"),
-                    attr_cols=_listopt(out.get("attribute_keys")),
-                    resource_attributes=out.get("resource_attributes"),
-                    batch_col=out.get("batch_key", TAG_COL),
-                )
-                shaped.select("otlp_json").write.mode("overwrite").format("text").save(
-                    out["path"]
-                )
-                record(out, obs)
-            elif name == "loki":
-                from fluent_bit_spark.sinks import loki_streams
+def _target(path) -> str:
+    """One spelling of an output directory: ``file://`` stripped, made
+    absolute, no trailing ``/``. Other URIs keep their scheme."""
+    import os
 
-                shaped = loki_streams(
-                    df,
-                    label_keys=_listopt(out.get("labels")) or [TAG_COL],
-                    line_col=out.get("line_key", "msg"),
-                )
-                shaped.select(F.to_json(F.struct("stream", "values")).alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "influxdb":
-                from fluent_bit_spark.connectors import influxdb_line
+    p = str(path)
+    if p.startswith("file://"):
+        p = p[len("file://"):]
+    return p.rstrip("/") if "://" in p else os.path.abspath(p)
 
-                shaped = influxdb_line(
-                    df,
-                    field_cols=_listopt(out.get("field_keys")),
-                    tag_keys=_listopt(out.get("tag_keys")),
-                    auto_tags=bool(out.get("auto_tags", False)),
-                    use_influxdb_integer=bool(out.get("add_integer_suffix", False)),
-                )
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "datadog":
-                from fluent_bit_spark.connectors import datadog_records
 
-                shaped = datadog_records(
-                    df,
-                    include_tag_key=bool(out.get("include_tag_key", False)),
-                    tag_key=out.get("tag_key", "tagkey"),
-                    dd_source=out.get("dd_source"),
-                    dd_service=out.get("dd_service"),
-                    dd_hostname=out.get("dd_hostname"),
-                    dd_tags=out.get("dd_tags"),
-                    dd_message_key=out.get("dd_message_key", "log"),
-                    remap=bool(out.get("remap", False)),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "flowcounter":
-                from fluent_bit_spark.sinks import flowcounter
+def _shares_target(outputs: list[dict]) -> bool:
+    """Whether two outputs write one directory, or one writes inside the
+    other's: concurrent overwrites there would interleave."""
+    from itertools import combinations
 
-                shaped = flowcounter(df, unit=out.get("unit", "minute"))
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "forward":
-                from fluent_bit_spark.connectors import forward_frames_encode
+    targets = [_target(o["path"]) for o in outputs if o.get("path") is not None]
+    return any(
+        a == b or b.startswith(a.rstrip("/") + "/") or a.startswith(b.rstrip("/") + "/")
+        for a, b in combinations(targets, 2)
+    )
 
-                shaped = forward_frames_encode(
-                    df,
-                    time_as_integer=bool(out.get("time_as_integer", False)),
-                    send_options=bool(out.get("send_options", False)),
-                )
-                shaped.write.mode("overwrite").format("parquet").save(out["path"])
-                record(out, obs)
-            elif name == "cloudwatch_logs":
-                from fluent_bit_spark.connectors import cloudwatch_events
 
-                shaped = cloudwatch_events(
-                    df,
-                    out["log_group_name"],
-                    log_stream_name=out.get("log_stream_name"),
-                    log_stream_prefix=out.get("log_stream_prefix"),
-                    log_key=out.get("log_key"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "stackdriver":
-                from fluent_bit_spark.connectors import stackdriver_entries
+def _write_output(src: DataFrame, out: dict) -> int:
+    """One [OUTPUT] section: route ``src`` by ``match`` and ``conditions``,
+    run the output's ``processors:``, write its payload; returns the count
+    of records delivered. The count rides the sink's own write job through
+    ``observe()``, one scan per output instead of a second count() pass
+    over the route."""
+    name = _output_name(out)
+    df = _route(
+        src, out.get("match", "*"), out.get("conditions"), out.get("condition_op", "AND")
+    )
+    procs = (out.get("processors") or {}).get("logs") or []
+    if procs:
+        df = _apply_processors(df, procs)
+    if name in ("null", "counter"):
+        # no write job to ride — the count IS the action
+        return df.count()
+    if name == "stdout":
+        # show(limit) stops early, so observe() would undercount;
+        # a debug sink can afford the explicit count
+        df.show(int(out.get("limit", 20)), truncate=False)
+        return df.count()
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    if name == "file":
+        sinks.write_file(
+            df,
+            out["path"],
+            fmt=out.get("format", "json"),
+            partition_by_tag=bool(out.get("partition_by_tag", False)),
+            template=out.get("template"),
+            compression=out.get("compression"),
+        )
+    elif name == "s3":
+        sinks.write_s3(
+            df,
+            out["path"],
+            key_format=out.get("s3_key_format", "/$TAG"),
+            fmt=out.get("format", "json"),
+            compression=out.get("compression"),
+        )
+    else:
+        shape, fmt = _OUTPUTS[name]
+        sinks.write_file(shape(df, out), out["path"], fmt=fmt)
+    return int(obs.get["n"])
 
-                shaped = stackdriver_entries(
-                    df,
-                    out.get("google_service_credentials", "default-project"),
-                    severity_key=out.get("severity_key", "severity"),
-                    trace_key=out.get("trace_key"),
-                    span_id_key=out.get("span_id_key"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "bigquery":
-                from fluent_bit_spark.connectors import bigquery_rows
 
-                shaped = bigquery_rows(df, insert_id_col=out.get("insert_id_key"))
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "kafka":
-                from fluent_bit_spark.connectors import kafka_messages
+# Each remaining output plugin only shapes its wire payload (a file-backed
+# stand-in for the push); text payloads are one ``value`` line per row.
 
-                topics = _listopt(out.get("topics", "fluent-bit"))
-                shaped = kafka_messages(
-                    df,
-                    topics,
-                    timestamp_key=out.get("timestamp_key", "@timestamp"),
-                    timestamp_format=out.get("timestamp_format", "double"),
-                    message_key=out.get("message_key"),
-                    message_key_field=out.get("message_key_field"),
-                    topic_key=out.get("topic_key"),
-                    dynamic_topic=bool(out.get("dynamic_topic", False)),
-                    raw_log_key=out.get("raw_log_key"),
-                )
-                # file-backed stand-in for the producer, like the es route
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "http":
-                from fluent_bit_spark.sinks import http_payload
 
-                shaped = http_payload(
-                    df,
-                    body_format=out.get("format", "json"),
-                    json_date_key=out.get("json_date_key", "date"),
-                    json_date_format=out.get("json_date_format", "double"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name in ("kinesis_streams", "kinesis_firehose"):
-                from fluent_bit_spark.connectors import kinesis_records
+def _es_payload(df: DataFrame, out: dict) -> DataFrame:
+    shaped = connectors.es_bulk(
+        df,
+        index=out.get("index", "fluent-bit"),
+        logstash_format=bool(out.get("logstash_format", False)),
+        logstash_prefix=out.get("logstash_prefix", "logstash"),
+        id_key=out.get("id_key"),
+        include_tag_key=out.get("include_tag_key"),
+    )
+    # bulk body = action line + doc line per record
+    return shaped.select(F.concat_ws("\n", "action_line", "doc_line").alias("value"))
 
-                shaped = kinesis_records(
-                    df,
-                    log_key=out.get("log_key"),
-                    time_key=out.get("time_key"),
-                    time_key_format=out.get("time_key_format", "%Y-%m-%dT%H:%M:%S"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "azure":
-                from fluent_bit_spark.connectors import azure_records
 
-                shaped = azure_records(
-                    df,
-                    time_key=out.get("time_key", "@timestamp"),
-                    time_generated=bool(out.get("time_generated", False)),
-                    log_type=out.get("log_type", "fluentbit"),
-                    log_type_key=out.get("log_type_key"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "logdna":
-                from fluent_bit_spark.connectors import logdna_lines
+def _splunk_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.splunk_hec(
+        df,
+        host=out.get("host"),
+        source=out.get("source"),
+        sourcetype=out.get("sourcetype"),
+        index=out.get("index"),
+        host_key=out.get("host_key"),
+        source_key=out.get("source_key"),
+        send_raw=bool(out.get("send_raw", False)),
+    )
 
-                shaped = logdna_lines(df, app=out.get("app", "Fluent Bit"))
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "nats":
-                from fluent_bit_spark.connectors import nats_body
 
-                shaped = nats_body(df)
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "slack":
-                from fluent_bit_spark.connectors import slack_text
+def _opentelemetry_payload(df: DataFrame, out: dict) -> DataFrame:
+    shaped = connectors.otlp_logs_encode(
+        df,
+        body_col=out.get("body_key", "msg"),
+        attr_cols=_listopt(out.get("attribute_keys")),
+        resource_attributes=out.get("resource_attributes"),
+        batch_col=out.get("batch_key", TAG_COL),
+    )
+    return shaped.select(F.col("otlp_json").alias("value"))
 
-                shaped = slack_text(df)
-                shaped.select(F.col("payload").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "td":
-                from fluent_bit_spark.connectors import td_records
 
-                td_records(df).write.mode("overwrite").format("parquet").save(out["path"])
-                record(out, obs)
-            elif name == "prometheus_remote_write":
-                from fluent_bit_spark.connectors import remote_write_encode
+def _loki_payload(df: DataFrame, out: dict) -> DataFrame:
+    shaped = sinks.loki_streams(
+        df,
+        label_keys=_listopt(out.get("labels")) or [TAG_COL],
+        line_col=out.get("line_key", "msg"),
+    )
+    return shaped.select(F.to_json(F.struct("stream", "values")).alias("value"))
 
-                shaped = remote_write_encode(
-                    df,
-                    name_col=out.get("metric_key", "metric"),
-                    label_cols=_listopt(out.get("label_keys")),
-                    value_col=out.get("value_key", "value"),
-                )
-                shaped.write.mode("overwrite").format("parquet").save(out["path"])
-                record(out, obs)
-            elif name == "prometheus_exporter":
-                from fluent_bit_spark.sinks import prometheus_exposition
 
-                statics = {}
-                for kv in _listopt(out.get("add_label")) or []:
-                    k, _, v = str(kv).partition(" ")
-                    statics[k.strip()] = v.strip()
-                shaped = prometheus_exposition(
-                    df,
-                    name_col=out.get("metric_key", "metric_name"),
-                    type_col=out.get("type_key", "metric_type"),
-                    label_cols=_listopt(out.get("label_keys")),
-                    value_col=out.get("value_key", "value"),
-                    add_labels=statics or None,
-                    value_fmt=out.get("value_format", "double"),
-                )
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "plot":
-                from fluent_bit_spark.sinks import plot_lines
+def _influxdb_payload(df: DataFrame, out: dict) -> DataFrame:
+    shaped = connectors.influxdb_line(
+        df,
+        field_cols=_listopt(out.get("field_keys")),
+        tag_keys=_listopt(out.get("tag_keys")),
+        auto_tags=bool(out.get("auto_tags", False)),
+        use_influxdb_integer=bool(out.get("add_integer_suffix", False)),
+    )
+    return shaped.select(F.col("line").alias("value"))
 
-                shaped = plot_lines(df, out["key"])
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "syslog":
-                from fluent_bit_spark.sinks import syslog_encode
 
-                shaped = syslog_encode(
-                    df,
-                    format=out.get("syslog_format", "rfc5424"),
-                    message_key=out.get("syslog_message_key", "message"),
-                    hostname_key=out.get("syslog_hostname_key"),
-                    appname_key=out.get("syslog_appname_key"),
-                    procid_key=out.get("syslog_procid_key"),
-                    msgid_key=out.get("syslog_msgid_key"),
-                    sd_keys=_listopt(out.get("syslog_sd_key")),
-                    severity_key=out.get("syslog_severity_key"),
-                    facility_key=out.get("syslog_facility_key"),
-                    severity_preset=int(out.get("syslog_severity_preset", 6)),
-                    facility_preset=int(out.get("syslog_facility_preset", 1)),
-                    maxsize=out.get("syslog_maxsize"),
-                )
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            else:
-                raise ValueError(f"unknown output plugin {name!r}")
+def _datadog_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.datadog_records(
+        df,
+        include_tag_key=bool(out.get("include_tag_key", False)),
+        tag_key=out.get("tag_key", "tagkey"),
+        dd_source=out.get("dd_source"),
+        dd_service=out.get("dd_service"),
+        dd_hostname=out.get("dd_hostname"),
+        dd_tags=out.get("dd_tags"),
+        dd_message_key=out.get("dd_message_key", "log"),
+        remap=bool(out.get("remap", False)),
+    )
+
+
+def _forward_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.forward_frames_encode(
+        df,
+        time_as_integer=bool(out.get("time_as_integer", False)),
+        send_options=bool(out.get("send_options", False)),
+    )
+
+
+def _cloudwatch_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.cloudwatch_events(
+        df,
+        out["log_group_name"],
+        log_stream_name=out.get("log_stream_name"),
+        log_stream_prefix=out.get("log_stream_prefix"),
+        log_key=out.get("log_key"),
+    )
+
+
+def _stackdriver_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.stackdriver_entries(
+        df,
+        out.get("google_service_credentials", "default-project"),
+        severity_key=out.get("severity_key", "severity"),
+        trace_key=out.get("trace_key"),
+        span_id_key=out.get("span_id_key"),
+    )
+
+
+def _kafka_payload(df: DataFrame, out: dict) -> DataFrame:
+    topics = _listopt(out.get("topics", "fluent-bit"))
+    return connectors.kafka_messages(
+        df,
+        topics,
+        timestamp_key=out.get("timestamp_key", "@timestamp"),
+        timestamp_format=out.get("timestamp_format", "double"),
+        message_key=out.get("message_key"),
+        message_key_field=out.get("message_key_field"),
+        topic_key=out.get("topic_key"),
+        dynamic_topic=bool(out.get("dynamic_topic", False)),
+        raw_log_key=out.get("raw_log_key"),
+    )
+
+
+def _http_payload(df: DataFrame, out: dict) -> DataFrame:
+    return sinks.http_payload(
+        df,
+        body_format=out.get("format", "json"),
+        json_date_key=out.get("json_date_key", "date"),
+        json_date_format=out.get("json_date_format", "double"),
+    )
+
+
+def _kinesis_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.kinesis_records(
+        df,
+        log_key=out.get("log_key"),
+        time_key=out.get("time_key"),
+        time_key_format=out.get("time_key_format", "%Y-%m-%dT%H:%M:%S"),
+    )
+
+
+def _azure_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.azure_records(
+        df,
+        time_key=out.get("time_key", "@timestamp"),
+        time_generated=bool(out.get("time_generated", False)),
+        log_type=out.get("log_type", "fluentbit"),
+        log_type_key=out.get("log_type_key"),
+    )
+
+
+def _remote_write_payload(df: DataFrame, out: dict) -> DataFrame:
+    return connectors.remote_write_encode(
+        df,
+        name_col=out.get("metric_key", "metric"),
+        label_cols=_listopt(out.get("label_keys")),
+        value_col=out.get("value_key", "value"),
+    )
+
+
+def _exporter_payload(df: DataFrame, out: dict) -> DataFrame:
+    statics = {}
+    for kv in _listopt(out.get("add_label")) or []:
+        k, _, v = str(kv).partition(" ")
+        statics[k.strip()] = v.strip()
+    shaped = sinks.prometheus_exposition(
+        df,
+        name_col=out.get("metric_key", "metric_name"),
+        type_col=out.get("type_key", "metric_type"),
+        label_cols=_listopt(out.get("label_keys")),
+        value_col=out.get("value_key", "value"),
+        add_labels=statics or None,
+        value_fmt=out.get("value_format", "double"),
+    )
+    return shaped.select(F.col("line").alias("value"))
+
+
+def _syslog_payload(df: DataFrame, out: dict) -> DataFrame:
+    shaped = sinks.syslog_encode(
+        df,
+        format=out.get("syslog_format", "rfc5424"),
+        message_key=out.get("syslog_message_key", "message"),
+        hostname_key=out.get("syslog_hostname_key"),
+        appname_key=out.get("syslog_appname_key"),
+        procid_key=out.get("syslog_procid_key"),
+        msgid_key=out.get("syslog_msgid_key"),
+        sd_keys=_listopt(out.get("syslog_sd_key")),
+        severity_key=out.get("syslog_severity_key"),
+        facility_key=out.get("syslog_facility_key"),
+        severity_preset=int(out.get("syslog_severity_preset", 6)),
+        facility_preset=int(out.get("syslog_facility_preset", 1)),
+        maxsize=out.get("syslog_maxsize"),
+    )
+    return shaped.select(F.col("line").alias("value"))
+
+
+# plugin name -> (payload shaper, write format)
+_OUTPUTS: dict[str, tuple[Callable[[DataFrame, dict], DataFrame], str]] = {
+    "es": (_es_payload, "text"),
+    "opensearch": (_es_payload, "text"),
+    "splunk": (_splunk_payload, "json"),
+    "opentelemetry": (_opentelemetry_payload, "text"),
+    "loki": (_loki_payload, "text"),
+    "influxdb": (_influxdb_payload, "text"),
+    "datadog": (_datadog_payload, "json"),
+    "flowcounter": (lambda df, out: sinks.flowcounter(df, unit=out.get("unit", "minute")), "json"),
+    "forward": (_forward_payload, "parquet"),
+    "cloudwatch_logs": (_cloudwatch_payload, "json"),
+    "stackdriver": (_stackdriver_payload, "json"),
+    "bigquery": (
+        lambda df, out: connectors.bigquery_rows(df, insert_id_col=out.get("insert_id_key")),
+        "json",
+    ),
+    "kafka": (_kafka_payload, "json"),
+    "http": (_http_payload, "json"),
+    "kinesis_streams": (_kinesis_payload, "json"),
+    "kinesis_firehose": (_kinesis_payload, "json"),
+    "azure": (_azure_payload, "json"),
+    "logdna": (
+        lambda df, out: connectors.logdna_lines(df, app=out.get("app", "Fluent Bit")),
+        "json",
+    ),
+    "nats": (lambda df, out: connectors.nats_body(df), "json"),
+    "slack": (
+        lambda df, out: connectors.slack_text(df).select(F.col("payload").alias("value")),
+        "text",
+    ),
+    "td": (lambda df, out: connectors.td_records(df), "parquet"),
+    "prometheus_remote_write": (_remote_write_payload, "parquet"),
+    "prometheus_exporter": (_exporter_payload, "text"),
+    "plot": (
+        lambda df, out: sinks.plot_lines(df, out["key"]).select(F.col("line").alias("value")),
+        "text",
+    ),
+    "syslog": (_syslog_payload, "text"),
+}
+# the outputs _write_output runs on a branch of their own
+_OWN_BRANCH = ("file", "s3", "null", "counter", "stdout")
+
+
+def _output_name(out: dict) -> str:
+    """The output's plugin name, checked against the known plugins."""
+    name = out.get("name", "file")
+    if name not in _OUTPUTS and name not in _OWN_BRANCH:
+        raise ValueError(f"unknown output plugin {name!r}")
+    return name
 
 
 def _union(dfs: list[DataFrame]) -> DataFrame:
@@ -722,20 +704,7 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
             out = out.withColumn(fconf["flag_key"], pii_flags(F.col(key), kinds))
         out = out.withColumn(key, redact_pii(F.col(key), kinds))
     elif name == "content_modifier":
-        from fluent_bit_spark.operators.conditions import Rule
-        from fluent_bit_spark.operators.content_modifier import content_modifier
-
-        conds = [Rule(*c) for c in fconf.get("conditions", [])]
-        out = content_modifier(
-            df,
-            action=fconf["action"],
-            key=fconf["key"],
-            value=fconf.get("value"),
-            pattern=fconf.get("pattern"),
-            converted_type=fconf.get("converted_type"),
-            conds=conds or None,
-            combine=fconf.get("condition_op", "AND"),
-        )
+        out = _content_modifier(df, fconf)
     elif name == "log_to_metrics":
         # filter_log_to_metrics swaps matching log records for metric
         # records on the stream (log_to_metrics.c:970-1283); the derived
@@ -776,6 +745,25 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
     return out
 
 
+def _content_modifier(df: DataFrame, conf: dict) -> DataFrame:
+    """content_modifier from the keys a [FILTER] section and a processor
+    unit share."""
+    from fluent_bit_spark.operators.conditions import Rule
+    from fluent_bit_spark.operators.content_modifier import content_modifier
+
+    conds = [Rule(*c) for c in conf.get("conditions", [])]
+    return content_modifier(
+        df,
+        action=conf["action"],
+        key=conf["key"],
+        value=conf.get("value"),
+        pattern=conf.get("pattern"),
+        converted_type=conf.get("converted_type"),
+        conds=conds or None,
+        combine=conf.get("condition_op", "AND"),
+    )
+
+
 def _apply_processors(df: DataFrame, procs: list[dict]) -> DataFrame:
     """Entry point C: the YAML ``processors:`` unit list attached to an
     input/output instance (flb_processor.c:796-810, stages run in config
@@ -784,20 +772,7 @@ def _apply_processors(df: DataFrame, procs: list[dict]) -> DataFrame:
     for p in procs:
         name = p.get("name")
         if name == "content_modifier":
-            from fluent_bit_spark.operators.conditions import Rule
-            from fluent_bit_spark.operators.content_modifier import content_modifier
-
-            conds = [Rule(*c) for c in p.get("conditions", [])]
-            df = content_modifier(
-                df,
-                action=p["action"],
-                key=p["key"],
-                value=p.get("value"),
-                pattern=p.get("pattern"),
-                converted_type=p.get("converted_type"),
-                conds=conds or None,
-                combine=p.get("condition_op", "AND"),
-            )
+            df = _content_modifier(df, p)
         elif name == "sql":
             # processor_sql: per-record SELECT/WHERE on the instance
             # stream (plugins/processor_sql/sql.c)
@@ -1030,5 +1005,7 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
         else:
             pipe.sp.sql(task["exec"])
 
-    pipe.outputs = conf.get("pipeline", {}).get("outputs", [])
+    pipe.outputs = conf.get("pipeline", {}).get("outputs") or []
+    for out in pipe.outputs:
+        _output_name(out)
     return pipe

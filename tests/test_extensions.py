@@ -2088,6 +2088,26 @@ def test_bm25_topk_ranking_and_contract(spark):
     assert again == ranked
 
 
+def test_bm25_filter_failing_null_ids_agree(spark):
+    """The IN-literal (<= 1024 ids) and broadcast-join (> 1024) sides of
+    _filter_failing give the same rows, a null query id included."""
+    from fluent_bit_spark.extensions.retrieval import _filter_failing
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (None, "c"), (3, "d")], "qid int, v string"
+    )
+    few = [2]
+    many = few + list(range(1000, 2100))
+    assert len(many) == 1101
+
+    def rows(ids, negate):
+        return sorted(r.v for r in _filter_failing(df, "qid", ids, negate=negate).collect())
+
+    for negate in (False, True):
+        assert rows(few, negate) == rows(many, negate), negate
+    assert rows(many, True) == ["a", "d"]
+
+
 def test_bm25_prune_is_certificate_exact(spark):
     """The block-max-style candidate prune returns EXACTLY the dense
     top-k on a Zipfian corpus (certificate passes) AND on a degenerate

@@ -712,6 +712,63 @@ def test_unmatched_filter_still_validated(spark, tmp_path):
         load_pipeline(spark, conf)
 
 
+def test_unknown_output_rejected_at_load(spark, tmp_path, monkeypatch):
+    """An unknown [OUTPUT] name fails the load, so --dry-run reports it
+    instead of a run writing the other sinks first."""
+    import pytest
+
+    import fluent_bit_spark
+    import fluent_bit_spark.__main__ as cli
+
+    conf = {"pipeline": {
+        "inputs": [{"name": "dummy", "tag": "a.x", "records": [{"m": "1"}]}],
+        "outputs": [{"name": "counter", "match": "*"},
+                    {"name": "nosuch", "match": "*", "path": str(tmp_path / "o")}],
+    }}
+    with pytest.raises(ValueError, match="unknown output plugin 'nosuch'"):
+        load_pipeline(spark, conf)
+    path = tmp_path / "bad.yaml"
+    path.write_text(json.dumps(conf))  # JSON is YAML
+    monkeypatch.setattr(fluent_bit_spark, "get_spark", lambda *a, **k: spark)
+    assert cli.main(["-c", str(path), "--dry-run"]) == 2
+
+
+def test_output_target_spellings(tmp_path, monkeypatch):
+    """One directory spelled four ways is one target; a directory inside
+    another shares it."""
+    from fluent_bit_spark.pipeline.config import _shares_target, _target
+
+    monkeypatch.chdir(tmp_path)
+    out = str(tmp_path / "out")
+    assert {_target(p) for p in (out, out + "/", "file://" + out, "out")} == {out}
+    assert _shares_target([{"path": out}, {"path": "file://" + out + "/"}])
+    assert _shares_target([{"path": out + "/web"}, {"path": "out"}])
+    assert not _shares_target([{"path": out}, {"path": out + "2"}, {"name": "null"}])
+
+
+def test_shared_target_last_writer_wins(spark, tmp_path):
+    """Two outputs that name one directory two ways run one after the
+    other, so the directory holds only the last declared output's rows."""
+    out = tmp_path / "out"
+    conf = {"pipeline": {
+        "inputs": [{"name": "dummy", "tag": "a.x",
+                    "records": [{"m": str(i), "level": "info" if i % 2 else "error"}
+                                for i in range(40)]}],
+        "outputs": [
+            {"name": "file", "match": "*", "path": str(out),
+             "conditions": [["level", "eq", "info"]]},
+            {"name": "counter", "match": "*"},
+            {"name": "file", "match": "*", "path": "file://" + str(out) + "/",
+             "conditions": [["level", "eq", "error"]]},
+        ],
+    }}
+    written = load_pipeline(spark, conf).run_outputs()
+    assert written == {"*": 20, "*+": 40, "*++": 20}
+    rows = spark.read.json(str(out)).collect()
+    assert sorted(int(r.m) for r in rows) == list(range(0, 40, 2))
+    assert {r.level for r in rows} == {"error"}
+
+
 def _routing_conf(tmp_path, only=None):
     """Tag-specific regex/json/logfmt parsers, grep, modify, nest and
     record_modifier, then a rewrite_tag and a filter on the rewritten
