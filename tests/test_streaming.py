@@ -1059,51 +1059,147 @@ def test_bm25_empty_token_corpus_raises(spark):
         bm25_topk(docs, qs, k=3)
 
 
-def test_neardup_sink_failure_never_loses_docs(spark, tmp_path):
-    """The sink-before-state ordering contract: when the sink throws, the
-    band state must NOT have been appended — the replay then re-emits the
-    same survivors (at-least-once) instead of silently losing them
-    against their own first-attempt bands."""
-    import pytest
+def _pcm16(samples):
+    import struct
 
-    from fluent_bit_spark.streaming.stateful import neardup_foreach_batch
+    import numpy as np
 
+    a = np.clip(np.asarray(samples), -32768, 32767).astype("<i2")
+    data = a.tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    return (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+            + b"fmt " + struct.pack("<I", 16) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data)
+
+
+def _avi_clip(seed, trim=0):
+    import numpy as np
+
+    from fluent_bit_spark.extensions.video import make_avi
+
+    base = np.random.RandomState(seed).randint(0, 256, (8, 9)).astype(np.uint8)
+    frames = [np.roll(base, f, axis=1).tobytes() for f in range(6)]
+    return make_avi(9, 8, frames[trim:], fps_num=10)
+
+
+def _neardup_family(spark, family):
+    """(foreach_batch factory, append history, id column, two batches)
+    for one near-dup family. Each first batch holds a within-batch
+    near-dup (id 2 of id 1) and each second batch a cross-batch one
+    (id 4 of id 1), so both batches survive as ids [1, 3] and [5]."""
+    import numpy as np
+
+    from fluent_bit_spark.extensions import dedup, multimodal, video
+    from fluent_bit_spark.streaming import stateful
+
+    if family == "text":
+        doc = "shared boilerplate paragraph repeated across the crawl corpus daily"
+        rows = [
+            [(1, doc), (2, doc), (3, "unique first-batch article on compilers")],
+            [(4, doc), (5, "another unique piece about databases")],
+        ]
+        schema = "doc_id long, text string"
+        return (stateful.neardup_foreach_batch, dedup.append_history, "doc_id",
+                [spark.createDataFrame(b, schema) for b in rows])
+    if family == "image":
+        rng = np.random.RandomState(23)
+        g = [rng.randint(30, 220, (16, 18)).astype(np.uint8) for _ in range(3)]
+        pgm = lambda a: multimodal.make_pgm(18, 16, a.astype(np.uint8).tobytes())
+        payloads = [
+            [(1, pgm(g[0])), (2, pgm(g[0] + 10)), (3, pgm(g[1]))],
+            [(4, pgm(g[0] + 5)), (5, pgm(g[2]))],
+        ]
+        make, append = stateful.image_neardup_foreach_batch, multimodal.append_image_history
+    elif family == "audio":
+        rng = np.random.RandomState(29)
+        s1, s3, s5 = ((rng.randn(8192) * 4000).astype(int) for _ in range(3))
+        payloads = [
+            [(1, _pcm16(s1)), (2, _pcm16(s1 * 2)), (3, _pcm16(s3))],
+            [(4, _pcm16(s1 * 2)), (5, _pcm16(s5))],
+        ]
+        make, append = stateful.audio_neardup_foreach_batch, multimodal.append_audio_history
+    else:
+        payloads = [
+            [(1, _avi_clip(11)), (2, _avi_clip(11)), (3, _avi_clip(12))],
+            [(4, _avi_clip(11, trim=2)), (5, _avi_clip(13))],
+        ]
+        make, append = stateful.video_neardup_foreach_batch, video.append_video_history
+    batches = [
+        spark.createDataFrame(
+            [(mid, bytearray(b)) for mid, b in batch], "media_id long, content binary"
+        )
+        for batch in payloads
+    ]
+    return make, append, "media_id", batches
+
+
+NEARDUP_FAMILIES = ["text", "image", "audio", "video"]
+
+
+@pytest.mark.parametrize("family", NEARDUP_FAMILIES)
+def test_neardup_sink_failure_never_loses_docs(spark, tmp_path, family):
+    """The sink-before-state ordering contract, for every near-dup
+    family: when the sink throws, the history must NOT have been
+    appended — the replay then re-emits the same survivors
+    (at-least-once) instead of silently losing them against their own
+    first-attempt rows."""
+    import os
+
+    make, _, id_col, (batch, _) = _neardup_family(spark, family)
     state = str(tmp_path / "st")
-    batch = spark.createDataFrame(
-        [(1, "a perfectly unique document that must never be lost in a crash")],
-        ["doc_id", "text"],
-    )
+    ids = lambda bdf: sorted(r[id_col] for r in bdf.select(id_col).collect())
 
     calls = []
 
     def exploding_sink(bdf, bid):
-        calls.append([r.doc_id for r in bdf.select("doc_id").collect()])
+        calls.append(ids(bdf))
         raise RuntimeError("sink outage")
 
-    proc = neardup_foreach_batch(exploding_sink, state)
     with pytest.raises(RuntimeError, match="sink outage"):
-        proc(batch, 0)
-    assert calls == [[1]]
-    import os
+        make(exploding_sink, state)(batch, 0)
+    assert calls == [[1, 3]]
     # state dir untouched by the failed attempt
     assert not os.path.isdir(state) or not any(
         f.endswith(".parquet") for f in os.listdir(state)
     )
 
     got = []
-    proc_ok = neardup_foreach_batch(
-        lambda bdf, bid: got.extend(r.doc_id for r in bdf.select("doc_id").collect()),
-        state,
-    )
-    proc_ok(batch, 0)  # the replay
-    assert got == [1]  # re-emitted, not lost
-    # and now the state holds its bands, so a further replay emits nothing
+    make(lambda bdf, bid: got.extend(ids(bdf)), state)(batch, 0)  # the replay
+    assert got == [1, 3]  # re-emitted, not lost
+    # and now the state holds its rows, so a further replay emits nothing
     got2 = []
-    neardup_foreach_batch(
-        lambda bdf, bid: got2.extend(r.doc_id for r in bdf.select("doc_id").collect()),
-        state,
-    )(batch, 1)
+    make(lambda bdf, bid: got2.extend(ids(bdf)), state)(batch, 1)
     assert got2 == []
+
+
+@pytest.mark.parametrize("family", NEARDUP_FAMILIES)
+def test_neardup_foreach_batch_history_rows(spark, tmp_path, family):
+    """The history a foreachBatch stage leaves after two micro-batches
+    holds exactly the rows ``append_*_history`` writes for the same
+    survivors into a fresh store, compared as multisets."""
+    from collections import Counter
+
+    from fluent_bit_spark.extensions.dedup import history_data_dir
+
+    make, append, id_col, batches = _neardup_family(spark, family)
+    streamed = str(tmp_path / "streamed")
+    kept, schema = [], batches[0].schema
+    proc = make(lambda bdf, bid: kept.extend(bdf.select(*schema.names).collect()), streamed)
+    for i, batch in enumerate(batches):
+        proc(batch, i)
+    assert sorted(r[id_col] for r in kept) == [1, 3, 5]
+
+    fresh = str(tmp_path / "fresh")
+    append(spark.createDataFrame(kept, schema), fresh)
+
+    def rows(state):
+        df = spark.read.parquet(history_data_dir(spark, state))
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*sorted(df.columns)).collect()
+        )
+
+    assert rows(streamed) == rows(fresh)
 
 
 def test_nb_score_serving_and_stream(spark, tmp_path):
