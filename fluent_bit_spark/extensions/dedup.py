@@ -14,6 +14,8 @@ Scale design notes (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -320,6 +322,140 @@ def minhash_dedup(
     return work.join(losers, id_col, "left_anti")
 
 
+class NearDupHistory(NamedTuple):
+    """What one near-dup family (text, image, audio, video) supplies to
+    the history mechanism below; the probe, the append and the
+    foreachBatch body are written once, for all of them.
+
+    - ``fingerprint(frame)``: the family's fingerprint rows for a frame,
+      keyed by the column ``id``. The mechanism pins them, so a frame
+      is fingerprinted once per call.
+    - ``rows(fingerprint)``: the history rows, ``id`` followed by the
+      stored layout in its on-disk column order.
+    - ``key``: the layout columns a probe joins the stored rows on.
+    - ``verify(hits, fingerprint)``: keeps the verified candidates of
+      ``hits`` — the key join of the probe rows (alias ``p``) with the
+      stored rows (alias ``s``) — with ``id`` still selectable. None
+      means every key hit is a duplicate.
+    - ``pairs(fingerprint)``: the verified within-frame near-dup pairs
+      ``(id_a < id_b, ...)``, or None when the family has no such stage.
+    """
+
+    fingerprint: Callable[[DataFrame], DataFrame]
+    rows: Callable[[DataFrame], DataFrame]
+    key: tuple[str, ...]
+    id: str = "media_id"
+    verify: Callable[[DataFrame, DataFrame], DataFrame] | None = None
+    pairs: Callable[[DataFrame], DataFrame] | None = None
+
+
+def _drop_history_hits(
+    df: DataFrame, fp: DataFrame, family: NearDupHistory, state_dir: str,
+    id_col: str,
+) -> DataFrame:
+    """The rows of ``df`` whose history rows (from its fingerprint
+    ``fp``) hit nothing stored at ``state_dir``, pinned.
+
+    The store is probed through Spark, not the local filesystem:
+    ``state_dir`` may be s3a:// or hdfs://, where os.path checks are
+    always False and the filter would silently no-op while appends kept
+    succeeding. The result is pinned BEFORE any append: it must not
+    lazily re-read a store that now holds this frame's own rows."""
+    rows = family.rows(fp)
+    seen = versioned_store.read(df.sparkSession, state_dir)
+    if seen is not None:
+        if family.verify is None:
+            hits = rows.join(seen, list(family.key), "left_semi")
+        else:
+            p, s = rows.alias("p"), seen.alias("s")
+            on = [F.col(f"p.{k}") == F.col(f"s.{k}") for k in family.key]
+            hits = family.verify(p.join(s, on), fp)
+        losers = hits.select(F.col(family.id).alias(id_col)).distinct()
+        df = df.join(losers, id_col, "left_anti")
+    return df.localCheckpoint(eager=True)
+
+
+def _append_history_rows(
+    family: NearDupHistory, fp: DataFrame, state_dir: str,
+    kept: DataFrame | None = None, id_col: str | None = None,
+) -> None:
+    """Append the history rows of ``fp`` — only those of ``kept``'s ids
+    when given — to the store at ``state_dir``."""
+    rows = family.rows(fp)
+    if kept is not None:
+        ids = kept.select(F.col(id_col).alias("__kid"))
+        rows = rows.join(ids, rows[family.id].eqNullSafe(ids["__kid"]), "left_semi")
+    versioned_store.append(rows.drop(family.id), state_dir)
+
+
+def filter_history(
+    df: DataFrame, state_dir: str, family: NearDupHistory, id_col: str,
+    update_state: bool = False,
+) -> DataFrame:
+    """The rows of ``df`` that near-duplicate nothing in the history at
+    ``state_dir``, pinned; with ``update_state``, the kept rows' history
+    rows are appended right away, from the same fingerprint."""
+    fp = family.fingerprint(df).localCheckpoint(eager=True)
+    kept = _drop_history_hits(df, fp, family, state_dir, id_col)
+    if update_state:
+        _append_history_rows(family, fp, state_dir, kept, id_col)
+    return kept
+
+
+def append_to_history(df: DataFrame, state_dir: str, family: NearDupHistory) -> None:
+    """Append every row's history rows to the history at ``state_dir``."""
+    _append_history_rows(family, family.fingerprint(df), state_dir)
+
+
+def history_foreach_batch(
+    sink, state_dir: str, family: NearDupHistory, id_col: str
+):
+    """The ``writeStream.foreachBatch`` function of every near-dup
+    family. Per micro-batch: fingerprint once; drop the within-batch
+    losers (the higher id of each ``family.pairs`` pair; the lower id
+    survives); probe the history with the survivors' rows;
+    ``sink(survivors, batch_id)``; append the survivors' rows.
+
+    The sink write runs BEFORE the append. A crash between them makes
+    the replayed batch re-emit its survivors (duplicate delivery, the
+    at-least-once foreachBatch contract, so sinks must be idempotent);
+    the reverse order would LOSE them, since the replay would drop them
+    against their own first-attempt rows. Duplicate history rows from a
+    replay do not change membership and compact away."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        fp = family.fingerprint(batch_df).localCheckpoint(eager=True)
+        survivors, probe_fp = batch_df, fp
+        if family.pairs is not None:
+            losers = family.pairs(fp).select(F.col("id_b").alias(family.id)).distinct()
+            probe_fp = fp.join(losers, family.id, "left_anti")
+            survivors = batch_df.join(
+                losers.withColumnRenamed(family.id, id_col), id_col, "left_anti"
+            )
+        kept = _drop_history_hits(survivors, probe_fp, family, state_dir, id_col)
+        sink(kept, batch_id)
+        _append_history_rows(family, fp, state_dir, kept, id_col)
+
+    return process
+
+
+def text_neardup_history(
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    num_bands: int = 8,
+    shingle_n: int = 3,
+) -> NearDupHistory:
+    """The MinHash family: history rows are the (band, bh) LSH buckets
+    of each doc, and any shared bucket is a duplicate (no verify)."""
+
+    def fingerprint(df: DataFrame) -> DataFrame:
+        sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+        return band_buckets(sig, id_col, num_bands, sig_len=num_hashes)
+
+    return NearDupHistory(fingerprint, lambda bands: bands, ("band", "bh"), id_col)
+
+
 def dedup_against_history(
     df: DataFrame,
     state_dir: str,
@@ -332,10 +468,9 @@ def dedup_against_history(
 ) -> DataFrame:
     """Near-dup filter against everything EVER ingested: drop docs whose
     MinHash signature shares any LSH band bucket with the band-hash
-    history table at ``state_dir``. This is the incremental-ingest analog
-    of minhash_dedup — the shape a daily crawl pipeline runs against its
-    accumulated corpus, and the cross-batch stage of the streaming
-    wrapper (neardup_foreach_batch).
+    history table at ``state_dir`` — the incremental-ingest analog of
+    minhash_dedup, the shape a daily crawl pipeline runs against its
+    accumulated corpus. Returns the surviving rows of ``df``, pinned.
 
     CRASH ORDERING: state must be appended AFTER the caller persists the
     survivors — call ``append_history`` once your sink write commits
@@ -345,40 +480,15 @@ def dedup_against_history(
     sink write makes the rerun drop the docs against their own
     first-attempt bands.
 
-    Scale shape: the history table holds num_bands small rows per
-    distinct ingested doc (two longs each) — far smaller than the corpus
-    text; the membership check is a left-anti/semi join keyed on the
-    uniform (band, bh) pair, AQE-skew-splittable. Appends are blind
-    parquet writes; duplicate band rows from replayed batches are
-    harmless (membership semantics), so the state update is idempotent
-    at the semantic level. Returns the surviving rows of ``df``.
-    """
-    spark = df.sparkSession
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    bands = band_buckets(sig, id_col, num_bands, sig_len=num_hashes)
-    # probe state through Spark, not the local filesystem: state_dir may
-    # be s3a:// / hdfs:// in the deployment shape this operator targets,
-    # where os.path checks are always False and the filter would silently
-    # no-op while appends kept succeeding
-    seen = versioned_store.read(spark, state_dir)
-    if seen is not None:
-        losers = (
-            bands.join(seen, ["band", "bh"], "left_semi")
-            .select(id_col)
-            .distinct()
-        )
-        kept = df.join(losers, id_col, "left_anti")
-    else:
-        kept = df
-    # pin the survivor set BEFORE appending: the returned frame and the
-    # state write must not lazily re-read a state dir that now contains
-    # this batch's own bands (self-poisoning), and the signature pass
-    # should run once, not once per downstream action
-    kept = kept.localCheckpoint(eager=True)
-    if update_state:
-        append_history(kept, state_dir, text_col, id_col, num_hashes,
-                       num_bands, shingle_n)
-    return kept
+    Scale shape: the history holds num_bands rows of two longs per
+    kept doc, far smaller than the corpus text; the membership check is
+    a left-semi join on the uniform (band, bh) pair, AQE-skew-splittable.
+    Appends are blind parquet writes; duplicate band rows from replayed
+    batches do not change membership. The probe and append are
+    ``filter_history`` / ``append_to_history`` over
+    ``text_neardup_history``, shared with the media families."""
+    family = text_neardup_history(text_col, id_col, num_hashes, num_bands, shingle_n)
+    return filter_history(df, state_dir, family, id_col, update_state)
 
 
 def history_data_dir(spark, state_dir: str) -> str:
@@ -401,15 +511,9 @@ def append_history(
     of dedup_against_history so streaming callers can order it AFTER the
     sink write: state-before-sink loses documents on a crash between the
     two (the replay drops them against their own first-attempt bands);
-    sink-before-state merely re-emits on replay — the standard
-    at-least-once foreachBatch contract."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    versioned_store.append(
-        band_buckets(sig, id_col, num_bands, sig_len=num_hashes).select(
-            "band", "bh"
-        ),
-        state_dir,
-    )
+    sink-before-state merely re-emits on replay."""
+    family = text_neardup_history(text_col, id_col, num_hashes, num_bands, shingle_n)
+    append_to_history(df, state_dir, family)
 
 
 def compact_history(spark, state_dir: str) -> int:

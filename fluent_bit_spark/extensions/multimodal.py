@@ -27,7 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import versioned_store
+from .dedup import (
+    NearDupHistory, append_to_history, filter_history,
+)
 
 MEDIA_META_SCHEMA = (
     "media_id bigint, kind string, n_bytes int, fake_width int, fake_height int, "
@@ -2504,16 +2506,14 @@ def image_dhash(media: DataFrame, id_col: str = "media_id") -> DataFrame:
     )
 
 
-def _dhash_bands(
-    hashes: DataFrame, max_hamming: int, id_col: str
-) -> DataFrame:
-    """(id, dhash, band, bv): the 64-bit hash split into max_hamming+1
-    contiguous bit-bands — the pigeonhole layout image_neardup_join and
-    the streaming history share. Bit ranges must PARTITION all 64 bits
+def _dhash_bands(hashes: DataFrame, max_hamming: int) -> DataFrame:
+    """(..., band, bv): the 64-bit ``dhash`` split into max_hamming+1
+    contiguous bit-bands — the pigeonhole layout the image and video
+    joins and histories share. Bit ranges must PARTITION all 64 bits
     or the recall argument breaks (an uncovered bit could absorb every
     difference); when 64 % bands != 0 the early bands take the extra
-    bit each. Columns other than ``dhash`` pass through, so a
-    frame-indexed hash table (video.py) keeps its frame index."""
+    bit each. Every input column passes through, so a frame-indexed
+    hash table (video.py) keeps its frame index."""
     bands = max_hamming + 1
     bounds = [(i * 64) // bands for i in range(bands + 1)]
 
@@ -2527,6 +2527,61 @@ def _dhash_bands(
     band_vals = F.array(*[_band(lo, hi) for lo, hi in zip(bounds, bounds[1:])])
     return hashes.select(
         "*", F.posexplode(band_vals).alias("band", "bv")
+    )
+
+
+def _check_max_hamming(max_hamming: int) -> None:
+    # -1 leaves no band at all, and 64 or more a zero-width band that
+    # every hash matches, turning any probe into all-pairs
+    if not (0 <= max_hamming < 64):
+        raise ValueError("need 0 <= max_hamming < 64")
+
+
+def image_neardup_history(
+    max_hamming: int = 3, id_col: str = "media_id"
+) -> NearDupHistory:
+    """The dHash image family (dedup.NearDupHistory): one 64-bit dHash
+    per decodable image, history rows (band, bv, dhash) keyed on the
+    pigeonhole band (band, bv), and an EXACT Hamming verify on the full
+    hash each row carries. Codec-bound rows (undecodable pixels) have no
+    fingerprint, so they never collide and pass through."""
+    _check_max_hamming(max_hamming)
+
+    def rows(hashes: DataFrame) -> DataFrame:
+        return _dhash_bands(hashes, max_hamming).select(
+            "media_id", "band", "bv", "dhash"
+        )
+
+    def verify(hits: DataFrame, _) -> DataFrame:
+        hamming = F.bit_count(F.col("p.dhash").bitwiseXOR(F.col("s.dhash")))
+        return hits.where(hamming <= max_hamming)
+
+    def pairs(hashes: DataFrame) -> DataFrame:
+        banded = rows(hashes)
+        a = banded.select(
+            F.col("media_id").alias("id_a"), F.col("dhash").alias("__ha"), "band", "bv"
+        )
+        b = banded.select(
+            F.col("media_id").alias("id_b"), F.col("dhash").alias("__hb"), "band", "bv"
+        )
+        return (
+            a.join(b, ["band", "bv"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
+            .select(
+                "id_a",
+                "id_b",
+                F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))).alias("hamming"),
+            )
+            .where(F.col("hamming") <= max_hamming)
+        )
+
+    return NearDupHistory(
+        lambda media: image_dhash(media, id_col).select("media_id", "dhash"),
+        rows,
+        ("band", "bv"),
+        verify=verify,
+        pairs=pairs,
     )
 
 
@@ -2545,28 +2600,8 @@ def image_neardup_join(
     candidates. One corpus decode pass, one band-keyed shuffle, no
     all-pairs comparison; the only Python is the Arrow-batched pixel
     decode + hash."""
-    if not (0 <= max_hamming < 64):
-        raise ValueError("need 0 <= max_hamming < 64")
-    hashes = image_dhash(media, id_col).select(id_col, "dhash")
-    banded = _dhash_bands(hashes, max_hamming, id_col)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("dhash").alias("__ha"), "band", "bv"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("dhash").alias("__hb"), "band", "bv"
-    )
-    pairs = (
-        a.join(b, ["band", "bv"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
-    return pairs
+    family = image_neardup_history(max_hamming, id_col)
+    return family.pairs(family.fingerprint(media))
 
 
 def image_dedup_against_history(
@@ -2576,55 +2611,21 @@ def image_dedup_against_history(
     id_col: str = "media_id",
     update_state: bool = False,
 ) -> DataFrame:
-    """Image near-dup filter against everything EVER ingested — the
-    dHash twin of dedup_against_history (dedup.py), sharing its ENTIRE
-    state discipline: the history table at ``state_dir`` holds
-    (band, bv, dhash) rows (three longs per band per kept image),
-    is read and appended through the same store protocol
-    (versioned_store.py), and compacts with the same compact_history —
-    the (band, bv) probe-key shape is what the discipline needs, not
-    the hash family.
+    """Image near-dup filter against everything EVER ingested: drops an
+    image when a (band, bv) band of its dHash matches a stored one AND
+    the exact Hamming distance to that stored hash is <= max_hamming.
+    The drop decision is exact over the dHash metric (no band-collision
+    false positives) and recall stays total by the pigeonhole argument.
+    The history at ``state_dir`` holds (band, bv, dhash) rows; probe and
+    append are dedup.filter_history over image_neardup_history, the one
+    mechanism of every near-dup family, and dedup.compact_history
+    compacts it.
 
-    It is STRONGER than the text twin in one way: because the full
-    64-bit dhash rides each band row, cross-batch candidates verify by
-    EXACT Hamming distance (bit_count of the xor, JVM-side), so the
-    drop decision is exact over the dHash metric — no band-collision
-    false positives — while recall stays total by the pigeonhole
-    argument. Codec-bound rows (undecodable pixels) never collide and
-    pass through.
-
-    CRASH ORDERING: same as the text twin — append AFTER the sink
-    commits (update_state=False + append_image_history), or eagerly
-    with update_state=True where replay loss is acceptable."""
-    spark = media.sparkSession
-    hashes = image_dhash(media, id_col).select(id_col, "dhash")
-    bands = _dhash_bands(hashes, max_hamming, id_col)
-    seen = versioned_store.read(spark, state_dir)
-    if seen is not None:
-        losers = (
-            bands.join(
-                seen.select("band", "bv", F.col("dhash").alias("__hd")),
-                ["band", "bv"],
-            )
-            .where(
-                F.bit_count(F.col("dhash").bitwiseXOR(F.col("__hd")))
-                <= max_hamming
-            )
-            .select(id_col)
-            .distinct()
-        )
-        kept = media.join(losers, id_col, "left_anti")
-    else:
-        kept = media
-    return kept.localCheckpoint(eager=True) if update_state is False else (
-        _append_after(kept, state_dir, max_hamming, id_col)
-    )
-
-
-def _append_after(kept, state_dir, max_hamming, id_col):
-    kept = kept.localCheckpoint(eager=True)
-    append_image_history(kept, state_dir, max_hamming, id_col)
-    return kept
+    CRASH ORDERING: append AFTER the sink commits (update_state=False +
+    append_image_history), or eagerly with update_state=True where
+    replay loss is acceptable."""
+    family = image_neardup_history(max_hamming, id_col)
+    return filter_history(media, state_dir, family, id_col, update_state)
 
 
 def append_image_history(
@@ -2633,42 +2634,44 @@ def append_image_history(
     max_hamming: int = 3,
     id_col: str = "media_id",
 ) -> None:
-    """Append ``media``'s dHash band rows to the image history table —
-    split out so streaming callers order it AFTER the sink write (the
-    at-least-once contract of neardup_foreach_batch). Duplicate rows
-    from replays are harmless (membership semantics) and compact away."""
-    hashes = image_dhash(media, id_col).select(id_col, "dhash")
-    versioned_store.append(
-        _dhash_bands(hashes, max_hamming, id_col).select("band", "bv", "dhash"),
-        state_dir,
-    )
+    """Append ``media``'s dHash band rows to the image history — split
+    out so streaming callers order it AFTER the sink write. Duplicate
+    rows from replays are harmless (membership semantics) and compact
+    away."""
+    append_to_history(media, state_dir, image_neardup_history(max_hamming, id_col))
 
 
-def _audio_history_rows(
-    media: DataFrame,
-    id_col: str,
-    frame: int,
-    hop: int,
-    energy_floor: float | None,
-):
-    """(bh, idx, fp) history rows for a WAV corpus: one row per (gated)
-    subfingerprint, carrying its frame index and the WHOLE clip's
-    ordered fingerprint array so a later probe can verify the exact BER
-    at the matched alignment — the audio analog of the image history's
-    full-dhash column. Also returns (subs, per-clip fps) for reuse."""
-    subs = audio_fingerprint(media, id_col, frame, hop).localCheckpoint(
-        eager=True
+def audio_neardup_history(
+    max_ber: float = 0.25,
+    id_col: str = "media_id",
+    frame: int = 2048,
+    hop: int = 1024,
+    energy_floor: float | None = None,
+    max_bucket: int | None = None,
+) -> NearDupHistory:
+    """The Haitsma-Kalker audio family (dedup.NearDupHistory): history
+    rows (bh, idx, fp), one per subfingerprint that clears
+    ``energy_floor``, keyed on the exact 32-bit subfingerprint ``bh``
+    and carrying its frame index and the WHOLE clip's ordered
+    fingerprint; a candidate verifies by the bit-error rate over the
+    aligned overlap (<= ``max_ber``). ``max_bucket`` caps the
+    within-batch probe buckets (audio_neardup_join)."""
+    if not (0.0 <= max_ber <= 1.0):
+        raise ValueError("need 0 <= max_ber <= 1")
+    if energy_floor is not None and energy_floor < 0:
+        raise ValueError("energy_floor must be >= 0")
+
+    def probe(subs: DataFrame) -> DataFrame:
+        if energy_floor is not None:
+            subs = subs.where(F.col("ac_rms") >= energy_floor)
+        return subs.select("media_id", "frame_idx", F.col("sub").alias("bh"))
+
+    return _aligned_history(
+        lambda media: audio_fingerprint(media, id_col, frame, hop),
+        probe, ("bh",), "sub", 32,
+        lambda n_over, xor_bits: _ber(n_over, xor_bits) <= max_ber,
+        max_bucket,
     )
-    fps = _clip_fps(subs)
-    probe = subs
-    if energy_floor is not None:
-        probe = probe.where(F.col("ac_rms") >= energy_floor)
-    rows = probe.join(fps, "media_id").select(
-        F.col("sub").alias("bh"),
-        F.col("frame_idx").alias("idx"),
-        "fp",
-    )
-    return subs, fps, rows
 
 
 def audio_dedup_against_history(
@@ -2681,59 +2684,21 @@ def audio_dedup_against_history(
     energy_floor: float | None = None,
     update_state: bool = False,
 ) -> DataFrame:
-    """Audio near-dup filter against everything EVER ingested — the
-    Haitsma-Kalker twin of dedup_against_history: the history at
-    ``state_dir`` holds (bh, idx, fp) rows (one per stored
-    subfingerprint, carrying the owning clip's full fingerprint array),
-    kept through the same store protocol (versioned_store.py) and
-    compact_history as the text/image stores. A new clip drops when any of its subfingerprints
-    EXACTLY matches a stored one AND the bit-error rate over the
-    aligned overlap verifies <= ``max_ber`` (the join's exact contract,
-    cross-batch). ``energy_floor`` gates both the probes and what the
-    paired append stores — near-silent frames neither probe nor
-    accumulate. Undecodable payloads never collide and pass through.
+    """Audio near-dup filter against everything EVER ingested: a clip
+    drops when any of its subfingerprints EXACTLY matches a stored one
+    AND the bit-error rate over the aligned overlap verifies <=
+    ``max_ber`` (the join's exact contract, cross-batch).
+    ``energy_floor`` gates both the probes and what the paired append
+    stores — near-silent frames neither probe nor accumulate.
+    Undecodable payloads never collide and pass through. The history at
+    ``state_dir`` holds (bh, idx, fp) rows; probe and append are
+    dedup.filter_history over audio_neardup_history, the one mechanism
+    of every near-dup family, and dedup.compact_history compacts it.
 
-    CRASH ORDERING: same as the text twin — append AFTER the sink
-    commits (update_state=False + append_audio_history)."""
-    spark = media.sparkSession
-    subs, fps, _ = _audio_history_rows(media, id_col, frame, hop, energy_floor)
-    probe = subs
-    if energy_floor is not None:
-        probe = probe.where(F.col("ac_rms") >= energy_floor)
-    seen = versioned_store.read(spark, state_dir)
-    if seen is not None:
-        cands = (
-            probe.select(
-                "media_id", F.col("frame_idx").alias("__ia"),
-                F.col("sub").alias("bh"),
-            )
-            .join(seen, "bh")
-            .select(
-                "media_id",
-                (F.col("idx") - F.col("__ia")).alias("offset"),
-                F.col("fp").alias("__fb"),
-            )
-            .distinct()
-            .join(fps.select("media_id", F.col("fp").alias("__fa")), "media_id")
-        )
-        n_over, ber = _aligned_ber(
-            F.col("__fa"), F.col("__fb"), F.col("offset")
-        )
-        losers = (
-            cands.where((n_over > 0) & (ber <= max_ber))
-            .select("media_id")
-            .distinct()
-            .withColumnRenamed("media_id", id_col)
-        )
-        kept = media.join(losers, id_col, "left_anti")
-    else:
-        kept = media
-    kept = kept.localCheckpoint(eager=True)
-    if update_state:
-        append_audio_history(
-            kept, state_dir, id_col, frame, hop, energy_floor
-        )
-    return kept
+    CRASH ORDERING: append AFTER the sink commits (update_state=False +
+    append_audio_history)."""
+    family = audio_neardup_history(max_ber, id_col, frame, hop, energy_floor)
+    return filter_history(media, state_dir, family, id_col, update_state)
 
 
 def append_audio_history(
@@ -2746,8 +2711,10 @@ def append_audio_history(
 ) -> None:
     """Append ``media``'s subfingerprint rows to the audio history —
     split out so streaming callers order it AFTER the sink write."""
-    _, _, rows = _audio_history_rows(media, id_col, frame, hop, energy_floor)
-    versioned_store.append(rows, state_dir)
+    family = audio_neardup_history(
+        id_col=id_col, frame=frame, hop=hop, energy_floor=energy_floor
+    )
+    append_to_history(media, state_dir, family)
 
 
 def make_pgm(w: int, h: int, pixels: bytes) -> bytes:
@@ -3131,70 +3098,45 @@ def audio_neardup_join(
     missed only if every sub it shares is sub-floor. Unlike max_bucket
     (which reacts to corpus-wide frequency), the gate is per-clip and
     needs no extra aggregate."""
-    if not (0.0 <= max_ber <= 1.0):
-        raise ValueError("need 0 <= max_ber <= 1")
-    subs = audio_fingerprint(media, id_col, frame, hop).localCheckpoint(eager=True)
-    probe_subs = subs
-    if energy_floor is not None:
-        if energy_floor < 0:
-            raise ValueError("energy_floor must be >= 0")
-        probe_subs = probe_subs.where(F.col("ac_rms") >= energy_floor)
-    if max_bucket is not None:
-        if max_bucket < 1:
-            raise ValueError("max_bucket must be >= 1")
-        hot = (
-            probe_subs.groupBy("sub")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > max_bucket)
-            .select("sub")
-        )
-        probe_subs = probe_subs.join(F.broadcast(hot), "sub", "left_anti")
-    per_id = _clip_fps(subs)
-    a = probe_subs.select(
-        F.col("media_id").alias("id_a"), F.col("frame_idx").alias("__ia"), "sub"
+    family = audio_neardup_history(
+        max_ber, id_col, frame, hop, energy_floor, max_bucket
     )
-    b = probe_subs.select(
-        F.col("media_id").alias("id_b"), F.col("frame_idx").alias("__ib"), "sub"
-    )
-    cands = (
-        a.join(b, "sub")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", (F.col("__ib") - F.col("__ia")).alias("offset"))
-        .distinct()
-    )
-    fa = per_id.select(F.col("media_id").alias("id_a"), F.col("fp").alias("__fa"))
-    fb = per_id.select(F.col("media_id").alias("id_b"), F.col("fp").alias("__fb"))
-    j = cands.join(fa, "id_a").join(fb, "id_b")
-    n_over, ber = _aligned_ber(F.col("__fa"), F.col("__fb"), F.col("offset"))
-    return (
-        j.where(n_over > 0)
-        .select("id_a", "id_b", "offset", ber.alias("ber"))
-        .where(F.col("ber") <= max_ber)
+    subs = family.fingerprint(media).localCheckpoint(eager=True)
+    return family.pairs(subs).select(
+        "id_a", "id_b", "offset",
+        _ber(F.col("n_over"), F.col("xor_bits")).alias("ber"),
     )
 
 
-def _clip_fps(subs: DataFrame) -> DataFrame:
-    """(media_id, fp): each clip's frame-ordered subfingerprint array,
-    from the exploded audio_fingerprint table."""
+def _ber(n_over, xor_bits):
+    """Bit-error rate of ``xor_bits`` differing bits over ``n_over``
+    aligned 32-bit subfingerprints."""
+    return F.round(xor_bits / (n_over.cast("double") * 32.0), 6)
+
+
+def _clip_fps(subs: DataFrame, col: str) -> DataFrame:
+    """(media_id, fp): each clip's frame-ordered array of ``col`` (the
+    audio ``sub`` or the video ``dhash``), from an exploded
+    (media_id, frame_idx, col) fingerprint table."""
     return subs.groupBy("media_id").agg(
         F.array_sort(
-            F.collect_list(F.struct("frame_idx", "sub"))
+            F.collect_list(F.struct("frame_idx", col))
         ).alias("__fs")
     ).select(
         "media_id",
-        F.transform("__fs", lambda s: s.getField("sub")).alias("fp"),
+        F.transform("__fs", lambda s: s.getField(col)).alias("fp"),
     )
 
 
-def _aligned_ber(fa, fb, offset):
-    """(n_over, ber) Columns: exact bit-error rate over the overlapping
-    frames of two subfingerprint arrays aligned so a-frame i pairs with
-    b-frame i + offset — JVM-side slice/zip_with/bit_count, shared by
-    the pairwise join and the streaming history probe. The xor masks to
-    the low 32 bits BEFORE bit_count: the int32 xor gets implicitly
-    sign-extended to bigint, and a negative xor result would count 32
-    phantom high bits (observed: per-frame counts of 36 on a 32-bit
-    hash)."""
+def _aligned_xor(fa, fb, offset, bits: int):
+    """(n_over, xor_bits) Columns: the number of overlapping frames of
+    two fingerprint arrays aligned so a-frame i pairs with b-frame
+    i + offset, and the differing bits summed over that overlap —
+    JVM-side slice/zip_with/bit_count. ``bits`` is the hash width: the
+    32-bit audio xor masks to the low 32 bits BEFORE bit_count (the
+    int32 xor gets sign-extended to bigint, and a negative result would
+    count 32 phantom high bits — observed: per-frame counts of 36 on a
+    32-bit hash); a 64-bit dHash needs no mask."""
     a_sl = F.slice(
         fa,
         F.greatest(F.lit(1), F.lit(1) - offset),
@@ -3206,16 +3148,91 @@ def _aligned_ber(fa, fb, offset):
         F.size(fa) + F.size(fb),
     )
     n_over = F.least(F.size(a_sl), F.size(b_sl))
-    mask32 = F.lit(0xFFFFFFFF).cast("long")
+
+    def diff(x, y):
+        v = x.cast("long").bitwiseXOR(y.cast("long"))
+        if bits < 64:
+            v = v.bitwiseAND(F.lit((1 << bits) - 1))
+        return F.bit_count(v).cast("long")
+
     xor_bits = F.aggregate(
-        F.zip_with(
-            F.slice(a_sl, 1, n_over),
-            F.slice(b_sl, 1, n_over),
-            lambda x, y: F.bit_count(
-                x.cast("long").bitwiseXOR(y.cast("long")).bitwiseAND(mask32)
-            ).cast("long"),
-        ),
+        F.zip_with(F.slice(a_sl, 1, n_over), F.slice(b_sl, 1, n_over), diff),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    return n_over, F.round(xor_bits / (n_over.cast("double") * 32.0), 6)
+    return n_over, xor_bits
+
+
+def _aligned_history(
+    fingerprint, probe, key: tuple[str, ...], col: str, bits: int, accept,
+    max_bucket: int | None = None, pair_probe=None,
+) -> NearDupHistory:
+    """The NearDupHistory of a frame-aligned family (audio, video).
+    ``fingerprint`` yields the exploded (media_id, frame_idx, col)
+    table; ``probe`` maps it to the (media_id, frame_idx, *key) probe
+    rows (``pair_probe``, if given, replaces it for the within-batch
+    pairs only). A candidate is a (clip, alignment offset) whose probe
+    keys match exactly; it verifies when its aligned overlap is
+    non-empty and ``accept(n_over, xor_bits)`` holds (_aligned_xor over
+    ``bits``-wide hashes). History rows are (*key, idx, fp): the probe
+    key, its frame index and the whole clip's ordered ``col`` array."""
+
+    def rows(subs: DataFrame) -> DataFrame:
+        # left join, equal to the inner one (every non-null clip id has
+        # its array): the optimizer then drops the array fetch from a
+        # plan that never reads ``fp``, such as the history probe
+        probe_rows = probe(subs).where(F.col("media_id").isNotNull())
+        return probe_rows.join(_clip_fps(subs, col), "media_id", "left").select(
+            "media_id", *key, F.col("frame_idx").alias("idx"), "fp"
+        )
+
+    def aligned(cands: DataFrame, fa: str, fb: str) -> DataFrame:
+        n_over, xor_bits = _aligned_xor(F.col(fa), F.col(fb), F.col("offset"), bits)
+        return cands.select(
+            "*", n_over.alias("n_over"), xor_bits.alias("xor_bits")
+        ).where((F.col("n_over") > 0) & accept(F.col("n_over"), F.col("xor_bits")))
+
+    def verify(hits: DataFrame, subs: DataFrame) -> DataFrame:
+        # distinct (clip, offset, stored fp) BEFORE fetching the probe
+        # clip's own array: the key join shuffles no probe-side arrays
+        cands = hits.select(
+            F.col("p.media_id").alias("media_id"),
+            (F.col("s.idx") - F.col("p.idx")).alias("offset"),
+            F.col("s.fp").alias("__fb"),
+        ).distinct()
+        fps = _clip_fps(subs, col).select("media_id", F.col("fp").alias("__fa"))
+        return aligned(cands.join(fps, "media_id"), "__fa", "__fb")
+
+    def pairs(subs: DataFrame) -> DataFrame:
+        """Verified (id_a < id_b, offset) pairs with their n_over and
+        xor_bits, the hot-bucket stop-list applied to the probe keys
+        first."""
+        banded = (pair_probe or probe)(subs)
+        if max_bucket is not None:
+            if max_bucket < 1:
+                raise ValueError("max_bucket must be >= 1")
+            hot = (
+                banded.groupBy(*key)
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .where(F.col("__n") > max_bucket)
+                .select(*key)
+            )
+            banded = banded.join(F.broadcast(hot), list(key), "left_anti")
+        a = banded.select(
+            F.col("media_id").alias("id_a"), F.col("frame_idx").alias("__ia"), *key
+        )
+        b = banded.select(
+            F.col("media_id").alias("id_b"), F.col("frame_idx").alias("__ib"), *key
+        )
+        cands = (
+            a.join(b, list(key))
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", (F.col("__ib") - F.col("__ia")).alias("offset"))
+            .distinct()
+        )
+        fps = _clip_fps(subs, col)
+        fa = fps.select(F.col("media_id").alias("id_a"), F.col("fp").alias("__fa"))
+        fb = fps.select(F.col("media_id").alias("id_b"), F.col("fp").alias("__fb"))
+        return aligned(cands.join(fa, "id_a").join(fb, "id_b"), "__fa", "__fb")
+
+    return NearDupHistory(fingerprint, rows, key, verify=verify, pairs=pairs)

@@ -41,8 +41,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import versioned_store
+from .dedup import NearDupHistory, append_to_history, filter_history
 from .multimodal import (
+    _aligned_history,
+    _check_max_hamming,
     _decode_jpeg_gray,
     _dhash_bands,
     dhash64,
@@ -1440,51 +1442,6 @@ def video_fingerprint(
     )
 
 
-def _video_fps(subs: DataFrame) -> DataFrame:
-    """(media_id, fp): each clip's frame-ordered dHash array."""
-    return (
-        subs.groupBy("media_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("frame_idx", "dhash"))
-            ).alias("__fs")
-        )
-        .select(
-            "media_id",
-            F.transform("__fs", lambda s: s.getField("dhash")).alias("fp"),
-        )
-    )
-
-
-def _aligned_hamming(fa, fb, offset):
-    """(n_over, mean_hamming) Columns: mean per-frame Hamming distance
-    over the overlap of two dHash arrays aligned so a-frame i pairs
-    with b-frame i + offset — the 64-bit twin of multimodal._aligned_ber
-    (no mask needed: the hashes are stored as full-width longs, and
-    bit_count of the long xor IS the 64-bit popcount)."""
-    a_sl = F.slice(
-        fa,
-        F.greatest(F.lit(1), F.lit(1) - offset),
-        F.size(fa) + F.size(fb),
-    )
-    b_sl = F.slice(
-        fb,
-        F.greatest(F.lit(1), offset + F.lit(1)),
-        F.size(fa) + F.size(fb),
-    )
-    n_over = F.least(F.size(a_sl), F.size(b_sl))
-    xor_bits = F.aggregate(
-        F.zip_with(
-            F.slice(a_sl, 1, n_over),
-            F.slice(b_sl, 1, n_over),
-            lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return n_over, F.round(xor_bits / n_over.cast("double"), 6)
-
-
 def _pair_bands(subs: DataFrame, max_total: int) -> DataFrame:
     """(media_id, frame_idx, band, bv) probe rows over the 128-bit
     CONCATENATION of consecutive frame hashes (frame i low, frame i+1
@@ -1542,6 +1499,46 @@ def _pair_bands(subs: DataFrame, max_total: int) -> DataFrame:
     )
 
 
+def video_neardup_history(
+    max_hamming: int = 3,
+    id_col: str = "media_id",
+    every_ms: int | None = None,
+    max_bucket: int | None = None,
+    pair_probe: bool = False,
+) -> NearDupHistory:
+    """The video family (dedup.NearDupHistory): the audio lookup-table
+    discipline with the image hash family. Each sampled frame's 64-bit
+    dHash splits into ``max_hamming + 1`` pigeonhole bit-bands
+    (multimodal._dhash_bands); history rows (band, bv, idx, fp) carry
+    the frame index and the whole clip's ordered dHash array, and a
+    candidate (clip, alignment offset) verifies when the mean per-frame
+    Hamming distance over the aligned overlap is <= ``max_hamming``.
+    ``every_ms`` sets the frame sampling cadence: a history written at
+    one cadence must be probed at the same cadence, since offsets count
+    SAMPLED positions. ``max_bucket`` and ``pair_probe`` shape the
+    within-batch probe only (video_neardup_join)."""
+    _check_max_hamming(max_hamming)
+
+    def bands(subs: DataFrame) -> DataFrame:
+        return _dhash_bands(subs, max_hamming).select(
+            "media_id", "frame_idx", "band", "bv"
+        )
+
+    return _aligned_history(
+        lambda media: video_fingerprint(media, id_col, every_ms),
+        bands, ("band", "bv"), "dhash", 64,
+        lambda n_over, xor_bits: _mean_hamming(n_over, xor_bits) <= float(max_hamming),
+        max_bucket,
+        (lambda subs: _pair_bands(subs, max(2 * max_hamming, 1))) if pair_probe else None,
+    )
+
+
+def _mean_hamming(n_over, xor_bits):
+    """Mean per-frame Hamming distance of ``xor_bits`` differing bits
+    over ``n_over`` aligned 64-bit frame hashes."""
+    return F.round(xor_bits / n_over.cast("double"), 6)
+
+
 def video_neardup_join(
     media: DataFrame,
     max_hamming: int = 3,
@@ -1551,12 +1548,10 @@ def video_neardup_join(
     pair_probe: bool = False,
 ) -> DataFrame:
     """Video near-duplicate pairs (id_a < id_b, offset, n_over,
-    mean_hamming): the audio lookup-table discipline with the image
-    hash family. Each sampled frame's 64-bit dHash splits into
-    ``max_hamming + 1`` pigeonhole bit-bands (multimodal._dhash_bands);
-    candidates are (pair, alignment-offset) tuples where ANY band of
-    ANY frame pair matches exactly (one shuffle keyed by (band, value),
-    no all-pairs); each candidate verifies by the exact mean per-frame
+    mean_hamming) over video_neardup_history's frame bands: candidates
+    are (pair, alignment-offset) tuples where ANY band of ANY frame
+    pair matches exactly (one shuffle keyed by (band, value), no
+    all-pairs); each candidate verifies by the exact mean per-frame
     Hamming distance over its aligned overlap, JVM-side. Recall
     contract: a pair aligned at offset o with at least one aligned
     frame within ``max_hamming`` dHash bits is ALWAYS a candidate at o
@@ -1575,81 +1570,14 @@ def video_neardup_join(
     uniform-corpus candidate mass collapses (single-frame 16-bit bands
     fill up linearly with corpus frames, going quadratic; see
     _pair_bands). The verify stays the same exact aligned mean."""
-    if not (0 <= max_hamming < 64):
-        raise ValueError("need 0 <= max_hamming < 64")
-    subs = video_fingerprint(media, id_col, every_ms).localCheckpoint(
-        eager=True
+    family = video_neardup_history(
+        max_hamming, id_col, every_ms, max_bucket, pair_probe
     )
-    if pair_probe:
-        banded = _pair_bands(subs, max(2 * max_hamming, 1))
-    else:
-        banded = _dhash_bands(subs, max_hamming, "media_id")
-    if max_bucket is not None:
-        if max_bucket < 1:
-            raise ValueError("max_bucket must be >= 1")
-        hot = (
-            banded.groupBy("band", "bv")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > max_bucket)
-            .select("band", "bv")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "bv"], "left_anti")
-    a = banded.select(
-        F.col("media_id").alias("id_a"), F.col("frame_idx").alias("__ia"),
-        "band", "bv",
+    subs = family.fingerprint(media).localCheckpoint(eager=True)
+    return family.pairs(subs).select(
+        "id_a", "id_b", "offset", "n_over",
+        _mean_hamming(F.col("n_over"), F.col("xor_bits")).alias("mean_hamming"),
     )
-    b = banded.select(
-        F.col("media_id").alias("id_b"), F.col("frame_idx").alias("__ib"),
-        "band", "bv",
-    )
-    cands = (
-        a.join(b, ["band", "bv"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", (F.col("__ib") - F.col("__ia")).alias("offset"))
-        .distinct()
-    )
-    per_id = _video_fps(subs)
-    fa = per_id.select(F.col("media_id").alias("id_a"), F.col("fp").alias("__fa"))
-    fb = per_id.select(F.col("media_id").alias("id_b"), F.col("fp").alias("__fb"))
-    j = cands.join(fa, "id_a").join(fb, "id_b")
-    n_over, mean_h = _aligned_hamming(F.col("__fa"), F.col("__fb"), F.col("offset"))
-    return (
-        j.where(n_over > 0)
-        .select(
-            "id_a", "id_b", "offset",
-            n_over.alias("n_over"), mean_h.alias("mean_hamming"),
-        )
-        .where(F.col("mean_hamming") <= float(max_hamming))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cross-batch history (streaming near-dup) — shares the text/image/audio
-# manifest + compaction discipline from dedup.py
-# ---------------------------------------------------------------------------
-
-
-def _video_history_rows(
-    media: DataFrame,
-    id_col: str,
-    max_hamming: int,
-    every_ms: int | None,
-):
-    """(band, bv, idx, fp) history rows: one per frame band, carrying
-    the frame index and the owning clip's full ordered dHash array so a
-    later probe can verify the exact aligned mean Hamming — the video
-    analog of the audio history's (bh, idx, fp) layout. Also returns
-    (subs, per-clip fps) for reuse."""
-    subs = video_fingerprint(media, id_col, every_ms).localCheckpoint(
-        eager=True
-    )
-    fps = _video_fps(subs)
-    rows = (
-        _dhash_bands(subs, max_hamming, "media_id")
-        .join(fps, "media_id")
-        .select("band", "bv", F.col("frame_idx").alias("idx"), "fp")
-    )
-    return subs, fps, rows
 
 
 def video_dedup_against_history(
@@ -1660,51 +1588,20 @@ def video_dedup_against_history(
     every_ms: int | None = None,
     update_state: bool = False,
 ) -> DataFrame:
-    """Video near-dup filter against everything EVER ingested — the
-    third media twin of dedup_against_history, sharing the store
-    protocol (versioned_store.py) and compact_history of the
-    text/image/audio stores.
-    A new clip drops when any of its frame-band values matches a stored
-    one AND the aligned mean per-frame Hamming verifies <= max_hamming
-    (exact, cross-batch, alignment-aware — a re-ingested trim of an
-    archived clip still drops). Undecodable payloads never collide and
-    pass through.
+    """Video near-dup filter against everything EVER ingested: a clip
+    drops when any of its frame-band values matches a stored one AND
+    the aligned mean per-frame Hamming verifies <= max_hamming (exact,
+    cross-batch, alignment-aware — a re-ingested trim of an archived
+    clip still drops). Undecodable payloads never collide and pass
+    through. The history at ``state_dir`` holds (band, bv, idx, fp)
+    rows; probe and append are dedup.filter_history over
+    video_neardup_history, the one mechanism of every near-dup family,
+    and dedup.compact_history compacts it.
 
-    CRASH ORDERING: same as the text twin — append AFTER the sink
-    commits (update_state=False + append_video_history)."""
-    spark = media.sparkSession
-    subs, fps, _ = _video_history_rows(media, id_col, max_hamming, every_ms)
-    seen = versioned_store.read(spark, state_dir)
-    if seen is not None:
-        probe = _dhash_bands(subs, max_hamming, "media_id").select(
-            "media_id", F.col("frame_idx").alias("__ia"), "band", "bv"
-        )
-        cands = (
-            probe.join(seen, ["band", "bv"])
-            .select(
-                "media_id",
-                (F.col("idx") - F.col("__ia")).alias("offset"),
-                F.col("fp").alias("__fb"),
-            )
-            .distinct()
-            .join(fps.select("media_id", F.col("fp").alias("__fa")), "media_id")
-        )
-        n_over, mean_h = _aligned_hamming(
-            F.col("__fa"), F.col("__fb"), F.col("offset")
-        )
-        losers = (
-            cands.where((n_over > 0) & (mean_h <= float(max_hamming)))
-            .select("media_id")
-            .distinct()
-            .withColumnRenamed("media_id", id_col)
-        )
-        kept = media.join(losers, id_col, "left_anti")
-    else:
-        kept = media
-    kept = kept.localCheckpoint(eager=True)
-    if update_state:
-        append_video_history(kept, state_dir, max_hamming, id_col, every_ms)
-    return kept
+    CRASH ORDERING: append AFTER the sink commits (update_state=False +
+    append_video_history)."""
+    family = video_neardup_history(max_hamming, id_col, every_ms)
+    return filter_history(media, state_dir, family, id_col, update_state)
 
 
 def append_video_history(
@@ -1716,8 +1613,8 @@ def append_video_history(
 ) -> None:
     """Append ``media``'s frame-band rows to the video history — split
     out so streaming callers order it AFTER the sink write."""
-    _, _, rows = _video_history_rows(media, id_col, max_hamming, every_ms)
-    versioned_store.append(rows, state_dir)
+    family = video_neardup_history(max_hamming, id_col, every_ms)
+    append_to_history(media, state_dir, family)
 
 
 # ---------------------------------------------------------------------------

@@ -172,6 +172,27 @@ def _shares_target(outputs: list[dict]) -> bool:
     )
 
 
+def _routed(src: DataFrame, out: dict) -> DataFrame:
+    """``src`` routed by the output's ``match`` and ``conditions`` and run
+    through its ``processors:``."""
+    df = _route(
+        src, out.get("match", "*"), out.get("conditions"), out.get("condition_op", "AND")
+    )
+    procs = (out.get("processors") or {}).get("logs") or []
+    return _apply_processors(df, procs) if procs else df
+
+
+def _check_output(src: DataFrame, out: dict) -> None:
+    """Fail the load for an [OUTPUT] ``_write_output`` could not write:
+    an unknown plugin, a missing ``path``, or an option its payload
+    shaper rejects. The shaper runs on an empty route, so no job starts."""
+    name = _output_name(out)
+    if name not in ("null", "counter", "stdout") and not out.get("path"):
+        raise ValueError(f"output {name!r} needs a path")
+    if name in _OUTPUTS:
+        _OUTPUTS[name][0](_routed(src.limit(0), out), out)
+
+
 def _write_output(src: DataFrame, out: dict) -> int:
     """One [OUTPUT] section: route ``src`` by ``match`` and ``conditions``,
     run the output's ``processors:``, write its payload; returns the count
@@ -179,12 +200,7 @@ def _write_output(src: DataFrame, out: dict) -> int:
     ``observe()``, one scan per output instead of a second count() pass
     over the route."""
     name = _output_name(out)
-    df = _route(
-        src, out.get("match", "*"), out.get("conditions"), out.get("condition_op", "AND")
-    )
-    procs = (out.get("processors") or {}).get("logs") or []
-    if procs:
-        df = _apply_processors(df, procs)
+    df = _routed(src, out)
     if name in ("null", "counter"):
         # no write job to ride — the count IS the action
         return df.count()
@@ -1007,5 +1023,5 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
 
     pipe.outputs = conf.get("pipeline", {}).get("outputs") or []
     for out in pipe.outputs:
-        _output_name(out)
+        _check_output(merged, out)
     return pipe

@@ -318,48 +318,37 @@ def neardup_foreach_batch(
     ``num_bands`` band hashes was seen, but streaming state is keyed —
     each (band, bh) key sees only its own bucket, and the cross-key vote
     would need a stream-stream join after a stateful op (unsupported
-    chaining). foreachBatch sidesteps it: each micro-batch runs the full
-    BATCH operator within the batch (star-edge path, skew-proof), then
-    extensions.dedup.dedup_against_history drops docs colliding with the
-    band-hash history table and appends the survivors' bands.
+    chaining). foreachBatch sidesteps it: each micro-batch runs the
+    BATCH operator minhash_dedup within the batch (star-edge path,
+    skew-proof), then the near-dup history mechanism every family
+    shares (extensions.dedup.history_foreach_batch) drops docs whose
+    bands hit the (band, bh) history and appends the survivors' bands.
 
     Semantics: within-batch = exact minhash_dedup semantics; cross-batch
-    = unbounded-horizon near-dup against everything ever kept (unlike
-    the watermark-bounded exact pass, history membership never expires —
-    state is num_bands tiny rows per distinct doc, kept by
-    extensions.versioned_store and compacted offline with
-    extensions.dedup.compact_history).
+    = unbounded-horizon near-dup against everything ever kept (history
+    membership never expires; state is num_bands tiny rows per kept
+    doc, compacted offline with extensions.dedup.compact_history).
 
-    Failure ordering: the sink write runs BEFORE the state append. A
-    crash between them makes the replayed batch re-emit its survivors
-    (duplicate delivery — the standard at-least-once foreachBatch
-    contract, so sinks must be idempotent); the reverse order would
-    LOSE them (the replay would drop the docs against their own
-    first-attempt bands). The append itself is semantically idempotent
-    (duplicate band rows don't change membership).
+    Failure ordering: the sink write runs BEFORE the state append, so a
+    crash between them re-emits the survivors on replay instead of
+    losing them (at-least-once; sinks must be idempotent).
 
     ``sink(batch_df, batch_id)`` receives the surviving rows. Returns the
     function to pass to ``writeStream.foreachBatch``.
     """
     from fluent_bit_spark.extensions.dedup import (
-        append_history, dedup_against_history, minhash_dedup,
+        history_foreach_batch, minhash_dedup, text_neardup_history,
     )
 
-    def process(batch_df, batch_id: int) -> None:
-        within = minhash_dedup(
-            batch_df, text_col, id_col, num_hashes, num_bands, shingle_n
-        )
-        survivors = dedup_against_history(
-            within, state_dir, text_col, id_col, num_hashes, num_bands,
-            shingle_n, update_state=False,
-        )
-        sink(survivors, batch_id)
-        append_history(
-            survivors, state_dir, text_col, id_col, num_hashes, num_bands,
-            shingle_n,
-        )
-
-    return process
+    process = history_foreach_batch(
+        sink, state_dir,
+        text_neardup_history(text_col, id_col, num_hashes, num_bands, shingle_n),
+        id_col,
+    )
+    return lambda batch_df, batch_id: process(
+        minhash_dedup(batch_df, text_col, id_col, num_hashes, num_bands, shingle_n),
+        batch_id,
+    )
 
 
 def image_neardup_foreach_batch(
@@ -369,37 +358,21 @@ def image_neardup_foreach_batch(
     id_col: str = "media_id",
 ):
     """Streaming image NEAR-dup as a foreachBatch stage — "is this image
-    a near-dup of anything ever seen", neardup_foreach_batch's dHash
-    twin reusing the identical history/compaction discipline (the
-    history is (band, bv, dhash) rows kept by the same
-    extensions.versioned_store protocol; extensions.dedup.compact_history
-    compacts it unchanged).
+    a near-dup of anything ever seen". Per micro-batch
+    (extensions.dedup.history_foreach_batch over
+    extensions.multimodal.image_neardup_history): decode + dHash once,
+    drop within-batch near-dups (image_neardup_join pairs: the lower id
+    of each pair survives), probe the (band, bv, dhash) history with an
+    EXACT Hamming verify, ``sink(survivors, batch_id)``, then append the
+    survivors' band rows. Sink-before-state: a crash between the two
+    re-emits on replay and loses nothing. Returns the function to pass
+    to ``writeStream.foreachBatch``."""
+    from fluent_bit_spark.extensions.dedup import history_foreach_batch
+    from fluent_bit_spark.extensions.multimodal import image_neardup_history
 
-    Per micro-batch: decode + dHash once, drop within-batch near-dups
-    (image_neardup_join pairs: the lower id of each pair survives),
-    probe the band history with an EXACT cross-batch Hamming verify
-    (image_dedup_against_history), ``sink(survivors, batch_id)``, then
-    append the survivors' band rows — sink-before-state, the same
-    at-least-once replay contract as the text twin. Returns the
-    function to pass to ``writeStream.foreachBatch``."""
-    from fluent_bit_spark.extensions.multimodal import (
-        append_image_history, image_dedup_against_history,
-        image_neardup_join,
+    return history_foreach_batch(
+        sink, state_dir, image_neardup_history(max_hamming, id_col), id_col
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        pairs = image_neardup_join(batch_df, max_hamming, id_col)
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        within = batch_df.join(losers, id_col, "left_anti")
-        survivors = image_dedup_against_history(
-            within, state_dir, max_hamming, id_col, update_state=False
-        )
-        sink(survivors, batch_id)
-        append_image_history(survivors, state_dir, max_hamming, id_col)
-
-    return process
 
 
 def audio_neardup_foreach_batch(
@@ -411,39 +384,23 @@ def audio_neardup_foreach_batch(
     energy_floor: float | None = None,
 ):
     """Streaming audio NEAR-dup as a foreachBatch stage — "is this clip
-    a near-dup of anything ever heard", completing the text/image/audio
-    history-discipline trio: per micro-batch, within-batch near-dups
-    collapse (audio_neardup_join, lower id survives), survivors probe
-    the (bh, idx, fp) subfingerprint history with the exact aligned-BER
-    verify (audio_dedup_against_history), ``sink(survivors,
-    batch_id)``, then the survivors' subfingerprints append —
-    sink-before-state, the at-least-once replay contract. Both
-    quadratic-pocket guards pass through (max_bucket to the within-
-    batch join, energy_floor to both stages)."""
-    from fluent_bit_spark.extensions.multimodal import (
-        append_audio_history, audio_dedup_against_history,
-        audio_neardup_join,
+    a near-dup of anything ever heard". Per micro-batch
+    (extensions.dedup.history_foreach_batch over
+    extensions.multimodal.audio_neardup_history): fingerprint once,
+    collapse within-batch near-dups (audio_neardup_join pairs, lower id
+    survives), probe the (bh, idx, fp) subfingerprint history with the
+    exact aligned-BER verify, ``sink(survivors, batch_id)``, then append
+    the survivors' subfingerprint rows. Sink-before-state: a crash
+    between the two re-emits on replay and loses nothing.
+    ``max_bucket`` caps the within-batch probe buckets; ``energy_floor``
+    gates the probes of both stages and what the history stores."""
+    from fluent_bit_spark.extensions.dedup import history_foreach_batch
+    from fluent_bit_spark.extensions.multimodal import audio_neardup_history
+
+    family = audio_neardup_history(
+        max_ber, id_col, energy_floor=energy_floor, max_bucket=max_bucket
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        pairs = audio_neardup_join(
-            batch_df, max_ber, id_col,
-            max_bucket=max_bucket, energy_floor=energy_floor,
-        )
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        within = batch_df.join(losers, id_col, "left_anti")
-        survivors = audio_dedup_against_history(
-            within, state_dir, max_ber, id_col,
-            energy_floor=energy_floor, update_state=False,
-        )
-        sink(survivors, batch_id)
-        append_audio_history(
-            survivors, state_dir, id_col, energy_floor=energy_floor
-        )
-
-    return process
+    return history_foreach_batch(sink, state_dir, family, id_col)
 
 
 def video_neardup_foreach_batch(
@@ -455,43 +412,26 @@ def video_neardup_foreach_batch(
     max_bucket: int | None = None,
 ):
     """Streaming video NEAR-dup as a foreachBatch stage — "is this clip
-    a near-dup of anything ever screened", completing the text/image/
-    audio/video history-discipline QUARTET: per micro-batch, within-
-    batch near-dups collapse (video_neardup_join, lower id survives),
-    survivors probe the (band, bv, idx, fp) frame-band history with the
-    exact aligned mean-Hamming verify (video_dedup_against_history — a
-    re-ingested TRIM of an archived clip still drops, the alignment
-    semantics), ``sink(survivors, batch_id)``, then the survivors' band
-    rows append — sink-before-state, the at-least-once replay contract.
-    ``max_bucket`` (the black-frame/test-card hot-bucket guard) passes
-    through to the within-batch join; ``every_ms`` sets the frame
-    sampling cadence for both stages (histories written at one cadence
-    must be probed at the same cadence — offsets count SAMPLED
-    positions)."""
-    from fluent_bit_spark.extensions.video import (
-        append_video_history, video_dedup_against_history,
-        video_neardup_join,
+    a near-dup of anything ever screened". Per micro-batch
+    (extensions.dedup.history_foreach_batch over
+    extensions.video.video_neardup_history): decode + fingerprint once,
+    collapse within-batch near-dups (video_neardup_join pairs, lower id
+    survives), probe the (band, bv, idx, fp) frame-band history with the
+    exact aligned mean-Hamming verify (a re-ingested TRIM of an archived
+    clip still drops), ``sink(survivors, batch_id)``, then append the
+    survivors' band rows. Sink-before-state: a crash between the two
+    re-emits on replay and loses nothing. ``max_bucket`` (the
+    black-frame/test-card hot-bucket guard) caps the within-batch probe
+    buckets; ``every_ms`` sets the frame sampling cadence for both
+    stages (a history written at one cadence must be probed at the same
+    cadence — offsets count SAMPLED positions)."""
+    from fluent_bit_spark.extensions.dedup import history_foreach_batch
+    from fluent_bit_spark.extensions.video import video_neardup_history
+
+    family = video_neardup_history(
+        max_hamming, id_col, every_ms, max_bucket=max_bucket
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        pairs = video_neardup_join(
-            batch_df, max_hamming, id_col,
-            every_ms=every_ms, max_bucket=max_bucket,
-        )
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        within = batch_df.join(losers, id_col, "left_anti")
-        survivors = video_dedup_against_history(
-            within, state_dir, max_hamming, id_col,
-            every_ms=every_ms, update_state=False,
-        )
-        sink(survivors, batch_id)
-        append_video_history(
-            survivors, state_dir, max_hamming, id_col, every_ms
-        )
-
-    return process
+    return history_foreach_batch(sink, state_dir, family, id_col)
 
 
 def funnel_levels_stream(

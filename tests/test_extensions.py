@@ -4305,7 +4305,7 @@ def test_fmp4_audio_trak_first_still_plans_video():
     assert (hdr["width"], hdr["height"]) == (320, 180)
 
 
-def test_dedup_parameter_guards(spark):
+def test_dedup_parameter_guards(spark, tmp_path):
     """r11 core-review guards: band_buckets rejects num_bands > sig_len
     (excess bands hash empty slices to one constant, silently
     collapsing the corpus to the global min id in the unverified dedup
@@ -4337,6 +4337,26 @@ def test_dedup_parameter_guards(spark):
     # valid configs still work (distinct shuffled texts all survive)
     assert minhash_dedup(df, num_hashes=8, num_bands=4).count() >= 4
     assert simhash_dedup(df, hamming_threshold=3, num_bands=4).count() >= 1
+
+    # the media history entry points reject what their joins reject:
+    # max_hamming=-1 once divided by zero and 64 made a zero-width band
+    # every hash matches; the audio history checked neither bound
+    from fluent_bit_spark.extensions.multimodal import (
+        audio_dedup_against_history, image_dedup_against_history,
+    )
+    from fluent_bit_spark.extensions.video import video_dedup_against_history
+
+    media = spark.createDataFrame([(1, bytearray(b"x"))], "media_id long, content binary")
+    state = str(tmp_path / "history")
+    for history in (image_dedup_against_history, video_dedup_against_history):
+        for max_hamming in (-1, 64):
+            with pytest.raises(ValueError, match="need 0 <= max_hamming < 64"):
+                history(media, state, max_hamming=max_hamming)
+    for max_ber in (-0.1, 1.5):
+        with pytest.raises(ValueError, match="need 0 <= max_ber <= 1"):
+            audio_dedup_against_history(media, state, max_ber=max_ber)
+    with pytest.raises(ValueError, match="energy_floor must be >= 0"):
+        audio_dedup_against_history(media, state, energy_floor=-1.0)
 
 
 def test_embedding_dedup_infers_dimension(spark):

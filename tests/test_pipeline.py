@@ -4,6 +4,8 @@ rewrite_tag -> stream task -> routed outputs. The fluent-bit
 
 import json
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.pipeline import load_pipeline
@@ -726,6 +728,33 @@ def test_unknown_output_rejected_at_load(spark, tmp_path, monkeypatch):
                     {"name": "nosuch", "match": "*", "path": str(tmp_path / "o")}],
     }}
     with pytest.raises(ValueError, match="unknown output plugin 'nosuch'"):
+        load_pipeline(spark, conf)
+    path = tmp_path / "bad.yaml"
+    path.write_text(json.dumps(conf))  # JSON is YAML
+    monkeypatch.setattr(fluent_bit_spark, "get_spark", lambda *a, **k: spark)
+    assert cli.main(["-c", str(path), "--dry-run"]) == 2
+
+
+@pytest.mark.parametrize("out, error", [
+    ({"name": "cloudwatch_logs", "log_group_name": "g"},
+     (ValueError, "need log_stream_name or log_stream_prefix")),
+    ({"name": "file", "path": None}, (ValueError, "output 'file' needs a path")),
+    ({"name": "plot"}, (KeyError, "key")),
+], ids=["cloudwatch_without_stream", "file_without_path", "plot_without_key"])
+def test_missing_output_option_rejected_at_load(spark, tmp_path, monkeypatch, out, error):
+    """An [OUTPUT] missing a required option fails the load, so --dry-run
+    reports it instead of a run writing the other sinks first."""
+    import fluent_bit_spark
+    import fluent_bit_spark.__main__ as cli
+
+    out = {"match": "*", "path": str(tmp_path / "o"), **out}
+    if out["path"] is None:
+        del out["path"]
+    conf = {"pipeline": {
+        "inputs": [{"name": "dummy", "tag": "a.x", "records": [{"m": "1"}]}],
+        "outputs": [{"name": "counter", "match": "*"}, out],
+    }}
+    with pytest.raises(error[0], match=error[1]):
         load_pipeline(spark, conf)
     path = tmp_path / "bad.yaml"
     path.write_text(json.dumps(conf))  # JSON is YAML

@@ -417,7 +417,11 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
     grow linearly with KEPT clips only (frames x bands per clip); a
     replayed duplicate append then inflates the table and
     compact_history collapses it back to one row per (band, bv, idx,
-    fp, id) — the at-least-once crash-replay hygiene."""
+    fp, id) — the at-least-once crash-replay hygiene. ``process_s`` is
+    the wall time of each batch's foreachBatch call (sink included;
+    the summary's ``process_s`` is their sum)."""
+    import time
+
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -469,7 +473,9 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
             )
             batch = batch.unionByName(trims)
         media = to_media_frame(batch, "media_id", F.col("content"), "video")
+        t0 = time.perf_counter()
         process(media, b)
+        process_s = time.perf_counter() - t0
         hist_rows = spark.read.parquet(history_data_dir(spark, hist)).count()
         hist_bytes = sum(
             p.stat().st_size for p in Path(hist).rglob("*.parquet")
@@ -480,6 +486,7 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
                 clips_per_batch // 5 if b else 0
             ),
             "survivors": survivors_per_batch[-1],
+            "process_s": round(process_s, 3),
             "hist_rows": hist_rows,
             "hist_bytes": hist_bytes,
         })
@@ -497,6 +504,7 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
         "n_batches": n_batches,
         "clips_per_batch": clips_per_batch,
         "per_batch": per_batch,
+        "process_s": round(sum(p_["process_s"] for p_ in per_batch), 3),
         "history_rows_after_replay": inflated,
         "history_rows_after_compaction": compacted,
     }
