@@ -3165,17 +3165,19 @@ def _aligned_xor(fa, fb, offset, bits: int):
 
 def _aligned_history(
     fingerprint, probe, key: tuple[str, ...], col: str, bits: int, accept,
-    max_bucket: int | None = None, pair_probe=None,
+    max_bucket: int | None = None, pairs_probe=None,
 ) -> NearDupHistory:
     """The NearDupHistory of a frame-aligned family (audio, video).
     ``fingerprint`` yields the exploded (media_id, frame_idx, col)
     table; ``probe`` maps it to the (media_id, frame_idx, *key) probe
-    rows (``pair_probe``, if given, replaces it for the within-batch
+    rows (``pairs_probe``, if given, replaces it for the within-batch
     pairs only). A candidate is a (clip, alignment offset) whose probe
     keys match exactly; it verifies when its aligned overlap is
     non-empty and ``accept(n_over, xor_bits)`` holds (_aligned_xor over
     ``bits``-wide hashes). History rows are (*key, idx, fp): the probe
     key, its frame index and the whole clip's ordered ``col`` array."""
+    if max_bucket is not None and max_bucket < 1:
+        raise ValueError("max_bucket must be >= 1")
 
     def rows(subs: DataFrame) -> DataFrame:
         # left join, equal to the inner one (every non-null clip id has
@@ -3207,10 +3209,8 @@ def _aligned_history(
         """Verified (id_a < id_b, offset) pairs with their n_over and
         xor_bits, the hot-bucket stop-list applied to the probe keys
         first."""
-        banded = (pair_probe or probe)(subs)
+        banded = (pairs_probe or probe)(subs)
         if max_bucket is not None:
-            if max_bucket < 1:
-                raise ValueError("max_bucket must be >= 1")
             hot = (
                 banded.groupBy(*key)
                 .agg(F.count(F.lit(1)).alias("__n"))
