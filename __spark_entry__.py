@@ -1141,9 +1141,6 @@ def ann_served_q(spark, sf_dir):
     roundtrip error, or a reload that silently rebuilds all flip it
     false), plus the standard _ann_gate invariants on the served IVF
     result against the exact brute force."""
-    import hashlib
-    import tempfile
-
     from fluent_bit_spark.extensions.similarity import (
         cosine_topk,
         ivf_index,
@@ -1159,7 +1156,6 @@ def ann_served_q(spark, sf_dir):
     from concurrent.futures import ThreadPoolExecutor
 
     emb, queries = _emb_and_queries(spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
 
     # each top-k result is query_count x k rows but feeds 2-3 consumers
     # below (gate + multiset diff) — checkpoint so every serve plan runs
@@ -1169,7 +1165,7 @@ def ann_served_q(spark, sf_dir):
     # chain's small sequential jobs back-fill the other's idle slots.
     def _ivf_chain():
         ivf = ivf_index(emb, n_centroids=16, iters=2)
-        ivf_path = f"{tempfile.gettempdir()}/fbs_ivf_index_{tag}"
+        ivf_path = _index_dir(sf_dir, "ivf_index")
         ivf_index_save(ivf, ivf_path)
         with ThreadPoolExecutor(max_workers=2) as inner:
             fm = inner.submit(
@@ -1186,7 +1182,7 @@ def ann_served_q(spark, sf_dir):
 
     def _pq_chain():
         pq = pq_index(emb, m=8, ksub=16, iters=3, sample=1024)
-        pq_path = f"{tempfile.gettempdir()}/fbs_pq_index_{tag}"
+        pq_path = _index_dir(sf_dir, "pq_index")
         pq_index_save(pq, pq_path)
         with ThreadPoolExecutor(max_workers=2) as inner:
             fm = inner.submit(
@@ -1553,9 +1549,6 @@ def bm25_served_q(spark, sf_dir):
     broken save layout, a lossy meta roundtrip, or a reload that
     silently rebuilds would all hash-fail against the same bm25_topk
     oracle (results are provably identical to the in-memory path)."""
-    import hashlib
-    import tempfile
-
     from fluent_bit_spark.extensions.dedup import normalize_text
     from fluent_bit_spark.extensions.retrieval import (
         bm25_index, bm25_index_load, bm25_index_save, bm25_topk_indexed,
@@ -1568,18 +1561,23 @@ def bm25_served_q(spark, sf_dir):
             " ", F.slice(F.split(normalize_text(F.col("text")), " "), 1, 8)
         ).alias("text"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"{tempfile.gettempdir()}/fbs_bm25_index_{tag}"
+    path = _index_dir(sf_dir, "bm25_index")
     bm25_index_save(bm25_index(docs, c=50), path)
     return bm25_topk_indexed(bm25_index_load(spark, path), queries, k=10)
 
 
-def _bm25_serve_path(sf_dir):
+# the on-disk index layout the fixtures below are written in: their dirs
+# carry it in the name, so a dir written in another layout is rebuilt,
+# not loaded
+_INDEX_LAYOUT = "versioned"
+
+
+def _index_dir(sf_dir, kind):
     import hashlib
     import tempfile
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/fbs_bm25_serveonly_{tag}"
+    return f"{tempfile.gettempdir()}/fbs_{kind}_{_INDEX_LAYOUT}_{tag}"
 
 
 def bm25_serve_setup(spark, sf_dir):
@@ -1590,7 +1588,9 @@ def bm25_serve_setup(spark, sf_dir):
     batch; bm25_served times the full cycle and conflates the two)."""
     from fluent_bit_spark.extensions.retrieval import bm25_index, bm25_index_save
 
-    bm25_index_save(bm25_index(_docs(spark, sf_dir), c=50), _bm25_serve_path(sf_dir))
+    bm25_index_save(
+        bm25_index(_docs(spark, sf_dir), c=50), _index_dir(sf_dir, "bm25_serveonly")
+    )
 
 
 def bm25_serve_only_raw(spark, sf_dir):
@@ -1602,7 +1602,7 @@ def bm25_serve_only_raw(spark, sf_dir):
     from fluent_bit_spark.extensions.dedup import normalize_text
     from fluent_bit_spark.extensions.retrieval import bm25_index_load, bm25_topk_indexed
 
-    path = _bm25_serve_path(sf_dir)
+    path = _index_dir(sf_dir, "bm25_serveonly")
     if not os.path.isdir(path):
         bm25_serve_setup(spark, sf_dir)
     docs = _docs(spark, sf_dir)
@@ -1615,14 +1615,6 @@ def bm25_serve_only_raw(spark, sf_dir):
     return bm25_topk_indexed(bm25_index_load(spark, path), queries, k=10)
 
 
-def _ann_serve_path(sf_dir):
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/fbs_ann_serveonly_{tag}"
-
-
 def ann_serve_setup(spark, sf_dir):
     """Bench setup for ann_serve_only: build + persist the IVF index
     outside the timer (the k-means and list materialization amortize
@@ -1630,7 +1622,9 @@ def ann_serve_setup(spark, sf_dir):
     from fluent_bit_spark.extensions.similarity import ivf_index, ivf_index_save
 
     emb, _ = _emb_and_queries(spark, sf_dir)
-    ivf_index_save(ivf_index(emb, n_centroids=16, iters=2), _ann_serve_path(sf_dir))
+    ivf_index_save(
+        ivf_index(emb, n_centroids=16, iters=2), _index_dir(sf_dir, "ann_serveonly")
+    )
 
 
 def ann_serve_only_raw(spark, sf_dir):
@@ -1641,19 +1635,11 @@ def ann_serve_only_raw(spark, sf_dir):
 
     from fluent_bit_spark.extensions.similarity import ivf_index_load, ivf_topk_indexed
 
-    path = _ann_serve_path(sf_dir)
+    path = _index_dir(sf_dir, "ann_serveonly")
     if not os.path.isdir(path):
         ann_serve_setup(spark, sf_dir)
     _, queries = _emb_and_queries(spark, sf_dir)
     return ivf_topk_indexed(ivf_index_load(spark, path), queries, k=5, nprobe=4)
-
-
-def _append_scratch(sf_dir, kind):
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/fbs_{kind}_append_{tag}"
 
 
 def _multiset_diff_ids(a, b, id_col):
@@ -1701,7 +1687,7 @@ def bm25_appended_q(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     even = docs.filter(F.col("doc_id") % 2 == 0)
     odd = docs.filter(F.col("doc_id") % 2 == 1)
-    path = _append_scratch(sf_dir, "bm25")
+    path = _index_dir(sf_dir, "bm25_append")
     shutil.rmtree(path, ignore_errors=True)  # appends are stateful: fresh run
     queries = docs.filter(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("query_id"),
@@ -1736,14 +1722,6 @@ def bm25_appended_q(spark, sf_dir):
     )
 
 
-def _bm25_append_only_path(sf_dir):
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/fbs_bm25_appendonly_{tag}"
-
-
 def bm25_append_setup(spark, sf_dir):
     """Bench setup for bm25_append_only: build + persist the even-half
     base index OUTSIDE the timer (it amortizes across every later
@@ -1757,7 +1735,7 @@ def bm25_append_setup(spark, sf_dir):
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     even = docs.filter(F.col("doc_id") % 2 == 0)
-    path = _bm25_append_only_path(sf_dir)
+    path = _index_dir(sf_dir, "bm25_appendonly")
     shutil.rmtree(path, ignore_errors=True)
     bm25_index_save(bm25_index(even, c=20), path)
 
@@ -1767,22 +1745,19 @@ def bm25_append_only_raw(spark, sf_dir):
     persisted even-half index (postings re-derive + manifest flip,
     retrieval.py bm25_index_append) with NO rebuild-equality proof —
     that exactness is bm25_appended's oracle-gated job. Re-run-safe: the
-    append writes an immutable version dir + manifest pointer, so each
-    run first drops the pointer and appended versions (millisecond local
-    fs ops), restoring the pristine base."""
-    import glob
+    save left the base as the store's first version and each append
+    commits the next, so each run first makes the base live again
+    (versioned_store.restore, one pointer write); the append's commit
+    then deletes the earlier run's version as never flipped."""
     import os
-    import shutil
 
+    from fluent_bit_spark.extensions import versioned_store
     from fluent_bit_spark.extensions.retrieval import bm25_index_append
 
-    path = _bm25_append_only_path(sf_dir)
+    path = _index_dir(sf_dir, "bm25_appendonly")
     if not os.path.isdir(path):
         bm25_append_setup(spark, sf_dir)
-    for mf in glob.glob(os.path.join(path, "MANIFEST*")):
-        os.remove(mf)
-    for v in glob.glob(os.path.join(path, "v[0-9]*")):
-        shutil.rmtree(v, ignore_errors=True)
+    versioned_store.restore(spark, path, "v000001")
     odd = _docs(spark, sf_dir).select("doc_id", "text").filter(
         F.col("doc_id") % 2 == 1
     )
@@ -1810,7 +1785,7 @@ def pq_appended_q(spark, sf_dir):
     emb, queries = _emb_and_queries(spark, sf_dir)
     half_a = emb.filter(F.col("vec_id") % 2 == 0)
     half_b = emb.filter(F.col("vec_id") % 2 == 1)
-    path = _append_scratch(sf_dir, "pq")
+    path = _index_dir(sf_dir, "pq_append")
     shutil.rmtree(path, ignore_errors=True)
     pq = pq_index(half_a, m=8, ksub=16, iters=2, sample=1024)
 

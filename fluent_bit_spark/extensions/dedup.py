@@ -380,12 +380,18 @@ def _append_history_rows(
     kept: DataFrame | None = None, id_col: str | None = None,
 ) -> None:
     """Append the history rows of ``fp`` — only those of ``kept``'s ids
-    when given — to the store at ``state_dir``."""
+    when given — to the store at ``state_dir``. The rows are rebalanced
+    on ``id`` first, so AQE sizes the files instead of the fingerprint's
+    partitioning (a small batch appends one file, not one per input
+    partition) and each id's rows stay adjacent, which keeps the
+    repeated per-id values compressed."""
     rows = family.rows(fp)
     if kept is not None:
         ids = kept.select(F.col(id_col).alias("__kid"))
         rows = rows.join(ids, rows[family.id].eqNullSafe(ids["__kid"]), "left_semi")
-    versioned_store.append(rows.drop(family.id), state_dir)
+    versioned_store.append(
+        rows.hint("rebalance", family.id).drop(family.id), state_dir
+    )
 
 
 def filter_history(

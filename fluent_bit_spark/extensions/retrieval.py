@@ -175,14 +175,13 @@ def bm25_topk(
     # join shape below replicates each (term, doc) row once per query
     # containing the term — super-linear when the query count grows with
     # a flat-vocabulary corpus (measured alpha 1.2, 138.8 s at 30x rows)
-    # — so above the pair floor the dense re-score runs the pivot shape
-    # (one contribution-table shuffle + Arrow matmul selection + exact
-    # Catalyst re-score; row-identical, see _dense_topk_pivot). Below
-    # the floor the plan stays the pure-JVM join shape.
-    pivot_dense = int(n_docs) * int(n_queries) >= _dense_pivot_min_pairs()
-
-    def dense(qm: DataFrame) -> DataFrame:
-        if pivot_dense:
+    # — so above the pair floor the dense re-score of ``nq`` queries runs
+    # the pivot shape (one contribution-table shuffle + Arrow matmul
+    # selection + exact Catalyst re-score; row-identical, see
+    # _dense_topk_pivot). Below the floor the plan stays the pure-JVM
+    # join shape.
+    def dense(qm: DataFrame, nq: int) -> DataFrame:
+        if int(n_docs) * nq >= _DENSE_PIVOT_MIN_PAIRS:
             return _dense_topk_pivot(
                 dtf.join(
                     F.broadcast(qm.select("term", "idf").distinct()), "term"
@@ -196,7 +195,7 @@ def bm25_topk(
         )
 
     if prune_top_c is None:
-        return dense(qmodel)
+        return dense(qmodel, int(n_queries))
     if prune_top_c < k:
         raise ValueError("prune_top_c must be >= k (candidates per term)")
     return _bm25_pruned(
@@ -237,7 +236,8 @@ def _bm25_pruned(
 
     def dense_for(failing: list) -> DataFrame:
         return dense(
-            _filter_failing(qterms.join(idf, "term"), query_id_col, failing)
+            _filter_failing(qterms.join(idf, "term"), query_id_col, failing),
+            len(failing),
         )
 
     return _indexed_topk(
@@ -245,23 +245,19 @@ def _bm25_pruned(
     )
 
 
-def _dense_pivot_min_pairs() -> int:
-    """Work-volume floor (|failing queries| x n_docs candidate pairs)
-    above which the dense fallback switches from the postings-join shape
-    to the pivot shape (_dense_topk_pivot). The join shape replicates
-    every posting row once per failing query containing its term, so its
-    volume is sum_q sum_{t in q} df(t) — on degenerate flat vocabularies
-    (where certificate failure is the common case and df ~ n_docs) that
-    is ~|Q| x |terms| x n_docs rows through one exchange, the measured
-    super-linear stage of the sf3 scaling run (alpha 1.35). Below the
-    floor the join shape's single-pass simplicity wins (fixed cost of
-    the pivot's extra Arrow stage dominates); above it the pivot's
-    one tc-sized shuffle + per-partition matmul wins by orders of
-    magnitude. Parameterized for clusters; the default is the measured
-    local crossover (BASELINE.md round 13)."""
-    import os
-
-    return int(os.environ.get("FBS_BM25_DENSE_PIVOT_MIN_PAIRS", "8000000"))
+# Work-volume floor (|failing queries| x n_docs candidate pairs) above
+# which the dense fallback switches from the postings-join shape to the
+# pivot shape (_dense_topk_pivot). The join shape replicates every
+# posting row once per failing query containing its term, so its volume
+# is sum_q sum_{t in q} df(t) — on degenerate flat vocabularies (where
+# certificate failure is the common case and df ~ n_docs) that is
+# ~|Q| x |terms| x n_docs rows through one exchange, the measured
+# super-linear stage of the sf3 scaling run (alpha 1.35). Below the
+# floor the join shape's single-pass simplicity wins (fixed cost of the
+# pivot's extra Arrow stage dominates); above it the pivot's one
+# tc-sized shuffle + per-partition matmul wins by orders of magnitude.
+# The value is the measured local crossover (BASELINE.md round 13).
+_DENSE_PIVOT_MIN_PAIRS = 8_000_000
 
 
 def _dense_topk_pivot(
@@ -766,7 +762,7 @@ def bm25_topk_indexed(
         # super-linear stage at scale (alpha 1.35 at sf3, BASELINE.md
         # r13) — so switch to the pivot shape, which shuffles the
         # contribution table once regardless of query count
-        if int(index["n_docs"]) * len(failing) >= _dense_pivot_min_pairs():
+        if int(index["n_docs"]) * len(failing) >= _DENSE_PIVOT_MIN_PAIRS:
             return _dense_topk_pivot(tc, qf, w, k, id_col, query_id_col)
         return _topk_bounded(
             tc.join(F.broadcast(qf), "term"), F.col("c"), w, k, id_col,
@@ -783,82 +779,21 @@ _META_SCHEMA = (
     "k1 double, b double, c int, id_col string, "
     "schemas map<string,string>"
 )
+# kept (rn <= c) and cutoffs (rn == c+1) ride ONE small topc table: a
+# serving job scans only these (c+1)-per-term rows, never all of tc.
+# postings (term, id, tf, dl) and the vocab-sized dfreq (term, df) make
+# the index appendable without the corpus
+_TABLES = {"tc": None, "topc": None, "postings": None, "dfreq": None}
 
 
-def _read_with_schema(spark, path: str, schema_json: str | None):
-    """Parquet read with the persisted schema when available (no footer
-    inference job); inference fallback for pre-schema metas."""
-    if schema_json:
-        import json
-
-        from pyspark.sql.types import StructType
-
-        return spark.read.schema(
-            StructType.fromJson(json.loads(schema_json))
-        ).parquet(path)
-    return spark.read.parquet(path)
-
-
-def _write_index_tables(index: dict, base: str) -> None:
-    writes = [(index["tc"], f"{base}/tc")]
-    if index.get("ranked") is not None:
-        # kept (rn <= c) and cutoffs (rn == c+1) ride ONE small topc
-        # table — both are rn-filters of the materialized ranked frame,
-        # and a serving job must scan only these (c+1)-per-term rows,
-        # never the full contribution table
-        writes.append(
-            (
-                index["ranked"].filter(F.col("rn") <= int(index["c"]) + 1),
-                f"{base}/topc",
-            )
-        )
-    else:
-        writes.append((index["kept"], f"{base}/kept"))
-        writes.append((index["cutoffs"], f"{base}/cutoffs"))
-    if index.get("postings") is not None:
-        writes.append((index["postings"], f"{base}/postings"))
-    if index.get("dfreq") is not None:
-        # vocab-sized (term, df): persisted so an append can grow the
-        # document frequencies incrementally (old df + new-batch df —
-        # exact: appended doc ids are disjoint by the clash guard)
-        # instead of re-aggregating the merged corpus-sized postings
-        writes.append((index["dfreq"], f"{base}/dfreq"))
-    # the tables are independent filters/projections of already
-    # materialized frames: submit the writes concurrently so the later
-    # jobs' tasks back-fill the executor slots the first job's tail
-    # leaves idle (wall-clock ~= the largest write, not the sum)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        list(
-            pool.map(
-                lambda dp: dp[0].write.mode("overwrite").parquet(dp[1]),
-                writes,
-            )
-        )
-    # each table's schema rides meta as JSON so the load side can read
-    # with an EXPLICIT schema: parquet footer inference costs one driver
-    # job per table per load, pure overhead on a serving path
-    schemas = {
-        name.rsplit("/", 1)[-1]: df_.schema.json() for df_, name in writes
+def _index_tables(index: dict) -> dict:
+    """The table set bm25_index_save persists for ``index``."""
+    return {
+        "tc": index["tc"],
+        "topc": index["ranked"].filter(F.col("rn") <= int(index["c"]) + 1),
+        "postings": index["postings"],
+        "dfreq": index["dfreq"],
     }
-    spark = index["tc"].sparkSession
-    spark.createDataFrame(
-        [
-            (
-                int(index["n_docs"]),
-                float(index["avgdl"]),
-                int(index.get("sum_dl") or 0),
-                int(index.get("n_nonempty") or 0),
-                float(index["k1"]),
-                float(index["b"]),
-                int(index["c"]),
-                str(index["id_col"]),
-                schemas,
-            )
-        ],
-        _META_SCHEMA,
-    ).repartition(1).write.mode("overwrite").parquet(f"{base}/meta")
 
 
 def bm25_index_save(index: dict, path: str) -> None:
@@ -868,98 +803,34 @@ def bm25_index_save(index: dict, path: str) -> None:
     bm25_index_load and query without touching the corpus, and
     bm25_index_append grows it without the corpus either (the postings
     table carries the raw (term, id, tf, dl) facts every global-stat
-    recompute needs). All-parquet (scalars ride a one-row meta table), so
-    the layout works unchanged on any Hadoop filesystem (file://, s3a://,
-    hdfs://) and on a real cluster the frames land as the bucketed tables
-    the in-memory docstring promises."""
-    _write_index_tables(index, path.rstrip("/"))
+    recompute needs). The tables become the next version of the store at
+    ``path`` and every other copy is retired (versioned_store.save_tables),
+    so a save replaces whatever index was there, appended or not, and a
+    crash mid-save leaves that index live. All-parquet (scalars ride a
+    one-row meta table), so the layout works unchanged on any Hadoop
+    filesystem (file://, s3a://, hdfs://)."""
+    versioned_store.save_tables(path, _index_tables(index), index, _META_SCHEMA)
 
 
 def bm25_index_load(spark, path: str) -> dict:
-    """Reload a bm25_index_save'd (and possibly appended) index. The
-    returned frames are plain parquet scans (term-pruned by predicate
-    pushdown at serve time), so a serving job's cost is the candidate
-    join only — no corpus scan, no rebuild. Drop-in wherever
-    bm25_topk_indexed takes an index. Indexes saved before the postings
-    table existed load fine (postings=None) but refuse appends."""
-    base = versioned_store.live_dir(spark, path.rstrip("/"))
-    # meta read with its EXPLICIT schema (no inference job); a
-    # pre-schema meta simply yields a null schemas map
-    meta = (
-        spark.read.schema(_META_SCHEMA).parquet(f"{base}/meta").collect()[0]
-        .asDict()
-    )
-    schemas = meta.get("schemas") or {}
-    if schemas:
-        # the schemas map doubles as the table manifest: membership says
-        # which tables the save wrote, so no existence probes and no
-        # footer-inference jobs on the serving path
-        tc = _read_with_schema(spark, f"{base}/tc", schemas["tc"])
-        postings = (
-            _read_with_schema(spark, f"{base}/postings", schemas["postings"])
-            if "postings" in schemas
-            else None
-        )
-        dfreq = (
-            _read_with_schema(spark, f"{base}/dfreq", schemas["dfreq"])
-            if "dfreq" in schemas
-            else None
-        )
-        topc = (
-            _read_with_schema(spark, f"{base}/topc", schemas["topc"])
-            if "topc" in schemas
-            else None
-        )
-        if topc is not None:
-            kept, cutoffs = _impact_order_ranked(
-                topc, int(meta["c"]), meta["id_col"]
-            )
-        else:
-            kept = _read_with_schema(spark, f"{base}/kept", schemas.get("kept"))
-            cutoffs = _read_with_schema(
-                spark, f"{base}/cutoffs", schemas.get("cutoffs")
-            )
-        return {
-            "tc": tc,
-            "kept": kept,
-            "cutoffs": cutoffs,
-            "postings": postings,
-            "dfreq": dfreq,
-            "n_docs": meta["n_docs"],
-            "avgdl": meta["avgdl"],
-            "sum_dl": meta.get("sum_dl"),
-            "n_nonempty": meta.get("n_nonempty"),
-            "k1": meta["k1"],
-            "b": meta["b"],
-            "c": meta["c"],
-            "id_col": meta["id_col"],
-        }
-    # legacy pre-schema layout: narrow probes, not a bare except — only
-    # a genuinely-absent postings dir means the pre-postings serve-only
-    # layout; a permission error or corrupt footer must RAISE, not
-    # silently degrade to an index that then misleadingly refuses
-    # appends with "rebuild once"
-    postings = versioned_store.try_read_parquet(spark, f"{base}/postings")
-    topc = versioned_store.try_read_parquet(spark, f"{base}/topc")
-    if topc is not None:
-        kept, cutoffs = _impact_order_ranked(topc, int(meta["c"]), meta["id_col"])
-    else:  # pre-topc layout: separate kept/cutoffs tables
-        kept = spark.read.parquet(f"{base}/kept")
-        cutoffs = spark.read.parquet(f"{base}/cutoffs")
+    """Reload a bm25_index_save'd (and possibly appended) index from the
+    live version. The returned frames are plain parquet scans
+    (term-pruned by predicate pushdown at serve time), so a serving
+    job's cost is the candidate join only — no corpus scan, no rebuild.
+    Drop-in wherever bm25_topk_indexed takes an index, and saveable
+    again with bm25_index_save."""
+    meta, t = versioned_store.read_tables(spark, path, _META_SCHEMA, _TABLES)
+    kept, cutoffs = _impact_order_ranked(t["topc"], meta["c"], meta["id_col"])
     return {
-        "tc": spark.read.parquet(f"{base}/tc"),
+        "tc": t["tc"],
         "kept": kept,
         "cutoffs": cutoffs,
-        "postings": postings,
-        "dfreq": None,
-        "n_docs": meta["n_docs"],
-        "avgdl": meta["avgdl"],
-        "sum_dl": meta.get("sum_dl"),
-        "n_nonempty": meta.get("n_nonempty"),
-        "k1": meta["k1"],
-        "b": meta["b"],
-        "c": meta["c"],
-        "id_col": meta["id_col"],
+        "ranked": t["topc"],
+        "postings": t["postings"],
+        "dfreq": t["dfreq"],
+        **{k: meta[k] for k in (
+            "n_docs", "avgdl", "sum_dl", "n_nonempty", "k1", "b", "c", "id_col"
+        )},
     }
 
 
@@ -985,19 +856,7 @@ def bm25_index_append(
     never flips, even when the version write failed too.
 
     Returns the number of appended documents."""
-    base = path.rstrip("/")
-    idx = bm25_index_load(spark, base)
-    if idx["postings"] is None:
-        raise ValueError(
-            f"index at {path!r} was saved without a postings table; "
-            "rebuild once with the current bm25_index_save to make it "
-            "appendable"
-        )
-    if not idx["sum_dl"]:
-        raise ValueError(
-            f"index at {path!r} predates append support (meta lacks "
-            "sum_dl/n_nonempty); rebuild once"
-        )
+    idx = bm25_index_load(spark, path)
     from concurrent.futures import ThreadPoolExecutor
 
     id_col = idx["id_col"]
@@ -1030,37 +889,30 @@ def bm25_index_append(
         raise ValueError("corpus has no tokens")
     avgdl = sum_dl / n_nonempty
     postings = idx["postings"].unionByName(new_postings)
-    # document frequencies grow INCREMENTALLY when the index persisted
-    # them: old df + append-batch df (exact — the clash guard enforces
-    # disjoint doc ids, so a term's postings from the two sides are
-    # distinct documents), replacing a full re-aggregate of the merged
-    # corpus-sized postings with a vocab-sized outer join
+    # document frequencies grow INCREMENTALLY: old df + append-batch df
+    # (exact — the clash guard enforces disjoint doc ids, so a term's
+    # postings from the two sides are distinct documents), replacing a
+    # full re-aggregate of the merged corpus-sized postings with a
+    # vocab-sized outer join
     dfreq_new = new_postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
     )
-    if idx.get("dfreq") is not None:
-        dfreq = (
-            idx["dfreq"].withColumnRenamed("df", "__df_old")
-            .join(
-                dfreq_new.withColumnRenamed("df", "__df_new"),
-                "term",
-                "full_outer",
-            )
-            .select(
-                "term",
-                (
-                    F.coalesce("__df_old", F.lit(0))
-                    + F.coalesce("__df_new", F.lit(0))
-                ).alias("df"),
-            )
-            .localCheckpoint(eager=True)
+    dfreq = (
+        idx["dfreq"].withColumnRenamed("df", "__df_old")
+        .join(
+            dfreq_new.withColumnRenamed("df", "__df_new"),
+            "term",
+            "full_outer",
         )
-    else:  # index saved before dfreq persistence: aggregate the union
-        dfreq = (
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .localCheckpoint(eager=True)
+        .select(
+            "term",
+            (
+                F.coalesce("__df_old", F.lit(0))
+                + F.coalesce("__df_new", F.lit(0))
+            ).alias("df"),
         )
+        .localCheckpoint(eager=True)
+    )
     # the grown frames stay LAZY: their only consumers are the
     # single-pass concurrent table writes below, so the former
     # corpus-sized ranked localCheckpoint was a pure extra
@@ -1070,11 +922,8 @@ def bm25_index_append(
         postings, dfreq, n_docs, avgdl, idx["k1"], idx["b"], id_col
     )
     ranked = _rank_contributions(contrib, id_col)
-    kept, cutoffs = _impact_order_ranked(ranked, idx["c"], id_col)
     grown = {
         "tc": contrib,
-        "kept": kept,
-        "cutoffs": cutoffs,
         "ranked": ranked,
         "dfreq": dfreq,
         "postings": postings,
@@ -1101,7 +950,11 @@ def bm25_index_append(
             )
 
     versioned_store.commit(
-        spark, base, lambda live, new: _write_index_tables(grown, new), check
+        spark, path,
+        lambda live, new: versioned_store.write_tables(
+            new, _index_tables(grown), grown, _META_SCHEMA
+        ),
+        check,
     )
     return n_new
 
@@ -1110,10 +963,10 @@ def bm25_compact_index(spark, path: str) -> int:
     """Delete what no reader of the live BM25 index needs: each
     bm25_index_append commits a COMPLETE copy of every table (postings
     included) as a new version, so a daily append job would otherwise
-    hold every historical full copy plus the pre-append tables at the
-    root. This is versioned_store.retire: everything except the pointer
-    and the live version goes. NOT safe against a concurrent reader still
-    holding a plan over an old version — run between serving batches.
-    Returns the number of version dirs deleted; a never-appended store
-    is left as it is."""
+    hold every historical full copy (and, for an index saved flat by an
+    older build, the pre-append tables at the root). This is
+    versioned_store.retire: everything except the pointer and the live
+    version goes. NOT safe against a concurrent reader still holding a
+    plan over an old version — run between serving batches. Returns the
+    number of version dirs deleted; a flat store is left as it is."""
     return versioned_store.retire(spark, path)

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import versioned_store
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -734,72 +736,45 @@ def ivf_index_save(index: dict, path: str) -> None:
     """Persist an ivf_index as three parquet tables: ``lists``
     (PARTITIONED BY cid — a probe of p lists touches p directories, so
     serving I/O scales with nprobe, not corpus size), ``centroids``, and
-    a one-row ``meta``. All-parquet, so the layout works on any Hadoop
+    a one-row ``meta``. The tables become the next version of the store
+    at ``path`` and every other copy is retired
+    (versioned_store.save_tables), so a crash mid-save leaves the
+    previous index live. All-parquet, so the layout works on any Hadoop
     filesystem; doubles roundtrip exactly, making a reloaded serve
     hash-equal to serving from the in-memory build."""
-    base = path.rstrip("/")
-    (
-        index["lists"]
-        .repartition("cid")  # one writer per list: no small-file fanout
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{base}/lists")
-    )
     spark = index["lists"].sparkSession
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(index["centroids"])],
-        _IVF_CENTROIDS_SCHEMA,
-    ).repartition(1).write.mode("overwrite").parquet(f"{base}/centroids")
-    spark.createDataFrame(
-        [(
-            int(index["n_centroids"]),
-            index["id_col"],
-            index["vec_col"],
-            index["lists"].schema.json(),
-        )],
-        _IVF_META_SCHEMA,
-    ).repartition(1).write.mode("overwrite").parquet(f"{base}/meta")
+    centroids = spark.createDataFrame(
+        list(enumerate(index["centroids"])), _IVF_CENTROIDS_SCHEMA
+    ).repartition(1)
+    versioned_store.save_tables(
+        path,
+        # one writer per list: no small-file fanout
+        {"lists": index["lists"].repartition("cid"), "centroids": centroids},
+        index, _IVF_META_SCHEMA, partition_by={"lists": "cid"},
+    )
 
 
 _IVF_CENTROIDS_SCHEMA = "cid int, cvec array<double>"
 _IVF_META_SCHEMA = (
     "n_centroids int, id_col string, vec_col string, lists_schema string"
 )
+_IVF_TABLES = {"lists": None, "centroids": _IVF_CENTROIDS_SCHEMA}
 
 
 def ivf_index_load(spark, path: str) -> dict:
-    """Reload an ivf_index_save'd index. ``lists`` is a plain
-    cid-partitioned parquet scan (pruned at serve time); centroids are
-    model-sized driver state, collected once. No k-means, no corpus
-    scan — drop-in wherever ivf_topk_indexed takes an index. Every table
-    reads with its persisted schema (meta/centroids are fixed, lists
-    rides meta), so a load costs collects only — no parquet footer
-    inference jobs on the serving path."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    base = path.rstrip("/")
-    meta = (
-        spark.read.schema(_IVF_META_SCHEMA).parquet(f"{base}/meta")
-        .collect()[0]
+    """Reload an ivf_index_save'd index from the live version. ``lists``
+    is a plain cid-partitioned parquet scan (pruned at serve time);
+    centroids are model-sized driver state, collected once. No k-means,
+    no corpus scan — drop-in wherever ivf_topk_indexed takes an index.
+    Every table reads with a known schema, so a load costs collects
+    only — no parquet footer inference jobs on the serving path."""
+    meta, t = versioned_store.read_tables(
+        spark, path, _IVF_META_SCHEMA, _IVF_TABLES
     )
-    crows = (
-        spark.read.schema(_IVF_CENTROIDS_SCHEMA)
-        .parquet(f"{base}/centroids")
-        .orderBy("cid")
-        .collect()
-    )
-    lists = (
-        spark.read.schema(
-            StructType.fromJson(_json.loads(meta["lists_schema"]))
-        ).parquet(f"{base}/lists")
-        if meta["lists_schema"]
-        else spark.read.parquet(f"{base}/lists")  # pre-schema layout
-    )
+    crows = t["centroids"].orderBy("cid").collect()
     return {
         "centroids": [list(r["cvec"]) for r in crows],
-        "lists": lists,
+        "lists": t["lists"],
         "n_centroids": meta["n_centroids"],
         "id_col": meta["id_col"],
         "vec_col": meta["vec_col"],
@@ -861,77 +836,50 @@ def pq_index_save(index: dict, path: str) -> None:
     """Persist a pq_index as three parquet tables: ``codes`` (the
     compressed corpus — the only data-sized artifact, 32x smaller than
     raw vectors), ``codebooks`` (one row per (sub, code) centroid), and
-    a one-row ``meta``."""
-    base = path.rstrip("/")
-    index["codes"].write.mode("overwrite").parquet(f"{base}/codes")
+    a one-row ``meta``, committed and retired like ivf_index_save."""
     spark = index["codes"].sparkSession
     cb = index["codebooks"]
-    spark.createDataFrame(
+    codebooks = spark.createDataFrame(
         [
             (s, c, [float(x) for x in cb[s][c]])
             for s in range(len(cb))
             for c in range(len(cb[s]))
         ],
         _PQ_CODEBOOKS_SCHEMA,
-    ).repartition(1).write.mode("overwrite").parquet(f"{base}/codebooks")
-    spark.createDataFrame(
-        [(
-            int(index["m"]),
-            int(index["ksub"]),
-            index["id_col"],
-            index.get("vec_col", "embedding"),
-            index["codes"].schema.json(),
-        )],
-        _PQ_META_SCHEMA,
-    ).repartition(1).write.mode("overwrite").parquet(f"{base}/meta")
+    ).repartition(1)
+    versioned_store.save_tables(
+        path, {"codes": index["codes"], "codebooks": codebooks},
+        {"vec_col": "embedding", **index}, _PQ_META_SCHEMA,
+    )
 
 
 _PQ_CODEBOOKS_SCHEMA = "sub int, code int, cvec array<double>"
 _PQ_META_SCHEMA = (
     "m int, ksub int, id_col string, vec_col string, codes_schema string"
 )
+_PQ_TABLES = {"codes": None, "codebooks": _PQ_CODEBOOKS_SCHEMA}
 
 
 def pq_index_load(spark, path: str) -> dict:
-    """Reload a pq_index_save'd index: codes stay a parquet scan, the
-    codebook (model-sized) is collected once into the nested-list form
-    pq_topk expects. No training, no encoding — and every table reads
-    with its persisted schema, so a load costs collects only (no
-    parquet footer inference jobs)."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    base = path.rstrip("/")
-    meta = (
-        spark.read.schema(_PQ_META_SCHEMA).parquet(f"{base}/meta")
-        .collect()[0].asDict()
-    )
+    """Reload a pq_index_save'd index from the live version: codes stay
+    a parquet scan, the codebook (model-sized) is collected once into
+    the nested-list form pq_topk expects. No training, no encoding — and
+    every table reads with a known schema, so a load costs collects
+    only (no parquet footer inference jobs)."""
+    meta, t = versioned_store.read_tables(spark, path, _PQ_META_SCHEMA, _PQ_TABLES)
     m, ksub = meta["m"], meta["ksub"]
-    rows = (
-        spark.read.schema(_PQ_CODEBOOKS_SCHEMA)
-        .parquet(f"{base}/codebooks")
-        .collect()
-    )
     books: list = [[None] * ksub for _ in range(m)]
-    for r in rows:
+    for r in t["codebooks"].collect():
         books[r["sub"]][r["code"]] = list(r["cvec"])
     if any(c is None for b in books for c in b):
         raise ValueError(f"codebook table at {path!r} is missing entries")
-    codes = (
-        spark.read.schema(
-            StructType.fromJson(_json.loads(meta["codes_schema"]))
-        ).parquet(f"{base}/codes")
-        if meta.get("codes_schema")
-        else spark.read.parquet(f"{base}/codes")  # pre-schema layout
-    )
     return {
         "codebooks": books,
-        "codes": codes,
+        "codes": t["codes"],
         "m": m,
         "ksub": ksub,
         "id_col": meta["id_col"],
-        "vec_col": meta.get("vec_col", "embedding"),
+        "vec_col": meta["vec_col"],
     }
 
 
@@ -992,14 +940,39 @@ def quantize_int8(
     )
 
 
+def _fresh_vectors(idx: dict, table: str, path: str, new_vectors: DataFrame):
+    """``new_vectors``' (id, vec) columns, after checking that the index
+    at ``path`` has those columns and none of their ids in ``table``."""
+    id_col, vec_col = idx["id_col"], idx["vec_col"]
+    missing = [c for c in (id_col, vec_col) if c not in new_vectors.columns]
+    if missing:
+        raise ValueError(
+            f"new_vectors lacks the index's columns {missing} "
+            f"(index at {path!r} uses id_col={id_col!r}, vec_col={vec_col!r})"
+        )
+    new = new_vectors.select(id_col, vec_col)
+    # existence probe: only the index's id column is scanned
+    if idx[table].select(id_col).join(
+        F.broadcast(new.select(id_col)), id_col
+    ).limit(1).count():
+        raise ValueError(
+            "new_vectors reuse ids already in the index; each would serve "
+            "as two corpus entries — dedupe or re-id before appending"
+        )
+    return new
+
+
 def ivf_index_append(spark, path: str, new_vectors: DataFrame) -> int:
     """Append vectors to a PERSISTED IVF index without re-clustering —
     the append-often half of build-once/serve-many: new vectors assign
     to the EXISTING centroids (assign_clusters' map-side matmul, no
-    k-means jobs) and land in the cid-partitioned ``lists`` directories
-    via a plain partitioned append, so serving picks them up on its
-    next parquet scan with no coordination. Column names come from the
-    index's own meta. Returns the appended row count.
+    k-means jobs) and land in the live version's cid-partitioned
+    ``lists`` directories via a plain partitioned append
+    (versioned_store.append), so serving picks them up on its next
+    parquet scan with no coordination, and the append stays O(batch).
+    Column names come from the index's own meta; ids already in the
+    index are refused before anything is written. Returns the appended
+    row count.
 
     The trade is the standard one for online vector serving: centroids
     drift from the true k-means of the grown corpus, degrading probe
@@ -1008,24 +981,15 @@ def ivf_index_append(spark, path: str, new_vectors: DataFrame) -> int:
     BM25 index whose idf table also staled from the moment it was
     built."""
     idx = ivf_index_load(spark, path)
-    id_col, vec_col = idx["id_col"], idx["vec_col"]
-    missing = [c for c in (id_col, vec_col) if c not in new_vectors.columns]
-    if missing:
-        raise ValueError(
-            f"new_vectors lacks the index's columns {missing} "
-            f"(index at {path!r} uses id_col={id_col!r}, vec_col={vec_col!r})"
-        )
+    new = _fresh_vectors(idx, "lists", path, new_vectors)
     # pin before count+write: the assignment matmul must run once, not
     # once per action — and the returned count must be the rows written
     assigned = assign_clusters(
-        new_vectors.select(id_col, vec_col), idx["centroids"], vec_col
+        new, idx["centroids"], idx["vec_col"]
     ).localCheckpoint(eager=True)
     n = assigned.count()
-    (
-        assigned.repartition("cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(f"{path.rstrip('/')}/lists")
+    versioned_store.append(
+        assigned.repartition("cid"), path, "lists", partition_by="cid"
     )
     return n
 
@@ -1035,11 +999,11 @@ def pq_index_append(spark, path: str, new_vectors: DataFrame) -> int:
     ivf_index_append's compressed-codes sibling: new vectors encode
     against the EXISTING codebooks (pq_encode's per-subspace nearest-
     centroid pass, no k-means jobs) and their code rows append to the
-    ``codes`` parquet, so the next pq_topk_indexed ADC scan sees them
-    with no coordination. Column names come from the index's own meta;
-    new ids must be fresh (duplicate ids would serve as two corpus
-    entries — same contract as ivf_index_append). Returns the appended
-    row count.
+    live version's ``codes`` table, so the next pq_topk_indexed ADC scan
+    sees them with no coordination. Column names come from the index's
+    own meta; ids already in the index are refused before anything is
+    written (duplicate ids would serve as two corpus entries). Returns
+    the appended row count.
 
     Same trade as IVF: codebooks trained on the original corpus drift
     from the union's optimum, degrading quantization error gradually —
@@ -1047,17 +1011,11 @@ def pq_index_append(spark, path: str, new_vectors: DataFrame) -> int:
     codebooks over the union corpus serves (tested), because ADC
     distances depend only on (codebooks, codes)."""
     idx = pq_index_load(spark, path)
-    id_col, vec_col = idx["id_col"], idx["vec_col"]
-    missing = [c for c in (id_col, vec_col) if c not in new_vectors.columns]
-    if missing:
-        raise ValueError(
-            f"new_vectors lacks the index's columns {missing} "
-            f"(index at {path!r} uses id_col={id_col!r}, vec_col={vec_col!r})"
-        )
+    new = _fresh_vectors(idx, "codes", path, new_vectors)
     # pin before count+write (see ivf_index_append)
     codes = pq_encode(
-        new_vectors.select(id_col, vec_col), idx["codebooks"], id_col, vec_col
+        new, idx["codebooks"], idx["id_col"], idx["vec_col"]
     ).localCheckpoint(eager=True)
     n = codes.count()
-    codes.write.mode("append").parquet(f"{path.rstrip('/')}/codes")
+    versioned_store.append(codes, path, "codes")
     return n

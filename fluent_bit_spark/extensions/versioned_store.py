@@ -1,16 +1,16 @@
 """One versioned-store protocol for every table set the engine rewrites
 in place: the dedup histories (text, image, audio, video) and the
-persisted BM25 index.
+persisted BM25, IVF and PQ indexes.
 
-Layout. A store is a directory ``root``. Until its first commit it is
-flat: its data lives at ``root`` itself. A commit writes a complete new
-version into ``root/vNNNNNN/`` and only then flips the one-object
-pointer ``root/MANIFEST`` to that name. From then on ``MANIFEST`` names
-the live version. Readers and appenders resolve the pointer on every
-call, so a flip redirects them without coordination, and a crash at any
-instant before the flip leaves the previous version live and complete.
-This is the single-pointer commit of Delta Lake (Armbrust et al., VLDB
-2020) with one pointer file instead of a log.
+Layout. A store is a directory ``root``. A history is flat until its
+first commit: its data lives at ``root`` itself. A commit writes a
+complete new version into ``root/vNNNNNN/`` and only then flips the
+one-object pointer ``root/MANIFEST`` to that name. From then on
+``MANIFEST`` names the live version. Readers and appenders resolve the
+pointer on every call, so a flip redirects them without coordination,
+and a crash at any instant before the flip leaves the previous version
+live and complete. This is the single-pointer commit of Delta Lake
+(Armbrust et al., VLDB 2020) with one pointer file instead of a log.
 
 The four operations:
 
@@ -21,12 +21,20 @@ The four operations:
 - ``retire``: delete everything except ``MANIFEST`` and the live
   version.
 
+An index is a table set: named parquet tables plus a one-row ``meta``
+table of the index's own scalars, in which each table's schema rides
+as JSON so a load reads every table without a footer-inference job.
+``write_tables`` writes one set into a version directory,
+``save_tables`` makes a set the live version (``commit`` + ``retire``)
+and ``read_tables`` reads the live set back. An index saved before
+saves were versioned is a flat table set at ``root``, and it loads and
+appends the same way.
+
 Everything goes through the session's Hadoop filesystem, so
 scheme-less local paths, ``file://``, ``hdfs://`` and object stores
 (``s3a://`` ...) share one code path, and a directory spelled two ways
 (``/x`` and ``file:///x``) is one store.
 """
-
 from __future__ import annotations
 
 import re
@@ -157,33 +165,26 @@ def read(spark, root: str):
     return try_read_parquet(spark, live_dir(spark, root))
 
 
-def append(df, root: str) -> None:
-    """Append ``df``'s rows to the live version of the store at ``root``."""
-    df.write.mode("append").parquet(live_dir(df.sparkSession, root))
+def append(df, root: str, table: str | None = None,
+           partition_by: str | None = None) -> None:
+    """Append ``df``'s rows to the live version of the store at
+    ``root``, or to its ``table`` (partitioned by ``partition_by``)."""
+    live = live_dir(df.sparkSession, root)
+    w = df.write.mode("append")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(f"{live}/{table}" if table else live)
 
 
-def commit(spark, root: str, write, check=None):
-    """Make a new version of the store at ``root`` live and return what
-    ``write`` returned.
-
-    1. Versions newer than the live one were never flipped (an earlier
-       commit crashed): they are deleted. Older versions stay, so a
-       reader still scanning one keeps working until ``retire``.
-    2. ``write(live, new)`` writes the complete next version into the
-       directory ``new``, reading the live one from ``live`` if it needs
-       to. ``check()``, if given, runs beside it and raises to refuse
-       the commit; its error is the one raised even when the write
-       failed too.
-    3. ``MANIFEST`` flips to the new version. Nothing before this step
-       changes what readers see.
-
-    Without ``MANIFEST``, version dirs mean the pointer was lost, and
-    the commit refuses rather than delete them — flat files beside them
-    prove nothing, since an append after the loss writes there. The one
-    exception is a first commit that crashed before its flip: it marks
-    itself with ``_FIRST_COMMIT`` until the flip is done, and its
-    ``v000001`` is deleted and written again."""
-    base = root.rstrip("/")
+def _versions(spark, base: str):
+    """(fs, live version or None, version dir paths, first-commit marker
+    path) of the store at ``base``. Without ``MANIFEST``, version dirs
+    mean the pointer was lost: raise rather than let a caller delete
+    them or take the flat root for the live data — flat files beside
+    them prove nothing, since an append after the loss writes there.
+    The one exception is a first commit that crashed before its flip:
+    it marks itself with ``_FIRST_COMMIT`` until the flip is done, and
+    its lone ``v000001`` is deleted and written again."""
     fs, base_path = _hadoop_fs(spark, base)
     cur = _live_version(spark, base)
     _, first = _hadoop_fs(spark, f"{base}/{_FIRST}")
@@ -202,6 +203,28 @@ def commit(spark, root: str, write, check=None):
             f"them); write MANIFEST pointing at the newest complete "
             f"version (or rename {_TMP} onto it) to recover"
         )
+    return fs, cur, versions, first
+
+
+def commit(spark, root: str, write, check=None):
+    """Make a new version of the store at ``root`` live and return what
+    ``write`` returned.
+
+    1. Versions newer than the live one were never flipped (an earlier
+       commit crashed): they are deleted. Older versions stay, so a
+       reader still scanning one keeps working until ``retire``.
+    2. ``write(live, new)`` writes the complete next version into the
+       directory ``new``, reading the live one from ``live`` if it needs
+       to. ``check()``, if given, runs beside it and raises to refuse
+       the commit; its error is the one raised even when the write
+       failed too.
+    3. ``MANIFEST`` flips to the new version. Nothing before this step
+       changes what readers see.
+
+    Without ``MANIFEST``, version dirs mean the pointer was lost, and
+    the commit refuses rather than delete them (``_versions``)."""
+    base = root.rstrip("/")
+    fs, cur, versions, first = _versions(spark, base)
     for p in versions:
         if cur is None or p.getName() > cur:
             fs.delete(p, True)
@@ -237,3 +260,102 @@ def retire(spark, root: str) -> int:
             fs.delete(st.getPath(), True)
             deleted += st.isDirectory() and _is_version_dir(name)
     return deleted
+
+
+def restore(spark, root: str, version: str) -> None:
+    """Make ``version``, an earlier version still on disk, live again.
+    Newer versions become never-flipped ones, which the next ``commit``
+    deletes."""
+    base = root.rstrip("/")
+    fs, p = _hadoop_fs(spark, f"{base}/{version}")
+    if not (_is_version_dir(version) and fs.exists(p)):
+        raise ValueError(f"{base!r} has no version {version!r}")
+    _write_manifest(spark, base, version)
+
+
+def write_tables(base: str, tables: dict, meta: dict, meta_ddl: str,
+                 partition_by: dict | None = None) -> None:
+    """Write the table set ``tables`` (name -> DataFrame) and its meta
+    row into the directory ``base``. The tables are written
+    concurrently, so the later jobs' tasks fill the slots the first
+    job's tail leaves idle. The meta row has the columns of
+    ``meta_ddl``: a ``schemas`` column gets every table's schema, a
+    ``<name>_schema`` column the schema of table ``<name>``, and every
+    other column its value in ``meta``, as a float or an int where the
+    column is one."""
+    from pyspark.sql.types import DoubleType, IntegralType, StructType
+
+    spark = next(iter(tables.values())).sparkSession
+    schemas = {name: df.schema.json() for name, df in tables.items()}
+
+    def value(f):
+        if f.name == "schemas":
+            return schemas
+        if f.name.endswith("_schema"):
+            return schemas[f.name[:-7]]
+        if isinstance(f.dataType, DoubleType):
+            return float(meta[f.name])
+        if isinstance(f.dataType, IntegralType):
+            return int(meta[f.name])
+        return meta[f.name]
+
+    row = [value(f) for f in StructType.fromDDL(meta_ddl).fields]
+    frames = dict(tables)
+    frames["meta"] = spark.createDataFrame([row], meta_ddl).repartition(1)
+
+    def put(name):
+        w = frames[name].write
+        if (partition_by or {}).get(name):
+            w = w.partitionBy(partition_by[name])
+        w.parquet(f"{base}/{name}")
+
+    with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+        list(pool.map(put, frames))
+
+
+def save_tables(root: str, tables: dict, meta: dict, meta_ddl: str,
+                partition_by: dict | None = None) -> None:
+    """Make the table set ``tables`` the live version of the store at
+    ``root`` (``commit``), then ``retire`` every other copy, as an
+    overwrite would: a reader still scanning the old copy fails."""
+    spark = next(iter(tables.values())).sparkSession
+    commit(
+        spark, root,
+        lambda live, new: write_tables(new, tables, meta, meta_ddl, partition_by),
+    )
+    retire(spark, root)
+
+
+def read_tables(spark, root: str, meta_ddl: str, tables: dict):
+    """(meta, frames) of the live table set at ``root``: the meta row as
+    a dict, and a DataFrame per name in ``tables`` (name -> fixed DDL
+    schema, or None to read the schema ``write_tables`` recorded).
+    Reading costs the one meta collect. A set written by an older
+    layout (a null meta column, or a table with no recorded schema)
+    raises one error: rebuild the index."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    cur = _versions(spark, root.rstrip("/"))[1]
+    base = f"{root.rstrip('/')}/{cur}" if cur else root
+    meta = spark.read.schema(meta_ddl).parquet(f"{base}/meta").collect()[0].asDict()
+    schemas = dict(meta.get("schemas") or {})
+    schemas.update(
+        {c[:-7]: v for c, v in meta.items() if c.endswith("_schema") and v}
+    )
+    missing = [c for c, v in meta.items() if v is None] + [
+        t for t, fixed in tables.items() if not (fixed or schemas.get(t))
+    ]
+    if missing:
+        raise ValueError(
+            f"index at {root!r} has an older layout (no {', '.join(missing)}); "
+            "rebuild the index and save it again"
+        )
+    frames = {
+        t: spark.read.schema(
+            fixed or StructType.fromJson(json.loads(schemas[t]))
+        ).parquet(f"{base}/{t}")
+        for t, fixed in tables.items()
+    }
+    return meta, frames

@@ -867,6 +867,7 @@ def test_ann_persisted_index_roundtrip(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from fluent_bit_spark.extensions import versioned_store
     from fluent_bit_spark.extensions.similarity import (
         ivf_index, ivf_index_load, ivf_index_save, ivf_topk_indexed,
         pq_index, pq_index_load, pq_index_save, pq_topk_indexed,
@@ -889,8 +890,9 @@ def test_ann_persisted_index_roundtrip(spark, tmp_path):
     srv = ivf_topk_indexed(loaded, queries, k=5, nprobe=3).orderBy("query_id", "rank")
     assert key(srv.collect()) == key(mem.collect())
     # serve plan reads the persisted lists; one dir per inverted list
-    assert any("ivf/lists" in f for f in srv.inputFiles())
-    subdirs = {d for d in os.listdir(tmp_path / "ivf" / "lists") if d.startswith("cid=")}
+    ivf_live = versioned_store.live_dir(spark, str(tmp_path / "ivf"))
+    assert any(f"{ivf_live}/lists" in f for f in srv.inputFiles())
+    subdirs = {d for d in os.listdir(f"{ivf_live}/lists") if d.startswith("cid=")}
     assert len(subdirs) == 8
 
     pq = pq_index(emb, m=8, ksub=16, iters=2, sample=256)
@@ -977,13 +979,14 @@ def test_ann_persisted_index_roundtrip(spark, tmp_path):
     # a truncated codebook table must fail loudly, not serve garbage
     import pytest as _pytest
 
-    spark.read.parquet(str(tmp_path / "pq" / "codebooks")).filter(
+    pq_live = versioned_store.live_dir(spark, str(tmp_path / "pq"))
+    spark.read.parquet(f"{pq_live}/codebooks").filter(
         "NOT (sub = 0 AND code = 0)"
     ).write.mode("overwrite").parquet(str(tmp_path / "pq2" / "codebooks"))
-    spark.read.parquet(str(tmp_path / "pq" / "meta")).write.parquet(
+    spark.read.parquet(f"{pq_live}/meta").write.parquet(
         str(tmp_path / "pq2" / "meta")
     )
-    spark.read.parquet(str(tmp_path / "pq" / "codes")).write.parquet(
+    spark.read.parquet(f"{pq_live}/codes").write.parquet(
         str(tmp_path / "pq2" / "codes")
     )
     with _pytest.raises(ValueError, match="missing entries"):
@@ -2260,6 +2263,7 @@ def test_bm25_dense_pivot_fallback_matches_join(spark, monkeypatch):
     the corpus, a single-term query, and a query with no matching doc."""
     import random
 
+    from fluent_bit_spark.extensions import retrieval
     from fluent_bit_spark.extensions.retrieval import (
         bm25_index, bm25_topk, bm25_topk_indexed,
     )
@@ -2284,7 +2288,7 @@ def test_bm25_dense_pivot_fallback_matches_join(spark, monkeypatch):
     idx = bm25_index(docs, c=5)
 
     def serve(min_pairs):
-        monkeypatch.setenv("FBS_BM25_DENSE_PIVOT_MIN_PAIRS", str(min_pairs))
+        monkeypatch.setattr(retrieval, "_DENSE_PIVOT_MIN_PAIRS", min_pairs)
         return {
             (r.query_id, r.rank): (r.doc_id, r.score)
             for r in bm25_topk_indexed(idx, qs, k=5).collect()
@@ -2297,7 +2301,7 @@ def test_bm25_dense_pivot_fallback_matches_join(spark, monkeypatch):
     # bm25_topk's own dense path takes the same guard: pin the pivot
     # arm against the pure-JVM join arm AND against the serve results
     def topk(min_pairs):
-        monkeypatch.setenv("FBS_BM25_DENSE_PIVOT_MIN_PAIRS", str(min_pairs))
+        monkeypatch.setattr(retrieval, "_DENSE_PIVOT_MIN_PAIRS", min_pairs)
         return {
             (r.query_id, r.rank): (r.doc_id, r.score)
             for r in bm25_topk(docs, qs, k=5).collect()
@@ -2307,6 +2311,48 @@ def test_bm25_dense_pivot_fallback_matches_join(spark, monkeypatch):
     dense_pivot = topk(1)
     assert dense_pivot == dense_join
     assert pivoted == dense_join
+
+
+def test_bm25_topk_pruned_dense_shape_counts_failing_queries(spark, monkeypatch):
+    """bm25_topk's pruned path picks the dense shape from the number of
+    queries whose certificate failed, as bm25_topk_indexed does: with the
+    pair floor between n_docs x failing and n_docs x all queries it
+    re-scores the failing ones on the join shape, and with the floor at
+    n_docs x failing on the pivot shape. Both give the unpruned rows."""
+    import random
+
+    from fluent_bit_spark.extensions import retrieval
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(10)]  # flat: these queries fail
+    rows = [(i, " ".join(rng.choices(vocab, k=12))) for i in range(200)]
+    rows += [(1000 + i, f"r{i} " + vocab[i % 10]) for i in range(30)]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    flat = [(i, " ".join(rng.choices(vocab, k=3))) for i in range(10)]
+    rare = [(100 + i, f"r{i}") for i in range(30)]  # df 1 <= C: certified
+    qs = spark.createDataFrame(flat + rare, ["query_id", "text"])
+    n_docs = len(rows)
+    pivots = []
+    real_pivot = retrieval._dense_topk_pivot
+
+    def spy(tc, qf, *args):
+        pivots.append(qf.select("query_id").distinct().count())
+        return real_pivot(tc, qf, *args)
+
+    monkeypatch.setattr(retrieval, "_dense_topk_pivot", spy)
+
+    def topk(min_pairs, **kw):
+        monkeypatch.setattr(retrieval, "_DENSE_PIVOT_MIN_PAIRS", min_pairs)
+        return {
+            (r.query_id, r.rank): (r.doc_id, r.score)
+            for r in retrieval.bm25_topk(docs, qs, k=3, **kw).collect()
+        }
+
+    exact = topk(10**15)
+    assert topk(n_docs * len(flat) + 1, prune_top_c=5) == exact
+    assert pivots == []  # 10 failing queries: below the floor, join shape
+    assert topk(n_docs * len(flat), prune_top_c=5) == exact
+    assert pivots == [len(flat)]
 
 
 def test_bm25_index_persist_roundtrip(spark, tmp_path):
@@ -2389,15 +2435,15 @@ def test_bm25_index_append_equals_full_rebuild(spark, tmp_path):
                for r in bm25_topk_indexed(
                    bm25_index(old.unionByName(new), c=15), qs, k=5).collect()}
     assert served == rebuilt and len(served) == 40
-    # manifest points at the version dir; the flat pre-append tables
-    # are still intact (the crash-safety invariant)
-    assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000001"
-    assert os.path.isdir(os.path.join(path, "v000001", "postings"))
-    assert os.path.isdir(os.path.join(path, "tc"))
+    # manifest points at the appended version; the saved version's
+    # tables are still intact (the crash-safety invariant)
+    assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000002"
+    assert os.path.isdir(os.path.join(path, "v000002", "postings"))
+    assert os.path.isdir(os.path.join(path, "v000001", "tc"))
     # a second append stacks another version
     more = corpus(range(220, 240))
     assert bm25_index_append(spark, path, more) == 20
-    assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000002"
+    assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000003"
     # id collision refuses (a rebuild would merge the two docs)
     with pytest.raises(ValueError, match="reuse document ids"):
         bm25_index_append(spark, path, corpus(range(100, 110)))
@@ -4445,7 +4491,7 @@ def test_bm25_compact_index(spark, tmp_path):
     )
     path = str(tmp_path / "bm25")
     bm25_index_save(bm25_index(docs), path)
-    assert bm25_compact_index(spark, path) == 0  # flat layout: no-op
+    assert bm25_compact_index(spark, path) == 0  # only the saved version: no-op
     for start in (100, 200):
         more = spark.createDataFrame(
             [(start + i, f"gamma delta doc {start + i}") for i in range(4)],
@@ -4455,13 +4501,13 @@ def test_bm25_compact_index(spark, tmp_path):
     versions = sorted(
         d for d in os.listdir(path) if d.startswith("v") and d[1:].isdigit()
     )
-    assert len(versions) == 2  # two appends, two full copies
+    assert len(versions) == 3  # the save and two appends, three full copies
     q = spark.createDataFrame([(1, "alpha gamma")], "query_id long, text string")
     before = sorted(
         (r.doc_id, r.score)
         for r in bm25_topk_indexed(bm25_index_load(spark, path), q, k=5).collect()
     )
-    assert bm25_compact_index(spark, path) == 1
+    assert bm25_compact_index(spark, path) == 2
     left = [d for d in os.listdir(path) if d.startswith("v") and d[1:].isdigit()]
     assert left == [versions[-1]]
     after = sorted(
@@ -4508,8 +4554,8 @@ def _bm25_batch(spark, start):
 def test_bm25_index_append_crash_recovery(spark, tmp_path, monkeypatch):
     """A crash after bm25_index_append writes the new version but before
     MANIFEST flips leaves the live pointer and the served top-k as they
-    were; the next append succeeds. Checked at the first append (flat
-    store, served from the root) and at a later one."""
+    were; the next append succeeds. Checked at the first append and at
+    a later one."""
     import os
 
     from fluent_bit_spark.extensions import versioned_store
@@ -4525,7 +4571,7 @@ def test_bm25_index_append_crash_recovery(spark, tmp_path, monkeypatch):
         mf = os.path.join(path, "MANIFEST")
         return open(mf).read().strip() if os.path.exists(mf) else None
 
-    for start, live in ((100, None), (200, "v000001")):
+    for start, live in ((100, "v000001"), (200, "v000002")):
         before = served()
         with monkeypatch.context() as m:
             m.setattr(versioned_store, "_write_manifest", crash)
@@ -4535,7 +4581,7 @@ def test_bm25_index_append_crash_recovery(spark, tmp_path, monkeypatch):
         assert served() == before
         assert bm25_index_append(spark, path, _bm25_batch(spark, start)) == 4
         assert served() != before
-    assert manifest() == "v000002"
+    assert manifest() == "v000003"
 
 
 def test_bm25_index_append_clash_error_wins(spark, tmp_path, monkeypatch):
@@ -4543,19 +4589,19 @@ def test_bm25_index_append_clash_error_wins(spark, tmp_path, monkeypatch):
     clash is the error raised, and MANIFEST never flips."""
     import os
 
-    from fluent_bit_spark.extensions import retrieval
+    from fluent_bit_spark.extensions import retrieval, versioned_store
 
     path = str(tmp_path / "bm25")
     _bm25_store(spark, path)
     assert retrieval.bm25_index_append(spark, path, _bm25_batch(spark, 100)) == 4
 
-    def broken_write(index, base):
+    def broken_write(*args):
         raise RuntimeError("simulated table write failure")
 
-    monkeypatch.setattr(retrieval, "_write_index_tables", broken_write)
+    monkeypatch.setattr(versioned_store, "write_tables", broken_write)
     with pytest.raises(ValueError, match="reuse document ids"):
         retrieval.bm25_index_append(spark, path, _bm25_batch(spark, 102))
-    assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000001"
+    assert open(os.path.join(path, "MANIFEST")).read().strip() == "v000002"
 
 
 def test_bm25_index_append_lost_pointer_refuses(spark, tmp_path):
@@ -4573,6 +4619,215 @@ def test_bm25_index_append_lost_pointer_refuses(spark, tmp_path):
     with pytest.raises(RuntimeError, match="no MANIFEST"):
         bm25_index_append(spark, path, _bm25_batch(spark, 200))
     assert os.path.isdir(os.path.join(path, "v000001", "postings"))
+
+
+def _index_kind(spark, kind):
+    """One persisted index type as (corpus, build, save, load, append,
+    serve, reference): ``corpus(ids)`` is a deterministic frame of those
+    ids, ``serve(index)`` the sorted top-5 rows with scores rounded, and
+    ``reference(saved, corpus)`` the in-memory index an append onto the
+    loaded index ``saved`` must serve like."""
+    import numpy as np
+
+    from fluent_bit_spark.extensions import retrieval as R
+    from fluent_bit_spark.extensions import similarity as S
+
+    def rows(df):
+        return sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+            for r in df.collect()
+        )
+
+    if kind == "bm25":
+        words = [f"w{i}" for i in range(12)]
+
+        def corpus(ids):
+            return spark.createDataFrame(
+                [(i, " ".join(words[i * j % 12] for j in range(1, 6))) for i in ids],
+                "doc_id long, text string",
+            )
+
+        qs = spark.createDataFrame(
+            [(1, "w1 w2"), (2, "w3 w5 w7")], "query_id long, text string"
+        )
+        build = lambda df: R.bm25_index(df, c=5)
+        return (
+            corpus, build, R.bm25_index_save, R.bm25_index_load,
+            R.bm25_index_append,
+            lambda idx: rows(R.bm25_topk_indexed(idx, qs, k=5)),
+            lambda saved, df: build(df),
+        )
+
+    def corpus(ids):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in np.random.RandomState(i).rand(8)]) for i in ids],
+            "vec_id long, embedding array<double>",
+        )
+
+    qs = corpus([0, 7, 13]).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    if kind == "ivf":
+        build = lambda df: S.ivf_index(df, n_centroids=4, iters=2)
+        # nprobe covers every list, so the serve is the exact top-5
+        return (
+            corpus, build, S.ivf_index_save, S.ivf_index_load,
+            S.ivf_index_append,
+            lambda idx: rows(S.ivf_topk_indexed(idx, qs, k=5, nprobe=4)),
+            lambda saved, df: build(df),
+        )
+    return (
+        corpus,
+        lambda df: S.pq_index(df, m=4, ksub=8, iters=2, sample=64),
+        S.pq_index_save, S.pq_index_load, S.pq_index_append,
+        lambda idx: rows(S.pq_topk_indexed(idx, qs, k=5)),
+        lambda saved, df: {
+            **saved,
+            "codes": S.pq_encode(df, saved["codebooks"], "vec_id", "embedding"),
+        },
+    )
+
+
+def _write_flat_index(spark, kind, index, path):
+    """Write ``index`` the way the flat-layout saves wrote it: every
+    table and the meta row straight under ``path``, no MANIFEST."""
+    if kind == "bm25":
+        tables = {
+            "tc": index["tc"],
+            "topc": index["ranked"].filter(F.col("rn") <= index["c"] + 1),
+            "postings": index["postings"],
+            "dfreq": index["dfreq"],
+        }
+        for name, df in tables.items():
+            df.write.parquet(f"{path}/{name}")
+        meta = spark.createDataFrame(
+            [(
+                index["n_docs"], index["avgdl"], index["sum_dl"],
+                index["n_nonempty"], index["k1"], index["b"], index["c"],
+                index["id_col"],
+                {n: df.schema.json() for n, df in tables.items()},
+            )],
+            "n_docs long, avgdl double, sum_dl long, n_nonempty long, "
+            "k1 double, b double, c int, id_col string, "
+            "schemas map<string,string>",
+        )
+    elif kind == "ivf":
+        index["lists"].repartition("cid").write.partitionBy("cid").parquet(
+            f"{path}/lists"
+        )
+        spark.createDataFrame(
+            list(enumerate(index["centroids"])), "cid int, cvec array<double>"
+        ).repartition(1).write.parquet(f"{path}/centroids")
+        meta = spark.createDataFrame(
+            [(index["n_centroids"], index["id_col"], index["vec_col"],
+              index["lists"].schema.json())],
+            "n_centroids int, id_col string, vec_col string, lists_schema string",
+        )
+    else:
+        index["codes"].write.parquet(f"{path}/codes")
+        cb = index["codebooks"]
+        spark.createDataFrame(
+            [(s, c, cb[s][c]) for s in range(len(cb)) for c in range(len(cb[s]))],
+            "sub int, code int, cvec array<double>",
+        ).repartition(1).write.parquet(f"{path}/codebooks")
+        meta = spark.createDataFrame(
+            [(index["m"], index["ksub"], index["id_col"], index["vec_col"],
+              index["codes"].schema.json())],
+            "m int, ksub int, id_col string, vec_col string, codes_schema string",
+        )
+    meta.repartition(1).write.parquet(f"{path}/meta")
+
+
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "pq"])
+def test_index_save_replaces_appended_index(spark, tmp_path, kind):
+    """Save an index, append to it, save a different index to the same
+    path: the load returns the second index, appended rows and all
+    earlier copies gone."""
+    import os
+
+    corpus, build, save, load, append, serve, _ = _index_kind(spark, kind)
+    path = str(tmp_path / kind)
+    save(build(corpus(range(0, 30))), path)
+    assert append(spark, path, corpus(range(30, 60))) == 30
+    second = build(corpus(range(60, 90)))
+    save(second, path)
+    loaded = load(spark, path)
+    assert serve(loaded) == serve(second)
+    table = {"bm25": "postings", "ivf": "lists", "pq": "codes"}[kind]
+    id_col = loaded["id_col"]
+    ids = {r[0] for r in loaded[table].select(id_col).distinct().collect()}
+    assert ids == set(range(60, 90))
+    assert sorted(d for d in os.listdir(path) if not d.startswith(".")) == [
+        "MANIFEST", open(os.path.join(path, "MANIFEST")).read().strip()
+    ]
+
+
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "pq"])
+def test_index_save_crash_keeps_previous(spark, tmp_path, monkeypatch, kind):
+    """A save that dies after its first table is written leaves the
+    previous index live: it loads and serves the same rows."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    corpus, build, save, load, _, serve, _ = _index_kind(spark, kind)
+    path = str(tmp_path / kind)
+    save(build(corpus(range(0, 40))), path)
+    before = serve(load(spark, path))
+    second = build(corpus(range(40, 80)))
+
+    real, first_written, calls = DataFrameWriter.parquet, threading.Event(), []
+    lock = threading.Lock()
+
+    def parquet(self, p, *args, **kwargs):
+        with lock:
+            calls.append(p)
+            n = len(calls)
+        if n == 1:
+            real(self, p, *args, **kwargs)
+            first_written.set()
+            return
+        first_written.wait(120)
+        raise IOError("simulated crash after the first table write")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(IOError, match="simulated crash"):
+            save(second, path)
+    assert first_written.is_set()
+    assert serve(load(spark, path)) == before
+
+
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "pq"])
+def test_flat_index_layout_loads_serves_appends(spark, tmp_path, kind):
+    """An index written by the flat-layout save (tables at the root, no
+    MANIFEST) loads, serves like the index it was written from, and
+    takes an append that serves like the in-memory reference."""
+    corpus, build, _, load, append, serve, reference = _index_kind(spark, kind)
+    path = str(tmp_path / kind)
+    index = build(corpus(range(0, 40)))
+    _write_flat_index(spark, kind, index, path)
+    saved = load(spark, path)
+    assert serve(saved) == serve(index)
+    assert append(spark, path, corpus(range(40, 60))) == 20
+    assert serve(load(spark, path)) == serve(
+        reference(saved, corpus(range(0, 60)))
+    )
+
+
+@pytest.mark.parametrize("kind", ["ivf", "pq"])
+def test_vector_index_append_refuses_known_ids(spark, tmp_path, kind):
+    """ivf_index_append and pq_index_append refuse ids already in the
+    index before they write anything."""
+    corpus, build, save, load, append, serve, _ = _index_kind(spark, kind)
+    path = str(tmp_path / kind)
+    save(build(corpus(range(0, 30))), path)
+    before = serve(load(spark, path))
+    with pytest.raises(ValueError, match="reuse ids already in the index"):
+        append(spark, path, corpus(range(25, 35)))
+    table = "lists" if kind == "ivf" else "codes"
+    assert load(spark, path)[table].count() == 30
+    assert serve(load(spark, path)) == before
 
 
 def test_text_review_guards(spark):

@@ -13,10 +13,10 @@ per-batch state growth.
 2. The band-hash HISTORY table (dedup_against_history via
    neardup_foreach_batch's semantics): by design membership never
    expires, so the table grows with distinct kept docs — the measurement
-   records bytes/rows per batch and the effect of compact_history after
-   replayed (duplicate) appends. The TTL knob for history is horizon
-   pruning at compaction time (drop bands whose docs fell out of the
-   retention window) — NOT implemented here because near-dup history is
+   records rows, parquet files and bytes per batch and the effect of
+   compact_history after replayed (duplicate) appends. The TTL knob for
+   history is horizon pruning at compaction time (drop bands whose docs
+   fell out of the retention window) — NOT implemented here because near-dup history is
    intentionally unbounded; compaction keeps it at one row per
    (band, doc) forever.
 
@@ -44,6 +44,12 @@ from pyspark.sql import functions as F
 
 BATCH_GAP_S = 60           # event-time advance per batch
 WATERMARK = "90 seconds"   # ~1.5 batches of horizon
+
+
+def _parquet_files(root: str) -> tuple[int, int]:
+    """(file count, total bytes) of the parquet files under ``root``."""
+    sizes = [p.stat().st_size for p in Path(root).rglob("*.parquet")]
+    return len(sizes), sum(sizes)
 
 
 def synth_batch(spark, batch_idx: int, n: int):
@@ -127,15 +133,14 @@ def run(n_batches: int, docs_per_batch: int) -> dict:
             )
             dedup_against_history(kept_this, hist, update_state=True)
             hist_rows = spark.read.parquet(history_data_dir(spark, hist)).count()
-            hist_bytes = sum(
-                p.stat().st_size for p in Path(hist).rglob("*.parquet")
-            )
+            hist_files, hist_bytes = _parquet_files(hist)
             per_batch.append({
                 "batch": b,
                 "state_rows": st.get("numRowsTotal"),
                 "state_mem_bytes": st.get("memoryUsedBytes"),
                 "rows_evicted": st.get("numRowsRemoved"),
                 "hist_rows": hist_rows,
+                "hist_files": hist_files,
                 "hist_bytes": hist_bytes,
             })
             print(per_batch[-1])
@@ -477,9 +482,7 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
         process(media, b)
         process_s = time.perf_counter() - t0
         hist_rows = spark.read.parquet(history_data_dir(spark, hist)).count()
-        hist_bytes = sum(
-            p.stat().st_size for p in Path(hist).rglob("*.parquet")
-        )
+        hist_files, hist_bytes = _parquet_files(hist)
         per_batch.append({
             "batch": b,
             "input_clips": clips_per_batch + (
@@ -488,6 +491,7 @@ def run_video_history(n_batches: int = 6, clips_per_batch: int = 200) -> dict:
             "survivors": survivors_per_batch[-1],
             "process_s": round(process_s, 3),
             "hist_rows": hist_rows,
+            "hist_files": hist_files,
             "hist_bytes": hist_bytes,
         })
         print(per_batch[-1])
